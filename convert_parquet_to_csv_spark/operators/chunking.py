@@ -530,8 +530,7 @@ def unigram_lm_encode(
     # localCheckpoint AND the dp projection) and the enc join
     # re-reads it — without the cache the corpus tokenize+explode
     # runs three times (review r9; the synth_token_lines 2.2×
-    # retokenize lesson). Caller releases via clearCache() — the
-    # lsh_candidate_pairs contract.
+    # retokenize lesson). The caller releases it via clearCache().
     occ = occ.persist()
     wfreq = occ.groupBy("_w").agg(F.count(F.lit(1)).alias("_wc"))
     # vocab-scale: candidate substrings with corpus mass

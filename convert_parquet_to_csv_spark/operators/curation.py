@@ -46,6 +46,7 @@ from convert_parquet_to_csv_spark.functions.text import (
     token_count_bpe,
     tokens,
 )
+from convert_parquet_to_csv_spark.operators.dedup import _drop_hot_buckets
 
 
 def benchmark_ngrams(
@@ -340,8 +341,7 @@ def remove_duplicated_spans(
     (try/finally; the coverage table is eagerly localCheckpoint'ed,
     so the default path runs its heavy stages at call time and the
     returned plan is the cheap reassembly tail). Callers need no
-    ``spark.catalog.clearCache()`` — unlike ``lsh_candidate_pairs``,
-    whose returned plan still references its cache.
+    ``spark.catalog.clearCache()``.
 
     Measured design change (r5, ``tools/span_reassembly_ab.py``,
     interleaved cache-cleared min-of-2, full clean_text output): this
@@ -1381,8 +1381,8 @@ def train_linear_classifier(
     which scores NULL-id rows as one pooled group.
 
     Plan shape per epoch: counts (the ONE corpus-volume table, built
-    once and persisted — caller releases via clearCache, the
-    lsh_candidate_pairs contract) joins a ≤ ``num_buckets``-row
+    once and persisted — the caller releases it via clearCache())
+    joins a ≤ ``num_buckets``-row
     BROADCAST weight table, one id-keyed groupBy for logits, one
     id-keyed join + bucket groupBy for the gradient — two doc-keyed
     exchanges and one bucket-sized aggregate per epoch; corpus rows
@@ -1574,9 +1574,9 @@ def dsir_importance_weights(
     if persist:
         # double-referenced: q_counts aggregates it AND the scoring
         # join re-reads it — without the cache the raw-corpus explode
-        # runs twice. Caller releases via clearCache() (the
-        # lsh_candidate_pairs contract). At cluster scale where the
-        # count table outgrows memory, checkpoint/write it instead.
+        # runs twice. The caller releases it via clearCache(). At
+        # cluster scale where the count table outgrows memory,
+        # checkpoint/write it instead.
         doc_counts = doc_counts.persist()
     q_counts = doc_counts.groupBy("_b").agg(F.sum("_c").alias("_qc"))
     p_counts = (
@@ -2062,15 +2062,7 @@ def source_ngram_overlap_matrix(
     sizes = grams.groupBy(source_col).agg(
         F.count(F.lit(1)).alias("_sz")
     )
-    pair_source = grams
-    if max_gram_sources is not None:
-        hot = (
-            grams.groupBy("gram")
-            .count()
-            .filter(F.col("count") > max_gram_sources)
-            .select("gram")
-        )
-        pair_source = grams.join(hot, "gram", "left_anti")
+    pair_source = _drop_hot_buckets(grams, ["gram"], max_gram_sources)
     a = pair_source.select(
         F.col(source_col).alias("source_a"), "gram"
     )

@@ -26,8 +26,8 @@ Everything is built-in DataFrame expressions — xxhash64 for hash
 families, bitwise ops for SimHash — zero Python in the row path.
 
 Skew note (at scale): a degenerate shingle/band shared by millions of
-docs creates a hot join key. ``max_bucket`` drops pathological buckets
-(standard practice; logged via the returned stats when callers ask).
+docs creates a hot bucket. ``max_bucket`` drops buckets over the cap
+before any per-bucket state is built (:func:`_drop_hot_buckets`).
 """
 
 from __future__ import annotations
@@ -139,6 +139,64 @@ def _hashed_shingle_table(
     )
 
 
+# --------------------------------------------------------------------------
+# hash-bucket pairing with a hot-bucket cap
+# --------------------------------------------------------------------------
+
+def _drop_hot_buckets(
+    rows: DataFrame, keys: list[str], max_bucket: int | None
+) -> DataFrame:
+    """``rows`` without the buckets (groups of equal ``keys``) holding
+    more than ``max_bucket`` rows; ``None`` keeps every bucket.
+
+    The bucket size is a window count over ``keys``. It reuses the
+    exchange that the caller's grouping or join on the same keys needs
+    anyway, so the cap adds no shuffle. Its sort spills under memory
+    pressure, so a hot bucket's rows are held only in spillable sort
+    state and no per-bucket list is ever built for them."""
+    if max_bucket is None:
+        return rows
+    size = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return (
+        rows.withColumn("_bucket_n", size)
+        .filter(F.col("_bucket_n") <= max_bucket)
+        .drop("_bucket_n")
+    )
+
+
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    member: Column,
+    max_bucket: int | None,
+    having: Column | None = None,
+) -> DataFrame:
+    """(_a, _b): every ordered pair of ``member`` values sharing a
+    bucket, self-pairs included. Callers keep the pairs they want and
+    ``distinct()`` them, since two rows can share several buckets.
+
+    Buckets over ``max_bucket`` rows are dropped by
+    :func:`_drop_hot_buckets` before ``collect_list`` runs, so no
+    member list exceeds ``max_bucket`` entries. ``None`` means
+    uncapped: the largest bucket's list is built whole and its pairs
+    are quadratic in its size. ``having`` is an optional per-bucket
+    aggregate condition; buckets failing it produce no pairs. Nothing
+    is persisted."""
+    rows = _drop_hot_buckets(rows, keys, max_bucket)
+    aggs = [F.collect_list(member).alias("_m")]
+    keep = F.size("_m") >= 2
+    if having is not None:
+        aggs.append(having.alias("_having"))
+        keep = keep & F.col("_having")
+    return (
+        rows.groupBy(*keys)
+        .agg(*aggs)
+        .filter(keep)
+        .select(F.explode("_m").alias("_a"), "_m")
+        .select("_a", F.explode("_m").alias("_b"))
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -170,15 +228,7 @@ def ngram_jaccard_pairs(
     counts = sh.groupBy(id_col).agg(F.count("*").alias("_n"))
 
     if candidates is None:
-        pair_source = sh
-        if max_bucket is not None:
-            hot = (
-                sh.groupBy("_shingle")
-                .count()
-                .filter(F.col("count") > max_bucket)
-                .select("_shingle")
-            )
-            pair_source = sh.join(hot, "_shingle", "left_anti")
+        pair_source = _drop_hot_buckets(sh, ["_shingle"], max_bucket)
         a = pair_source.select(
             F.col(id_col).alias("id_a"), F.col("_shingle").alias("_s")
         )
@@ -257,15 +307,7 @@ def containment_pairs(
         sh = sh.persist()
     counts = sh.groupBy(id_col).agg(F.count("*").alias("_n"))
 
-    pair_source = sh
-    if max_bucket is not None:
-        hot = (
-            sh.groupBy("_shingle")
-            .count()
-            .filter(F.col("count") > max_bucket)
-            .select("_shingle")
-        )
-        pair_source = sh.join(hot, "_shingle", "left_anti")
+    pair_source = _drop_hot_buckets(sh, ["_shingle"], max_bucket)
     a = pair_source.select(
         F.col(id_col).alias("id_a"), F.col("_shingle").alias("_s")
     )
@@ -459,49 +501,16 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*aggs)
 
 
-def lsh_candidate_pairs(
+def _band_rows(
     signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_perm: int = 32,
-    bands: int = 8,
-    max_bucket: int | None = 1000,
+    id_col: str,
+    num_perm: int,
+    bands: int,
+    *carry: str,
 ) -> DataFrame:
-    """Band the signature, bucket per band, emit distinct pairs.
-
-    rows-per-band r = num_perm/bands; a pair lands in one bucket with
-    prob 1-(1-j^r)^b. The bucket key is (band index, band hash) so all
-    bands go through ONE exchange. ``max_bucket`` guards hot buckets.
-
-    Plan shape (r13 rewrite, VERDICT r12 item 2 — measured on the
-    500k bench corpus, tools/r13_ab/lsh_bucket_explode_ab.py): with
-    ``max_bucket`` set, ONE groupBy(_band, _bh) collects each
-    bucket's member ids and pairs are exploded IN-PARTITION from the
-    member list (id_a < id_b), replacing the r4 shape's [persist ×2 +
-    hot-count aggregate + anti-join + bucket self-join]. The hot
-    guard becomes the same size filter (2 ≤ size ≤ max_bucket —
-    identical pair set, 25,622/25,622 pairs equal in the A/B and
-    edge-pinned in tests). Candidate stage 2.96 → 2.61 s min and
-    faster in every interleaved round; full minhash_dedup 9.03 →
-    8.44 s min; and the two docs×bands cached tables disappear
-    (MEMORY: nothing pinned — this path has NO cache contract
-    anymore). The collect_list buffer per bucket is bounded by
-    ``max_bucket`` ids (8 KB at the default 1000), which is exactly
-    the guard's own bound; the pair explode streams ≤ max_bucket²
-    rows per bucket through codegen without materializing them.
-    Scale-checked at 2M docs where buckets are ~all singletons (the
-    adversarial shape for per-group array state): the isolated
-    candidate stage still wins every interleaved round (bucket mins
-    3.10 vs legacy 3.91 s; 102,494 pairs identical), and a
-    count-filter-then-join alternative measures consistently second
-    (tools/r13_ab/lsh_count_filter_ab.py keeps all three shapes).
-
-    With ``max_bucket=None`` (no hot guard) the r4 self-join path is
-    kept: an UNBOUNDED bucket's collect_list is the single-key skew
-    the guard exists to prevent, while a self-join handles it with
-    spillable join machinery. That path persists ``banded`` (two
-    join sides) and keeps the old cache contract: released by the
-    caller's ``spark.catalog.clearCache()`` or session end.
-    """
+    """(id, *carry, _band, _bh): one row per doc and band, where _bh
+    hashes the band's r = num_perm/bands minhash values. The bucket key
+    is (_band, _bh), so all bands go through one exchange."""
     if num_perm % bands:
         raise ValueError("num_perm must be divisible by bands")
     r = num_perm // bands
@@ -512,35 +521,86 @@ def lsh_candidate_pairs(
         )
         for j in range(bands)
     ])
-    banded = (
-        signatures.select(id_col, F.explode(band_cols).alias("_b"))
-        .select(id_col, F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh"))
+    return signatures.select(
+        id_col, *carry, F.explode(band_cols).alias("_b")
+    ).select(
+        id_col, *carry, F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh")
     )
-    if max_bucket is not None:
-        buckets = (
-            banded.groupBy("_band", "_bh")
-            .agg(F.collect_list(F.col(id_col)).alias("_ids"))
-            .filter(
-                (F.size("_ids") >= 2) & (F.size("_ids") <= max_bucket)
-            )
-            .select("_ids")
-        )
-        return (
-            buckets.select(F.explode("_ids").alias("id_a"), "_ids")
-            .select("id_a", F.explode("_ids").alias("id_b"))
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-    # unguarded path: self-join (spillable under single-bucket skew)
-    banded = banded.persist()
-    a = banded.select(F.col(id_col).alias("id_a"), "_band", "_bh")
-    b = banded.select(F.col(id_col).alias("id_b"), "_band", "_bh")
+
+
+def lsh_candidate_pairs(
+    signatures: DataFrame,
+    id_col: str = "doc_id",
+    num_perm: int = 32,
+    bands: int = 8,
+    max_bucket: int | None = 1000,
+) -> DataFrame:
+    """Band the signature, bucket per band, emit distinct pairs
+    (id_a < id_b).
+
+    rows-per-band r = num_perm/bands; a pair lands in one bucket with
+    prob 1-(1-j^r)^b. Buckets holding more than ``max_bucket`` docs
+    are dropped before any bucket's member list is built (a window
+    count on the bucket key, whose sort spills), so no list exceeds
+    ``max_bucket`` ids. The surviving buckets collect their ids and
+    pairs are exploded from each list. ``None`` means uncapped: the output is then quadratic
+    in the largest bucket. Nothing is persisted, so the returned plan
+    needs no ``clearCache()``.
+    """
+    banded = _band_rows(signatures, id_col, num_perm, bands)
     return (
-        a.join(b, ["_band", "_bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        _bucket_pairs(banded, ["_band", "_bh"], F.col(id_col), max_bucket)
+        .filter(F.col("_a") < F.col("_b"))
+        .select(F.col("_a").alias("id_a"), F.col("_b").alias("id_b"))
         .distinct()
+    )
+
+
+def _verified_jaccard_pairs(
+    df: DataFrame,
+    cand: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    threshold: float,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for the ``cand`` pairs whose exact Jaccard
+    over hashed k-shingle sets is at least ``threshold``.
+
+    Sets are built only for docs in a candidate pair: the doc table is
+    semi-joined to the broadcast candidate ids BEFORE shingling, so the
+    re-scan tokenizes only candidate docs and its collect_set shuffle
+    is candidate-bounded. ``cand`` is read twice (id pruning and the
+    verify join), so callers persist it. The set table feeds both
+    verify sides and is persisted too, so the candidate-doc
+    re-tokenize runs once (AQE does not reliably reuse the identical
+    subtree); both caches are released with ``clearCache()``."""
+    ids = (
+        cand.select(F.col("id_a").alias(id_col))
+        .union(cand.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    cand_docs = df.join(F.broadcast(ids), id_col, "left_semi")
+    need = (
+        _hashed_shingle_table(cand_docs, id_col, text_col, k)
+        .groupBy(id_col)
+        .agg(F.collect_set(F.col("_sh")).alias("_set"))
+        .persist()
+    )
+    sa = need.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_sa"))
+    sb = need.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_sb"))
+    inter = F.size(F.array_intersect("_sa", "_sb"))
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("_i", inter)
+        .withColumn(
+            "jaccard",
+            F.col("_i").cast("double")
+            / (F.size("_sa") + F.size("_sb") - F.col("_i")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -567,18 +627,16 @@ def minhash_dedup(
     verification needs sets only for docs that appear in a
     candidate pair (~5% there, and the fraction shrinks as the
     corpus grows past the duplicate clusters). Sets are instead
-    built in a SECOND, candidate-pruned pass: the doc table is
-    semi-joined to the broadcast candidate ids BEFORE shingling, so
-    the re-scan tokenizes only candidate docs and its collect_set
-    shuffle is candidate-bounded. Verification is then exact
+    built in a SECOND, candidate-pruned pass
+    (:func:`_verified_jaccard_pairs`). Verification is then exact
     Jaccard via ``array_intersect`` — never a re-shuffle of the
     full exploded shingle table. Jaccard over 64-bit shingle hashes
     equals Jaccard over shingle strings up to xxhash64 collisions
     (~|doc|²/2⁶⁵ per doc — negligible).
 
-    The persisted signature table is session-cached (caller
-    releases via ``spark.catalog.clearCache()`` if needed); its
-    width is num_perm longs per row.
+    The signature table (num_perm longs per row), the candidate
+    pairs and the candidate shingle sets are persisted; the caller
+    releases them via ``spark.catalog.clearCache()``.
 
     Measured scale curve (r6, ``tools/scale_curve.py`` on the
     sf0.1-derived token-mangled corpora, cache-cleared min-of-2,
@@ -596,46 +654,10 @@ def minhash_dedup(
     sigs = minhash_signatures(
         df, id_col, text_col, k, num_perm
     ).persist()
-    # cand is referenced twice below (id pruning + the verify join) and
-    # is small by construction (bucket-bounded) — persist beats a 2×
-    # recompute of the bucket self-join.
     cand = lsh_candidate_pairs(
         sigs, id_col, num_perm, bands, max_bucket
     ).persist()
-    ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .union(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    # Candidate-pruned set pass: semi-join the DOC table first so the
-    # explode + collect_set run over candidate docs only.
-    cand_docs = df.join(F.broadcast(ids), id_col, "left_semi")
-    # need feeds BOTH verify branches (sa, sb); persist so the
-    # candidate-doc re-tokenize runs once, not per branch — the same
-    # two-branch recompute class measured in triangle_count's
-    # orientation (AQE does not reliably reuse the identical
-    # subtree). Candidate-bounded rows; released with clearCache.
-    need = (
-        _hashed_shingle_table(cand_docs, id_col, text_col, k)
-        .groupBy(id_col)
-        .agg(F.collect_set(F.col("_sh")).alias("_set"))
-        .persist()
-    )
-    sa = need.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_sa"))
-    sb = need.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    verified = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("_i", inter)
-        .withColumn(
-            "jaccard",
-            F.col("_i").cast("double")
-            / (F.size("_sa") + F.size("_sb") - F.col("_i")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    verified = _verified_jaccard_pairs(df, cand, id_col, text_col, k, threshold)
     return drop_near_duplicates(df, verified, id_col)
 
 
@@ -686,31 +708,17 @@ def simhash_pairs(
     chunks: int = 4,
     max_bucket: int | None = 1000,
 ) -> DataFrame:
-    """Pairs with hamming(simhash) ≤ max_hamming via chunk-equality LSH.
+    """Pairs (id_a < id_b, hamming) with hamming(simhash) ≤
+    max_hamming via chunk-equality LSH.
 
     Pigeonhole: ≤3 differing bits across 4 chunks ⇒ at least one
-    16-bit chunk identical — candidates are chunk-join matches,
-    verified exactly with ``bit_count(xor)``.
-
-    Plan shape (r13 — the lsh_candidate_pairs bucket-explode rewrite
-    applied to its structural twin; same guard semantics, identical
-    pair set pinned in tests/test_r13_optimizations.py): with
-    ``max_bucket`` set, ONE groupBy(_chunk, _cv) collects each
-    bucket's (id, simhash) members, buckets filtered to ``2 ≤ size ≤
-    max_bucket``, pairs exploded in-partition — replacing the r4/r5
-    shape's [persist ×2 + hot-count aggregate + anti-join +
-    self-join]. The member buffer is bounded by the guard (16 bytes ×
-    max_bucket). Measured (tools/r13_ab/simhash_bucket_ab.py, 500k
-    bench corpus, interleaved min-of-3): see the r13 ledger — the
-    candidate subtree drops both docs×chunks persists. NO cache
-    contract on this path.
-
-    With ``max_bucket=None`` the self-join path and its measured r5
-    persist placement remain (tools/simhash_persist_ab.py numbers:
-    post-anti-join persist 3.06 s vs 3.50 s without) — an unbounded
-    bucket's collect_list is exactly the skew the guard prevents, so
-    the unguarded path keeps spillable join machinery and the
-    caller-released ``clearCache()`` contract.
+    16-bit chunk identical — candidates share a (chunk index, chunk
+    value) bucket and are verified exactly with ``bit_count(xor)``.
+    Buckets holding more than ``max_bucket`` docs are dropped before
+    any bucket's (id, simhash) member list is built; the surviving buckets collect their members and pairs are
+    exploded from each list. ``None`` means uncapped: the output is
+    then quadratic in the largest bucket. Nothing is persisted, so the
+    returned plan needs no ``clearCache()``.
     """
     width = 64 // chunks
     mask = (1 << width) - 1
@@ -729,45 +737,16 @@ def simhash_pairs(
         id_col, "simhash",
         F.col("_c.chunk").alias("_chunk"), F.col("_c.cv").alias("_cv"),
     )
-    if max_bucket is not None:
-        buckets = (
-            chunked.groupBy("_chunk", "_cv")
-            .agg(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("_i"), F.col("simhash").alias("_s"))
-                ).alias("_m")
-            )
-            .filter((F.size("_m") >= 2) & (F.size("_m") <= max_bucket))
-            .select("_m")
-        )
-        return (
-            buckets.select(F.explode("_m").alias("_a"), "_m")
-            .select("_a", F.explode("_m").alias("_b"))
-            .filter(F.col("_a._i") < F.col("_b._i"))
-            .select(
-                F.col("_a._i").alias("id_a"),
-                F.col("_b._i").alias("id_b"),
-                F.bit_count(
-                    F.col("_a._s").bitwiseXOR(F.col("_b._s"))
-                ).alias("hamming"),
-            )
-            .distinct()
-            .filter(F.col("hamming") <= max_hamming)
-        )
-    # unguarded path: self-join, persisted at its measured placement
-    chunked = chunked.persist()
-    a = chunked.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("_sa"), "_chunk", "_cv"
-    )
-    b = chunked.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("_sb"), "_chunk", "_cv"
-    )
+    member = F.struct(F.col(id_col).alias("_i"), F.col("simhash").alias("_s"))
     return (
-        a.join(b, ["_chunk", "_cv"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _bucket_pairs(chunked, ["_chunk", "_cv"], member, max_bucket)
+        .filter(F.col("_a._i") < F.col("_b._i"))
         .select(
-            "id_a", "id_b",
-            F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).alias("hamming"),
+            F.col("_a._i").alias("id_a"),
+            F.col("_b._i").alias("id_b"),
+            F.bit_count(
+                F.col("_a._s").bitwiseXOR(F.col("_b._s"))
+            ).alias("hamming"),
         )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
@@ -899,12 +878,11 @@ def duplicated_span_extents(
         F.xxhash64(F.expr(f"slice(_tk, _p + 1, {k})")).alias("_h"),
     )
     # grams feeds the hot-count AND the coverage join — persist so the
-    # tokenize+explode runs once. Caller releases via clearCache() —
-    # the lsh_candidate_pairs/semdedup contract (ADVICE r7: persisted
-    # blocks stay PINNED after the action completes, they are not
-    # auto-released, so repeated calls without a clearCache
-    # accumulate executor storage; bench.py and the gate runner both
-    # clearCache between runs).
+    # tokenize+explode runs once. The caller releases it via
+    # clearCache(): persisted blocks stay PINNED after the action
+    # completes, so repeated calls without a clearCache accumulate
+    # executor storage (bench.py and the gate runner both clearCache
+    # between runs).
     grams = grams.persist()
     hot = (
         grams.groupBy("_h")
@@ -1616,17 +1594,20 @@ def minhash_dedup_incremental(
     Scale shape vs the batch pipeline: signatures are computed for
     all rows (at steady state the history SIGNATURE table is a
     stored artifact keyed by band hash — recompute here only because
-    the gate is self-contained), but the LSH bucket join is
+    the gate is self-contained), but the LSH bucket probe is
     all × NEW instead of all × all: candidate fan-out is bounded by
     the BATCH's bucket occupancy, so a small daily batch probes a
-    100 TB history for the cost of its own buckets. (r13: with the
-    ``max_bucket`` guard set, the probe is a bucket-collect + pair
-    explode rather than a join — buckets with no new member are
-    filtered by a codegen flag before any pair work; see the inline
-    note for the measured A/B.) Verification is
-    the same candidate-pruned exact-Jaccard second pass as
-    minhash_dedup (sets built only for docs appearing in a
-    candidate pair; never a full-corpus set shuffle).
+    100 TB history for the cost of its own buckets. Buckets holding
+    more than ``max_bucket`` docs (history and batch together) are
+    dropped before any bucket's (id, new) member list is built; buckets without a new member are skipped before
+    any pair work, and the rest explode pairs (a, b) with b new and
+    (a old or a < b). ``None`` means uncapped: candidates are then
+    quadratic in the largest bucket. Verification is the same
+    candidate-pruned exact-Jaccard second pass as minhash_dedup (sets
+    built only for docs appearing in a candidate pair; never a
+    full-corpus set shuffle). The signature table, candidate pairs
+    and candidate sets are persisted for that pass; the caller
+    releases them via ``spark.catalog.clearCache()``.
 
     Replayability contract (the dedup_minhash precedent): survivors
     are defined by EXACT verified Jaccard, so the oracle replays the
@@ -1640,134 +1621,27 @@ def minhash_dedup_incremental(
     minhash_dedup's sublinear shape with the batch-bounded
     candidate volume on top.
     """
-    if num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
     flagged = df.withColumn("_new", is_new)
     sigs = minhash_signatures(
         flagged, id_col, text_col, k, num_perm
     ).join(
         flagged.select(id_col, "_new"), id_col
     ).persist()
-    r = num_perm // bands
-    band_cols = F.array(*[
-        F.struct(
-            F.lit(j).alias("band"),
-            F.xxhash64(
-                *[F.col(f"h{j * r + i}") for i in range(r)]
-            ).alias("bh"),
+    banded = _band_rows(sigs, id_col, num_perm, bands, "_new")
+    member = F.struct(F.col(id_col).alias("_i"), F.col("_new").alias("_n"))
+    cand = (
+        _bucket_pairs(
+            banded, ["_band", "_bh"], member, max_bucket,
+            having=F.bool_or("_new"),
         )
-        for j in range(bands)
-    ])
-    banded = (
-        sigs.select(id_col, "_new", F.explode(band_cols).alias("_b"))
-        .select(
-            id_col,
-            "_new",
-            F.col("_b.band").alias("_band"),
-            F.col("_b.bh").alias("_bh"),
-        )
-    )
-    if max_bucket is not None:
-        # r13 (the lsh_candidate_pairs bucket-explode rewrite applied
-        # to the all×NEW admission shape): ONE groupBy collects each
-        # bucket's (id, new) members plus a codegen has-new flag;
-        # buckets without a new member never explode (they produced
-        # no candidates in the join form either — the b side was
-        # new-only), the size guard is the same [2, max_bucket]
-        # window, and the admission rule ((~new_a) | id_a < id_b,
-        # id_a != id_b) moves onto the exploded structs verbatim.
-        # Replaces [persist ×2 + hot-count + anti-join + all×new
-        # join]. Measured (tools/r13_ab/minhash_incremental_bucket_ab
-        # .py, 500k curve corpus, 1-in-7 batch, interleaved
-        # min-of-3): 9.82 → 8.65 s end-to-end, faster in every
-        # interleaved pair; 71,429 admission rows collect-identical.
-        # Reference-pinned in tests/test_r13_optimizations.py.
-        buckets = (
-            banded.groupBy("_band", "_bh")
-            .agg(
-                F.collect_list(
-                    F.struct(
-                        F.col(id_col).alias("_i"),
-                        F.col("_new").alias("_n"),
-                    )
-                ).alias("_m"),
-                F.max(F.col("_new").cast("int")).alias("_has_new"),
-            )
-            .filter(
-                (F.size("_m") >= 2)
-                & (F.size("_m") <= max_bucket)
-                & (F.col("_has_new") == 1)
-            )
-            .select("_m")
-        )
-        cand = (
-            buckets.select(F.explode("_m").alias("_a"), "_m")
-            .select("_a", F.explode("_m").alias("_b"))
-            .filter(F.col("_b._n"))
-            .filter((~F.col("_a._n")) | (F.col("_a._i") < F.col("_b._i")))
-            .filter(F.col("_a._i") != F.col("_b._i"))
-            .select(
-                F.col("_a._i").alias("id_a"), F.col("_b._i").alias("id_b")
-            )
-            .distinct()
-            .persist()
-        )
-    else:
-        # unguarded path: all×new join (spillable under single-bucket
-        # skew — the same reasoning as lsh_candidate_pairs' None path)
-        banded = banded.persist()
-        a = banded.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_new").alias("_new_a"),
-            "_band",
-            "_bh",
-        )
-        b = banded.filter(F.col("_new")).select(
-            F.col(id_col).alias("id_b"), "_band", "_bh"
-        )
-        cand = (
-            a.join(b, ["_band", "_bh"])
-            .filter(
-                (~F.col("_new_a")) | (F.col("id_a") < F.col("id_b"))
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-            .persist()
-        )
-    ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .union(cand.select(F.col("id_b").alias(id_col)))
+        .filter(F.col("_b._n"))
+        .filter((~F.col("_a._n")) | (F.col("_a._i") < F.col("_b._i")))
+        .filter(F.col("_a._i") != F.col("_b._i"))
+        .select(F.col("_a._i").alias("id_a"), F.col("_b._i").alias("id_b"))
         .distinct()
-    )
-    cand_docs = df.join(F.broadcast(ids), id_col, "left_semi")
-    need = (
-        _hashed_shingle_table(cand_docs, id_col, text_col, k)
-        .groupBy(id_col)
-        .agg(F.collect_set(F.col("_sh")).alias("_set"))
         .persist()
     )
-    sa = need.select(
-        F.col(id_col).alias("id_a"), F.col("_set").alias("_sa")
-    )
-    sb = need.select(
-        F.col(id_col).alias("id_b"), F.col("_set").alias("_sb")
-    )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    verified = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("_i", inter)
-        .withColumn(
-            "jaccard",
-            F.col("_i").cast("double")
-            / (
-                F.size("_sa") + F.size("_sb") - F.col("_i")
-            ).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b")
-    )
+    verified = _verified_jaccard_pairs(df, cand, id_col, text_col, k, threshold)
     matches = verified.groupBy("id_b").agg(
         F.min("id_a").cast("bigint").alias("matched_id")
     )

@@ -32,6 +32,8 @@ from collections.abc import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from convert_parquet_to_csv_spark.operators.dedup import _bucket_pairs
+
 MEDIA_SCHEMA = (
     "media_id LONG, kind STRING, content BINARY, "
     "meta STRUCT<width: INT, height: INT, sample_rate: INT, n_frames: INT>"
@@ -1007,15 +1009,14 @@ def ahash_neardup_pairs(
     grid² hash bits into ``bands`` equal slices; any pair agreeing
     on ≥1 whole band is a candidate (two hashes within hamming
     distance < bands MUST agree on some band — pigeonhole, the
-    simhash_complete guarantee, dedup.py:624); candidates verify
-    with an exact popcount of the XOR. Never all-pairs: the join is
-    bucketed on (band index, band value), the 100 TB shape, and the
+    simhash_complete guarantee); candidates verify with an exact
+    popcount of the XOR. Never all-pairs: pairs come from buckets
+    keyed on (band index, band value), the 100 TB shape, and the
     verify is map-side Column algebra (no second shuffle beyond the
     pair dedup).
 
-    BUCKET-CAPACITY ARITHMETIC (r12, VERDICT r11 item 1 — the guard
-    this kernel was missing). Each band key takes one of
-    ``2^(grid²/bands)`` values, so at N images the banded self-join
+    BUCKET-CAPACITY ARITHMETIC. Each band key takes one of
+    ``2^(grid²/bands)`` values, so at N images the banded pairing
     tends toward ``bands · N²/2^(grid²/bands)`` candidate pairs when
     hashes are uniform — and WORSE when they are not (near-uniform
     images pile onto few band values). At the default
@@ -1033,27 +1034,22 @@ def ahash_neardup_pairs(
       ``minhash_dedup``'s banding (64-bit xxhash band keys) still
       carries the same guard.
     - **``max_bucket`` (default 1000).** Buckets holding more than
-      ``max_bucket`` members are DROPPED before the self-join —
-      exactly ``lsh_candidate_pairs``'s guard (dedup.py:467) — so
-      candidate work is bounded by ``bands · N · max_bucket`` and a
-      popular band value (flat images, letterboxes) cannot detonate
-      the join. Capping only LOSES pairs whose every agreeing band
-      is hot (drops, never corrupts: surviving pairs carry the same
-      exact verified hamming — test-pinned); set ``None`` to
-      restore the unconditional pigeonhole recall guarantee on
-      bounded corpora.
+      ``max_bucket`` members are DROPPED before any bucket's member
+      list is built — the same bucket-pairing
+      helper ``lsh_candidate_pairs`` uses — so candidate work is
+      bounded by ``bands · N · max_bucket`` and a popular band value
+      (flat images, letterboxes) cannot detonate the pairing.
+      Capping only LOSES pairs whose every agreeing band is hot
+      (drops, never corrupts: surviving pairs carry the same exact
+      verified hamming — test-pinned); ``None`` means uncapped,
+      restoring the unconditional pigeonhole recall guarantee on
+      bounded corpora at a cost quadratic in the largest bucket.
 
     Output: (id_a < id_b, hamming) for pairs with
     hamming ≤ ``max_hamming``. Set ``bands > max_hamming`` for a
     complete (recall-1.0) answer per the pigeonhole bound (subject
-    to the ``max_bucket`` note above).
-
-    Cache contract (the lsh_candidate_pairs precedent): with the
-    guard active the banded table is persist()ed (referenced by the
-    hot-bucket aggregate, the anti-join, and both self-join sides)
-    and the returned DataFrame is lazy, so the caller releases via
-    ``spark.catalog.clearCache()`` — bench.py and
-    tools/oracle_check.py already do.
+    to the ``max_bucket`` note above). Nothing is persisted, so the
+    returned plan needs no ``clearCache()``.
     """
     nbits = grid * grid
     if bands < 1 or nbits % bands != 0:
@@ -1080,37 +1076,20 @@ def ahash_neardup_pairs(
             ])
         ).alias("_bk"),
     ).select("_id", "_hv", "_bk.band", "_bk.val")
-    if max_bucket is not None:
-        banded = banded.persist()
-        hot = (
-            banded.groupBy("band", "val")
-            .count()
-            .filter(F.col("count") > max_bucket)
-            .select("band", "val")
-        )
-        banded = banded.join(hot, ["band", "val"], "left_anti")
-        banded = banded.persist()
-    pairs = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.val") == F.col("b.val"),
-                F.col("a._id") < F.col("b._id"),
-            ],
-        )
+    member = F.struct("_id", "_hv")
+    return (
+        _bucket_pairs(banded, ["band", "val"], member, max_bucket)
+        .filter(F.col("_a._id") < F.col("_b._id"))
         .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
+            F.col("_a._id").alias("id_a"),
+            F.col("_b._id").alias("id_b"),
             F.bit_count(
-                F.col("a._hv").bitwiseXOR(F.col("b._hv"))
+                F.col("_a._hv").bitwiseXOR(F.col("_b._hv"))
             ).cast("int").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    return pairs
 
 
 # --------------------------------------------------------------------------

@@ -690,8 +690,7 @@ def semdedup(
     n_probe=2 drop set a superset of n_probe=1's in both runs.
 
     ``assigned`` is persisted (both self-join sides reference it);
-    caller releases via clearCache() — the lsh_candidate_pairs
-    contract.
+    the caller releases it via clearCache().
     """
     sample, _ = ivf_index(vectors, n_clusters, id_col, vec_col)
     centroids = kmeans_refine_centroids(

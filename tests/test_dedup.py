@@ -209,39 +209,91 @@ def test_max_bucket_guard(spark, corpus):
     assert cand.count() == 0
 
 
-def test_hot_bucket_stress(spark):
-    """Pathological skew (VERDICT r1 item 6): 30% of the corpus is one
-    identical document, so every band funnels 30% of all docs into a
-    single bucket. Unguarded, that one bucket alone contributes
-    C(150,2) = 11 175 candidate pairs; ``max_bucket`` must bound the
-    candidate set so the quadratic hot-bucket blowup never reaches the
-    verify stage."""
-    n_hot, n_cold = 150, 350
+N_HOT, N_COLD = 150, 350
+
+
+def _hot_cluster_corpus(spark):
+    """30% of the corpus is one identical document, so every band,
+    chunk or hash bucket funnels 30% of all docs into one bucket."""
     rows = [(i, "the exact same viral chain letter forwarded everywhere "
-                "again and again with identical words") for i in range(n_hot)]
+                "again and again with identical words") for i in range(N_HOT)]
     rows += [
-        (n_hot + i,
+        (N_HOT + i,
          f"distinct article number {i} covering topic {i * 7} with "
          f"unique tokens {i * 13} and {i * 31} nothing shared")
-        for i in range(n_cold)
+        for i in range(N_COLD)
     ]
-    corpus = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    sigs = D.minhash_signatures(corpus, num_perm=16).persist()
-    try:
-        hot_pairs = n_hot * (n_hot - 1) // 2
-        unguarded = D.lsh_candidate_pairs(
-            sigs, num_perm=16, bands=4, max_bucket=None
-        ).count()
-        assert unguarded >= hot_pairs  # the blowup is real
-        guarded = D.lsh_candidate_pairs(
-            sigs, num_perm=16, bands=4, max_bucket=50
-        ).count()
-        # every hot-bucket pair is gone; only cold-corpus collisions
-        # (rare) survive
-        assert guarded <= unguarded - hot_pairs
-        assert guarded < n_cold  # candidate work is linear-ish, not n²
-    finally:
-        sigs.unpersist()
+    return spark.createDataFrame(rows, "doc_id LONG, text STRING")
+
+
+def _lsh_pairs(corpus, max_bucket):
+    sigs = D.minhash_signatures(corpus, num_perm=16)
+    return D.lsh_candidate_pairs(
+        sigs, num_perm=16, bands=4, max_bucket=max_bucket
+    ).collect()
+
+
+def _simhash_pairs(corpus, max_bucket):
+    sigs = D.simhash_signatures(corpus)
+    return D.simhash_pairs(sigs, max_bucket=max_bucket).collect()
+
+
+def _incremental_pairs(corpus, max_bucket):
+    """(matched_id, id) for every new doc the admission drops; all
+    docs are new, so a hot doc pairs with the smallest hot id."""
+    rows = D.minhash_dedup_incremental(
+        corpus, F.lit(True), num_perm=16, bands=4, max_bucket=max_bucket
+    ).collect()
+    corpus.sparkSession.catalog.clearCache()
+    return [(r["matched_id"], r["doc_id"]) for r in rows if not r["kept"]]
+
+
+def _ahash_pairs(corpus, max_bucket):
+    """49-bit hashes of the text: the hot cluster shares one hash."""
+    from convert_parquet_to_csv_spark.operators.multimodal import (
+        ahash_neardup_pairs,
+    )
+
+    hashes = corpus.select(
+        F.col("doc_id").alias("media_id"),
+        F.xxhash64("text").bitwiseAND(F.lit((1 << 49) - 1)).alias("ahash"),
+    )
+    return ahash_neardup_pairs(
+        hashes, grid=7, bands=7, max_hamming=2, max_bucket=max_bucket
+    ).collect()
+
+
+_ALL_HOT_PAIRS = {(a, b) for a in range(N_HOT) for b in range(a + 1, N_HOT)}
+
+
+@pytest.mark.parametrize(
+    "pairs, hot_pairs",
+    [
+        (_lsh_pairs, _ALL_HOT_PAIRS),
+        (_simhash_pairs, _ALL_HOT_PAIRS),
+        (_incremental_pairs, {(0, b) for b in range(1, N_HOT)}),
+        (_ahash_pairs, _ALL_HOT_PAIRS),
+    ],
+    ids=["lsh_candidate_pairs", "simhash_pairs",
+         "minhash_dedup_incremental", "ahash_neardup_pairs"],
+)
+def test_hot_bucket_stress(spark, pairs, hot_pairs):
+    """Pathological skew: uncapped, the hot bucket
+    alone yields C(150,2) = 11 175 pairs; ``max_bucket`` must drop
+    every one of them so the quadratic blowup never reaches verify."""
+    corpus = _hot_cluster_corpus(spark)
+
+    def as_set(rows):
+        return {(r[0], r[1]) for r in rows}
+
+    unguarded = as_set(pairs(corpus, None))
+    assert hot_pairs <= unguarded  # uncapped: the full hot set
+    guarded = as_set(pairs(corpus, 50))
+    # no pair inside the hot cluster survives the cap; only
+    # cold-corpus collisions (rare) remain
+    assert all(b >= N_HOT for _, b in guarded)
+    assert len(guarded) <= len(unguarded) - len(hot_pairs)
+    assert len(guarded) < N_COLD  # candidate work is linear-ish, not n²
 
 
 def test_hot_shingle_guard_jaccard(spark):
@@ -692,3 +744,166 @@ def test_minhash_incremental_rejects_indivisible_bands(spark):
         minhash_dedup_incremental(
             df, F.col("doc_id") % 7 == F.lit(3), num_perm=30, bands=8
         )
+
+
+# --- bucket pairing: operators vs a Python replay over collected buckets ----
+
+LSH_DOCS = [
+    # two exact-duplicate clusters + singletons: deterministic buckets
+    (1, "alpha beta gamma delta epsilon zeta"),
+    (2, "alpha beta gamma delta epsilon zeta"),
+    (3, "alpha beta gamma delta epsilon zeta"),
+    (4, "one two three four five six seven"),
+    (5, "one two three four five six seven"),
+    (6, "totally different content here now"),
+    (7, "yet another unrelated document body"),
+]
+
+
+def _band_buckets(sigs, num_perm, bands):
+    """{(band, band hash): [doc ids]} from the same banding exprs the
+    operators use (the hash family is pinned by the recall gates)."""
+    r = num_perm // bands
+    band_cols = F.array(*[
+        F.struct(
+            F.lit(j).alias("band"),
+            F.xxhash64(*[F.col(f"h{j * r + i}") for i in range(r)]).alias("bh"),
+        )
+        for j in range(bands)
+    ])
+    banded = sigs.select(
+        F.col("doc_id"), F.explode(band_cols).alias("_b")
+    ).select("doc_id", "_b.band", "_b.bh")
+    buckets: dict = {}
+    for row in banded.collect():
+        buckets.setdefault((row.band, row.bh), []).append(row.doc_id)
+    return buckets
+
+
+def _capped(buckets, max_bucket):
+    return [
+        sorted(ids) for ids in buckets.values()
+        if 2 <= len(ids) and (max_bucket is None or len(ids) <= max_bucket)
+    ]
+
+
+def test_lsh_bucket_explode_matches_reference(spark):
+    """The lsh_candidate_pairs pair set must equal reference pair
+    generation (all a<b pairs from buckets of size in [2, max_bucket])
+    at every guard value, including guards small enough to DROP the
+    3-doc cluster's buckets, and with no cap at all."""
+    df = spark.createDataFrame(LSH_DOCS, "doc_id LONG, text STRING")
+    sigs = D.minhash_signatures(df, id_col="doc_id", k=2, num_perm=8)
+    buckets = _band_buckets(sigs, num_perm=8, bands=4)
+    for mb in (1, 2, 3, 1000, None):
+        want = {
+            (ids[i], ids[j])
+            for ids in _capped(buckets, mb)
+            for i in range(len(ids))
+            for j in range(i + 1, len(ids))
+        }
+        got = {
+            (row.id_a, row.id_b)
+            for row in D.lsh_candidate_pairs(
+                sigs, id_col="doc_id", num_perm=8, bands=4, max_bucket=mb
+            ).collect()
+        }
+        assert got == want, f"max_bucket={mb}"
+    assert want, "fixture must produce candidate pairs uncapped"
+
+
+def test_minhash_incremental_bucket_matches_join_form(spark):
+    """The incremental admission must equal a Python replay of its rule
+    over the collected band buckets: buckets of size in [2,
+    max_bucket] holding a new doc yield pairs (a, b) with b new and
+    (a old or a < b); a pair verifies at word-2-gram Jaccard >= 0.5;
+    matched_id is the smallest verified partner. The fixture has
+    old-only dup clusters (the has-new bucket filter), new-vs-history
+    matches, and new-vs-new ordering."""
+    docs = [
+        (1, "alpha beta gamma delta epsilon zeta"),   # history
+        (2, "alpha beta gamma delta epsilon zeta"),   # history dup (old-only pair)
+        (7, "alpha beta gamma delta epsilon zeta"),   # new, matches history
+        (14, "one two three four five six seven"),    # new
+        (21, "one two three four five six seven"),    # new, matches 14
+        (3, "totally different content here now"),    # history singleton
+        (28, "fresh unmatched new document body"),    # new singleton
+    ]
+    df = spark.createDataFrame(docs, "doc_id LONG, text STRING")
+    is_new = (F.col("doc_id") % 7) == 0
+    text = dict(docs)
+    new = {i for i in text if i % 7 == 0}
+    sigs = D.minhash_signatures(df, id_col="doc_id", k=2, num_perm=8)
+    buckets = _band_buckets(sigs, num_perm=8, bands=4)
+
+    def grams(i):
+        t = text[i].split()
+        return {tuple(t[j:j + 2]) for j in range(len(t) - 1)}
+
+    def replay(mb):
+        matched: dict = {}
+        for ids in _capped(buckets, mb):
+            for a in ids:
+                for b in ids:
+                    if (b in new and a != b and (a not in new or a < b)
+                            and len(grams(a) & grams(b))
+                            / len(grams(a) | grams(b)) >= 0.5):
+                        matched[b] = min(matched.get(b, a), a)
+        return {(i, i not in matched, matched.get(i)) for i in new}
+
+    def run(mb):
+        rows = {
+            tuple(r)
+            for r in D.minhash_dedup_incremental(
+                df, is_new, k=2, num_perm=8, bands=4, max_bucket=mb
+            ).collect()
+        }
+        spark.catalog.clearCache()
+        return rows
+
+    for mb in (1, 2, 3, 1000, None):
+        assert run(mb) == replay(mb), f"max_bucket={mb}"
+    guarded = run(1000)
+    by_id = {r[0]: r for r in guarded}
+    assert by_id[7][1] is False and by_id[7][2] in (1, 2)  # history match
+    assert by_id[14][1] is True  # smallest of the new pair survives
+    assert by_id[21] == (21, False, 14)
+    assert by_id[28][1] is True
+    # a guard of 1 drops every bucket (all pair-productive buckets
+    # have >= 2 members) => every new doc is kept
+    assert run(1) == {(7, True, None), (14, True, None),
+                      (21, True, None), (28, True, None)}
+
+
+def test_simhash_bucket_explode_matches_reference(spark):
+    """simhash_pairs' pair set + hamming values must equal reference
+    generation from collected chunk buckets at every guard value,
+    with no cap at all too."""
+    df = spark.createDataFrame(LSH_DOCS, "doc_id LONG, text STRING")
+    sigs = D.simhash_signatures(df, id_col="doc_id")
+    width = 64 // 4
+    mask = (1 << width) - 1
+    u64 = (1 << 64) - 1
+    buckets: dict = {}
+    for row in sigs.collect():
+        # Spark longs arrive signed: emulate shiftrightunsigned /
+        # bit_count over the unsigned 64-bit view.
+        for c in range(4):
+            cv = ((row.simhash & u64) >> (c * width)) & mask
+            buckets.setdefault((c, cv), []).append((row.doc_id, row.simhash))
+    for mb in (1, 2, 3, 1000, None):
+        want = set()
+        for ms in _capped(buckets, mb):
+            for i in range(len(ms)):
+                for j in range(i + 1, len(ms)):
+                    h = bin((ms[i][1] ^ ms[j][1]) & u64).count("1")
+                    if h <= 3:
+                        want.add((ms[i][0], ms[j][0], h))
+        got = {
+            (row.id_a, row.id_b, row.hamming)
+            for row in D.simhash_pairs(
+                sigs, id_col="doc_id", max_bucket=mb
+            ).collect()
+        }
+        assert got == want, f"max_bucket={mb}"
+    assert want, "fixture must produce simhash pairs uncapped"

