@@ -268,8 +268,10 @@ NOISE_FLOOR_NAMES = [
 # char_trigram_familiarity, oov_rate_vs_topk_vocab) leave nothing for
 # a re-run to reuse — their r5 `_warm` keys measured recompute ± VM
 # noise (observed both above and below the cold number) — and
-# distinctive_terms_tfidf never persisted at all. Verified by reading
-# each plan's persist/unpersist flow; only these four retain caches:
+# distinctive_terms_tfidf never persisted at all. The names below keep
+# their `_warm` key, since the artifact drops no key. dedup_minhash's
+# returned plan keeps no cache, so its `_warm` key times a second full
+# recompute; the other names' returned plans retain caches:
 DUAL_METHODOLOGY_NAMES = [
     "dedup_minhash",
     "sparse_cosine_topk_pairs",
@@ -690,7 +692,8 @@ def main() -> None:
             # the warmup run populates the plan's persist()ed
             # subtrees and the timed runs reuse them — the
             # r3-and-earlier methodology, measuring
-            # downstream-of-persist cost.
+            # downstream-of-persist cost. A plan that persists nothing
+            # (dedup_minhash) is fully recomputed here.
             def _run_warm(fn=fn):
                 fn(spark, SF_DIR).write.format("noop").mode(
                     "overwrite"
@@ -748,11 +751,10 @@ def main() -> None:
 
         n_docs = _build_docs_500k(spark)
         docs = read_parquet(spark, DOCS_500K_PATH)
-        # Dual methodology (VERDICT r4 item 7): first run from a
-        # cleared cache (full recompute — comparable to r4's 11.3 s),
-        # second run immediately after with the persisted
-        # shingle/band tables still cached (the warm number the
-        # ledger's A/B claims use).
+        # Two runs back to back, the first from a cleared cache. The
+        # returned plan keeps no cache, so the second run
+        # (`dedup_minhash_500k_docs_warm`) is a second full recompute
+        # with a warmer JVM, not a cache hit.
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         docs500k = minhash_dedup(docs, num_perm=32, bands=8, threshold=0.5)
@@ -921,7 +923,9 @@ def main() -> None:
                     "for DUAL_METHODOLOGY_NAMES, whose RETURNED "
                     "plans retain persisted subtrees — r6 dropped "
                     "span_dedup's inverted `_warm` and pruned the "
-                    "names that release their caches internally); "
+                    "names that release their caches internally; "
+                    "dedup_minhash's plan keeps no cache, so its "
+                    "`_warm` keys are a second full recompute); "
                     "noise-floor-since-r06 (NOISE_FLOOR_NAMES: "
                     "min-of-3 interleaved cache-cleared runs + "
                     "`<name>_spread_pct` dispersion — deltas below "

@@ -306,7 +306,13 @@ def remove_duplicated_spans(
     drops whole near-duplicate documents; this removes the boilerplate
     SPANS (navigation chrome, license blocks, quoted headers) that
     recur across otherwise-distinct pages — the C4 paper's
-    "three-sentence span" rule generalized to word shingles.
+    "three-sentence span" rule generalized to word shingles. The
+    default path (``min_total=None``) is not a lazy plan builder: it
+    runs Spark jobs at call time, because it materializes the per-doc
+    coverage table with an eager ``localCheckpoint``. That checkpoint
+    lives on the executors and is not recomputed after an executor is
+    lost, so an action on the returned plan then fails and the call
+    must be repeated. With ``min_total`` set the call runs no job.
 
     Plan (all built-ins, no UDFs):
     1. one tokenize per doc (split on the single-space corpus
@@ -335,13 +341,11 @@ def remove_duplicated_spans(
        place — the word corpus is never exploded and never crosses an
        exchange.
 
-    Cache contract (r13): NONE — the candidate-gram intermediate the
+    Cache contract: NONE — the candidate-gram intermediate the
     default path shares between its distinct-count and coverage
-    passes is persisted, drained, and released INSIDE the call
-    (try/finally; the coverage table is eagerly localCheckpoint'ed,
-    so the default path runs its heavy stages at call time and the
-    returned plan is the cheap reassembly tail). Callers need no
-    ``spark.catalog.clearCache()``.
+    passes is persisted, drained by the checkpoint and released
+    inside the call, so the returned plan is the cheap reassembly
+    tail. Callers need no ``spark.catalog.clearCache()``.
 
     Measured design change (r5, ``tools/span_reassembly_ab.py``,
     interleaved cache-cleared min-of-2, full clean_text output): this

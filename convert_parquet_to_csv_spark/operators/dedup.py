@@ -481,18 +481,13 @@ def minhash_signatures(
     built-in, 64-bit). Empty docs (no shingles) are absent from the
     output — nothing to collide with.
 
-    r4 perf: each shingle string is hashed ONCE
-    (:func:`_hashed_shingle_table`); the num_perm permutation values
-    rehash the 8-byte base hash with the permutation index as seed,
-    where the old form hashed the full string num_perm times per
-    shingle row. Two-level hashing is still a uniform family —
-    per-pair collision behavior is unchanged up to the base hash's
-    ~2⁻⁶⁴ collisions, which the Jaccard-set representation already
-    accepts. Explode + groupBy beats the shuffle-free HOF
-    alternative (measured A/B in the helper's docstring). Recall
-    re-measured after the change: dedup_minhash_recall green at
-    sf0.001/0.01/0.1 (28/28, 25/25, 256/256 ground-truth pairs
-    found)."""
+    Each shingle is hashed once (:func:`_hashed_shingle_table`); the
+    num_perm permutation values rehash that 8-byte base hash with the
+    permutation index as seed. Two-level hashing is still a uniform
+    family, up to the base hash's ~2⁻⁶⁴ collisions, which the
+    Jaccard-set representation already accepts. The plan is one
+    explode + groupBy and persists nothing; a caller that reads the
+    signatures more than once persists them itself."""
     sh = _hashed_shingle_table(df, id_col, text_col, k)
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("_sh"))).alias(f"h{i}")
@@ -570,22 +565,20 @@ def _verified_jaccard_pairs(
     Sets are built only for docs in a candidate pair: the doc table is
     semi-joined to the broadcast candidate ids BEFORE shingling, so the
     re-scan tokenizes only candidate docs and its collect_set shuffle
-    is candidate-bounded. ``cand`` is read twice (id pruning and the
-    verify join), so callers persist it. The set table feeds both
-    verify sides and is persisted too, so the candidate-doc
-    re-tokenize runs once (AQE does not reliably reuse the identical
-    subtree); both caches are released with ``clearCache()``."""
-    ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .union(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
+    is candidate-bounded. The ids come from one ``explode`` over
+    ``cand``, so ``cand`` appears in the plan once for the ids and once
+    for the verify join, and the set table once per verify side.
+    Nothing is persisted: AQE reuses the exchanges of those repeated
+    subtrees (``ReusedExchange``), so each is computed once per
+    action."""
+    ids = cand.select(
+        F.explode(F.array("id_a", "id_b")).alias(id_col)
+    ).distinct()
     cand_docs = df.join(F.broadcast(ids), id_col, "left_semi")
     need = (
         _hashed_shingle_table(cand_docs, id_col, text_col, k)
         .groupBy(id_col)
         .agg(F.collect_set(F.col("_sh")).alias("_set"))
-        .persist()
     )
     sa = need.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_sa"))
     sb = need.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_sb"))
@@ -618,45 +611,24 @@ def minhash_dedup(
     Jaccard verify → min-id survivors. Candidate count, not docs²,
     bounds every stage.
 
-    Shuffle budget (r4 restructure, the 100 TB-shaped decision): the
-    signature pass shuffles num_perm longs per doc — the per-doc
-    shingle-hash SET deliberately does NOT ride that shuffle. The
-    old single-pass profile (signatures + collect_set in one
-    groupBy) moved every doc's whole set through the exchange
-    (~40% of corpus bytes; ~2 GB at 500k docs) although
-    verification needs sets only for docs that appear in a
-    candidate pair (~5% there, and the fraction shrinks as the
-    corpus grows past the duplicate clusters). Sets are instead
-    built in a SECOND, candidate-pruned pass
-    (:func:`_verified_jaccard_pairs`). Verification is then exact
-    Jaccard via ``array_intersect`` — never a re-shuffle of the
-    full exploded shingle table. Jaccard over 64-bit shingle hashes
-    equals Jaccard over shingle strings up to xxhash64 collisions
-    (~|doc|²/2⁶⁵ per doc — negligible).
+    Shuffle budget: the signature pass shuffles num_perm longs per
+    doc; the per-doc shingle-hash set does not ride that shuffle.
+    Verification needs sets only for docs in a candidate pair, so the
+    sets are built in a second, candidate-pruned pass
+    (:func:`_verified_jaccard_pairs`) and compared with exact Jaccard
+    via ``array_intersect`` — never a re-shuffle of the full exploded
+    shingle table. Jaccard over 64-bit shingle hashes equals Jaccard
+    over shingle strings up to xxhash64 collisions (~|doc|²/2⁶⁵ per
+    doc — negligible).
 
-    The signature table (num_perm longs per row), the candidate
-    pairs and the candidate shingle sets are persisted; the caller
-    releases them via ``spark.catalog.clearCache()``.
-
-    Measured scale curve (r6, ``tools/scale_curve.py`` on the
-    sf0.1-derived token-mangled corpora, cache-cleared min-of-2,
-    quiet box): **7.5 s @ 500k / 10.7 s @ 1M / 13.3 s @ 2M docs —
-    0.44× linear**, i.e. sublinear all the way to 2M: fixed
-    scheduling/codegen overhead amortizes and no stage's aggregate
-    state outgrows memory (the banding keys are 8-byte hashes and
-    the candidate-pruned second pass keeps verification volume
-    linear in the dup-cluster count, which the mangled corpus holds
-    linear by construction). VM caveat recorded in the same run:
-    this box's minute-scale throughput swings reach 3×, so
-    single-shot numbers above ~10 s are meaningless — every claim
-    here is a min over interleaved repeats.
+    The result is one lazy plan and nothing is persisted, so no
+    ``clearCache()`` is needed. The candidate subtree appears in the
+    plan more than once; AQE reuses its exchanges, and it coalesces
+    the small post-shuffle partitions. A caller that runs more than
+    one action on the result persists the result itself.
     """
-    sigs = minhash_signatures(
-        df, id_col, text_col, k, num_perm
-    ).persist()
-    cand = lsh_candidate_pairs(
-        sigs, id_col, num_perm, bands, max_bucket
-    ).persist()
+    sigs = minhash_signatures(df, id_col, text_col, k, num_perm)
+    cand = lsh_candidate_pairs(sigs, id_col, num_perm, bands, max_bucket)
     verified = _verified_jaccard_pairs(df, cand, id_col, text_col, k, threshold)
     return drop_near_duplicates(df, verified, id_col)
 
@@ -1605,28 +1577,22 @@ def minhash_dedup_incremental(
     quadratic in the largest bucket. Verification is the same
     candidate-pruned exact-Jaccard second pass as minhash_dedup (sets
     built only for docs appearing in a candidate pair; never a
-    full-corpus set shuffle). The signature table, candidate pairs
-    and candidate sets are persisted for that pass; the caller
-    releases them via ``spark.catalog.clearCache()``.
+    full-corpus set shuffle). The result is one lazy plan and nothing
+    is persisted, so no ``clearCache()`` is needed; a caller that runs
+    more than one action on the result persists the result itself.
 
     Replayability contract (the dedup_minhash precedent): survivors
     are defined by EXACT verified Jaccard, so the oracle replays the
     brute-force rule and the row set matches whenever band recall
     holds at the gating fixture — which dedup_minhash_recall gates
     pairwise on the same (k, num_perm, bands) configuration.
-
-    Measured scale curve (tools/scale_curve.py, mangled sf0.1
-    replicas, 1-in-7 batch, min-of-2, local[32]): 8.9 / 12.1 /
-    18.3 s at 500k/1M/2M docs — 0.51×-linear, tracking
-    minhash_dedup's sublinear shape with the batch-bounded
-    candidate volume on top.
     """
     flagged = df.withColumn("_new", is_new)
     sigs = minhash_signatures(
         flagged, id_col, text_col, k, num_perm
     ).join(
         flagged.select(id_col, "_new"), id_col
-    ).persist()
+    )
     banded = _band_rows(sigs, id_col, num_perm, bands, "_new")
     member = F.struct(F.col(id_col).alias("_i"), F.col("_new").alias("_n"))
     cand = (
@@ -1639,7 +1605,6 @@ def minhash_dedup_incremental(
         .filter(F.col("_a._i") != F.col("_b._i"))
         .select(F.col("_a._i").alias("id_a"), F.col("_b._i").alias("id_b"))
         .distinct()
-        .persist()
     )
     verified = _verified_jaccard_pairs(df, cand, id_col, text_col, k, threshold)
     matches = verified.groupBy("id_b").agg(

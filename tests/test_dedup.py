@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import random
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -176,6 +179,101 @@ def test_minhash_dedup_finds_near_dup(spark, corpus):
     assert kept == [0, 4, 5]
 
 
+def _seeded_neardup_corpus(spark, n_unique=240, n_near=60, n_hot=60):
+    """Seeded docs: unique docs, near-duplicates that replace 2-40% of
+    an earlier doc's words (so pairs fall on both sides of a 0.5
+    threshold), one exact-duplicate cluster of ``n_hot`` docs and one
+    empty doc, with shuffled ids."""
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+    texts = [
+        [rng.choice(vocab) for _ in range(rng.randint(20, 60))]
+        for _ in range(n_unique)
+    ]
+    for _ in range(n_near):
+        copy = list(rng.choice(texts[:n_unique]))
+        n_edit = max(1, int(len(copy) * rng.uniform(0.02, 0.4)))
+        for j in rng.sample(range(len(copy)), n_edit):
+            copy[j] = rng.choice(vocab)
+        texts.append(copy)
+    hot = [rng.choice(vocab) for _ in range(30)]
+    texts += [hot] * n_hot + [[]]
+    ids = list(range(len(texts)))
+    rng.shuffle(ids)
+    rows = [(i, " ".join(t)) for i, t in zip(ids, texts)]
+    return spark.createDataFrame(rows, "doc_id LONG, text STRING"), dict(rows)
+
+
+def test_minhash_dedup_matches_python_replay(spark):
+    """Survivors equal a Python replay of the verify rule: exact
+    Jaccard over word 3-gram sets for every lsh_candidate_pairs pair,
+    dropping the greater id of each pair at or over the threshold.
+    The hot cluster's buckets exceed max_bucket, so its docs are never
+    candidates and all survive."""
+    df, text = _seeded_neardup_corpus(spark)
+    max_bucket = 50
+    cand = D.lsh_candidate_pairs(
+        D.minhash_signatures(df), max_bucket=max_bucket
+    ).collect()
+
+    def grams(i):
+        t = text[i].split()
+        return {" ".join(t[j:j + 3]) for j in range(max(len(t) - 2, 1))}
+
+    removed = set()
+    for a, b in ((r["id_a"], r["id_b"]) for r in cand):
+        if len(grams(a) & grams(b)) / len(grams(a) | grams(b)) >= 0.5:
+            removed.add(b)
+    got = {
+        r["doc_id"]
+        for r in D.minhash_dedup(df, max_bucket=max_bucket).collect()
+    }
+    assert got == set(text) - removed
+    assert removed, "fixture must produce verified near-duplicates"
+    assert len(removed) < len(cand), "fixture must reject some candidates"
+    (hot, n_hot), = Counter(text.values()).most_common(1)
+    assert n_hot > max_bucket
+    assert {i for i, t in text.items() if t == hot} <= got
+
+
+def _explain(df, capsys) -> str:
+    capsys.readouterr()
+    df.explain()
+    return capsys.readouterr().out
+
+
+@pytest.mark.parametrize(
+    "dedup_op",
+    [
+        lambda df: D.minhash_dedup(df, max_bucket=50),
+        lambda df: D.minhash_dedup_incremental(
+            df, (F.col("doc_id") % 3) == 0, max_bucket=50
+        ),
+    ],
+    ids=["minhash_dedup", "minhash_dedup_incremental"],
+)
+def test_minhash_pipeline_keeps_no_cache(spark, capsys, dedup_op):
+    """Neither the returned plan nor anything left after an action on
+    it holds a cache: a fresh DataFrame over the same input (the
+    operator again, and its signature and candidate phases) explains
+    without an InMemoryRelation."""
+    df, _ = _seeded_neardup_corpus(spark)
+    spark.catalog.clearCache()
+    out = dedup_op(df)
+    assert "InMemoryRelation" not in _explain(out, capsys)
+    out.collect()
+    sigs = D.minhash_signatures(df)
+    cand = D.lsh_candidate_pairs(sigs, max_bucket=50)
+    for probe in (dedup_op(df), sigs, cand):
+        assert "InMemoryRelation" not in _explain(probe, capsys)
+    # ...and the probe does show a cache when one exists
+    pinned = D.minhash_signatures(df).persist()
+    try:
+        assert "InMemoryRelation" in _explain(D.minhash_signatures(df), capsys)
+    finally:
+        pinned.unpersist()
+
+
 def test_lsh_candidates_subset_verified(spark, corpus):
     sigs = D.minhash_signatures(corpus)
     cand = D.lsh_candidate_pairs(sigs)
@@ -244,7 +342,6 @@ def _incremental_pairs(corpus, max_bucket):
     rows = D.minhash_dedup_incremental(
         corpus, F.lit(True), num_perm=16, bands=4, max_bucket=max_bucket
     ).collect()
-    corpus.sparkSession.catalog.clearCache()
     return [(r["matched_id"], r["doc_id"]) for r in rows if not r["kept"]]
 
 
@@ -710,7 +807,6 @@ def test_minhash_incremental_admission_rule(spark):
             df, F.col("doc_id") % 7 == F.lit(3)
         ).collect()
     }
-    spark.catalog.clearCache()
     # output covers exactly the new ids
     assert set(got) == {3, 17, 24, 31}
     # 3 matches history 20 (larger id than 3 — history always counts)
@@ -852,14 +948,12 @@ def test_minhash_incremental_bucket_matches_join_form(spark):
         return {(i, i not in matched, matched.get(i)) for i in new}
 
     def run(mb):
-        rows = {
+        return {
             tuple(r)
             for r in D.minhash_dedup_incremental(
                 df, is_new, k=2, num_perm=8, bands=4, max_bucket=mb
             ).collect()
         }
-        spark.catalog.clearCache()
-        return rows
 
     for mb in (1, 2, 3, 1000, None):
         assert run(mb) == replay(mb), f"max_bucket={mb}"
