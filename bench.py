@@ -250,10 +250,9 @@ NOISE_FLOOR_NAMES = [
     "similarity_topk_ivf",
     # r13 (VERDICT r12 item 5): the r12 driver box read 4.30 s where
     # the builder's committed record read 1.43 s on the same tree.
-    # Adjudicated by a dedicated 7-run same-box probe
-    # (tools/r13_ab/dsir_spread_probe.py): min 1.63 s, spread 56%,
-    # no sample near 4.3 — the driver reading is its degraded-disk
-    # box (IO anchor x2.2), not code. Promoted here (the topk_ivf
+    # Adjudicated by a dedicated 7-run same-box probe: min 1.63 s,
+    # spread 56%, no sample near 4.3 — the driver reading is its
+    # degraded-disk box (IO anchor x2.2), not code. Promoted here (the topk_ivf
     # treatment) so future deltas self-adjudicate; its `_warm`
     # dual-methodology key is preserved by the warm companion pass
     # after the noise-floor loop.
@@ -843,7 +842,7 @@ def main() -> None:
         docs = read_parquet(spark, DOCS_500K_PATH)
         # No `_warm` key here (VERDICT r5 item 3): r5 removed
         # span-dedup's persists after measuring them as a NEGATIVE
-        # result (tools/span_persist_ab.py), so a "warm" re-run has
+        # result (recompute beat the cache), so a "warm" re-run has
         # no cached intermediates to reuse — r5's `_warm` number
         # measured recompute + cache/GC pressure and shipped a
         # warm-2.4×-slower-than-cold inversion. The plan has nothing

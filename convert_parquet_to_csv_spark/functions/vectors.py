@@ -20,25 +20,18 @@ def _c(col: Column | str) -> Column:
 def dot_product(a: Column | str, b: Column | str) -> Column:
     """Σ aᵢ·bᵢ via zip_with + aggregate.
 
-    NOTE (r12 optimization round): higher-order-function lambdas are
-    evaluated OUTSIDE whole-stage codegen (interpreted per element,
-    with a per-row intermediate array) — the measured 10x+ HOF-vs-
-    codegen class this repo documents for text kernels applies to
-    vector math too. When the array length is STATICALLY known, use
-    :func:`dot_product_fixed` / :func:`sq_l2_fixed`: bit-identical
-    results on inputs of length exactly ``n`` (same left-to-right
-    float64 fold from the same 0.0 seed, same NULL propagation when
-    only ONE side is short — ``F.get`` out of bounds and
-    ``zip_with``'s null-pad both yield NULL). Divergence cases,
-    precise (ADVICE r12): BOTH sides length m < n — zip_with pads
-    nothing and returns the finite m-term sum while the fixed form
-    returns NULL (arguably the safer output for an undersized
-    vector; pinned by the VEC_ROWS both-short row); either side
-    length > n — the fixed form sums only the first n terms. So the
-    fixed forms require vectors no LONGER than the declared dim and
-    treat shorter ones as NULL. Measured 2.4x on the PQ assign
-    stage. This general form stays for callers whose dim is
-    data-dependent."""
+    Higher-order-function lambdas run outside whole-stage codegen
+    (interpreted per element, with a per-row intermediate array). When
+    the array length is statically known and small, use
+    :func:`dot_product_fixed` / :func:`sq_l2_fixed`: bit-identical on
+    inputs of length exactly ``n`` (same left-to-right float64 fold
+    from the same 0.0 seed; a NULL element, or only ONE side short,
+    yields NULL in both forms). They diverge when BOTH sides have
+    length m < n (zip_with returns the finite m-term sum, the fixed
+    form NULL) and when either side is longer than ``n`` (the fixed
+    form sums only the first n terms). The unroll pays off only for
+    small ``n``: it won 2.4× on the PQ assign stage (dsub=2), while a
+    64-term cosine unroll measured 3–4× slower than this form."""
     prods = F.zip_with(
         _c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")
     )
@@ -76,35 +69,13 @@ def l2_norm(a: Column | str) -> Column:
     return F.sqrt(dot_product(a, a))
 
 
-def cosine_similarity(
-    a: Column | str, b: Column | str, dim: int | None = None
-) -> Column:
+def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """cos(a,b); 0.0 when either vector is all-zero (defined, not NaN).
 
-    ``dim`` (r13, VERDICT r12 item 6): when the vector length is
-    statically known, pass it to run the three dot products through
-    the unrolled codegen form (:func:`dot_product_fixed`) instead of
-    interpreted ``zip_with``/``aggregate`` lambdas. Bit-identical to
-    the HOF path on length-``dim`` inputs: the same three float64
-    left-to-right folds feed the same ``when(denom > 0)`` guard, and
-    a NULL vector falls through to 0.0 identically (NULL ``denom >
-    0`` is NULL → ``otherwise``). See the :func:`dot_product` NOTE
-    for the short/long-input divergence cases — callers must know
-    their vectors are exactly ``dim`` long (pinned by
-    tests/test_r13_optimizations.py).
-
-    USE ONLY FOR SMALL ``dim``: the r13 A/B measured the 64-dim
-    unroll as a 3-4× REGRESSION on the similarity gates (the 3×64-
-    term tree is ~1200 expression nodes per cosine; the winning PQ
-    precedent unrolled dsub=2). tools/r13_ab/ivf_dim_ab.py carries
-    the numbers; no shipped caller passes dim=64."""
-    if dim is not None:
-        denom_f = F.sqrt(dot_product_fixed(a, a, dim)) * F.sqrt(
-            dot_product_fixed(b, b, dim)
-        )
-        return F.when(
-            denom_f > 0, dot_product_fixed(a, b, dim) / denom_f
-        ).otherwise(F.lit(0.0))
+    Three :func:`dot_product` folds feed one ``when(denom > 0)``
+    guard. A NULL vector or NULL element makes ``denom`` or the dot
+    NULL: a NULL ``denom`` falls through to 0.0, a NULL dot over a
+    finite ``denom`` (one side shorter than the other) stays NULL."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0, dot_product(a, b) / denom).otherwise(F.lit(0.0))
 

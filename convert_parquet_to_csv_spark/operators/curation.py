@@ -347,20 +347,19 @@ def remove_duplicated_spans(
     inside the call, so the returned plan is the cheap reassembly
     tail. Callers need no ``spark.catalog.clearCache()``.
 
-    Measured design change (r5, ``tools/span_reassembly_ab.py``,
-    interleaved cache-cleared min-of-2, full clean_text output): this
-    array-native reassembly beats the previous word-stream form
-    (posexplode every word -> left-join coverage on (doc, pos) ->
-    ``array_sort(collect_list(struct(pos, word)))`` on a doc-key
-    exchange) **5.9 s vs 13.1 s** on the sf0.01-derived 500k corpus
-    and **6.1 s vs 15.7 s** on the sf0.1-derived one (longer docs) —
-    the lost whole-stage codegen of the HOF lambda is far cheaper
-    than shuffling every word as a struct. Trade-off to re-measure if
-    corpora change: ``array_contains`` membership is O(len x cov)
-    comparisons per doc; it wins while coverage is boilerplate-sized,
-    and would degrade only on pathological corpora (multi-thousand-
-    word docs that are ~fully covered), where the word-stream form's
-    shuffle-heavy plan is the fallback.
+    Measured design change (interleaved cache-cleared min-of-2, full
+    clean_text output): this array-native reassembly beats the previous
+    word-stream form (posexplode every word -> left-join coverage on
+    (doc, pos) -> ``array_sort(collect_list(struct(pos, word)))`` on a
+    doc-key exchange) **5.9 s vs 13.1 s** on the sf0.01-derived 500k
+    corpus and **6.1 s vs 15.7 s** on the sf0.1-derived one (longer
+    docs) — the lost whole-stage codegen of the HOF lambda is far
+    cheaper than shuffling every word as a struct. Trade-off to
+    re-measure if corpora change: ``array_contains`` membership is O(len
+    x cov) comparisons per doc; it wins while coverage is
+    boilerplate-sized, and would degrade only on pathological corpora
+    (multi-thousand-word docs that are ~fully covered), where the
+    word-stream form's shuffle-heavy plan is the fallback.
 
     Heavy-hitter pass shape (r5, measured by ``tools/scale_curve.py``
     + a variant A/B at 1M/2M docs): a straight
@@ -393,34 +392,31 @@ def remove_duplicated_spans(
     ADVICE r5 flagged that the bare array form emitted '' with NULL
     counts).
 
-    Measured non-optimization (r5, ``tools/span_persist_ab.py``,
-    500k docs, interleaved min-of-2): although ``arr`` is referenced
-    3× and ``grams`` 2×, persisting them does NOT beat the
-    recompute: persist(arr) LOSES (9.1 s vs 6.7 s baseline — the
-    cache write + tokenized-array storage costs more than two extra
-    codegen'd split passes) and persist(grams) is within noise
-    (6.6 s). Unlike the triangle-orientation case (where the
-    re-run subtree contained a full shuffle), these branches recompute
-    only scan+project work that whole-stage codegen makes cheap.
-    Don't add persists here without re-measuring.
+    Measured non-optimization (500k docs, interleaved min-of-2):
+    although ``arr`` is referenced 3× and ``grams`` 2×, persisting them
+    does NOT beat the recompute: persist(arr) LOSES (9.1 s vs 6.7 s
+    baseline — the cache write + tokenized-array storage costs more than
+    two extra codegen'd split passes) and persist(grams) is within noise
+    (6.6 s). Unlike the triangle-orientation case (where the re-run
+    subtree contained a full shuffle), these branches recompute only
+    scan+project work that whole-stage codegen makes cheap. Don't add
+    persists here without re-measuring.
 
-    2M-doc floor check + second negative result (r6,
-    ``tools/span_repart_ab.py`` protocol: 3 interleaved cache-cleared
-    rounds per variant, MIN per variant — this VM's minute-scale
-    throughput swings reach 3×, so only interleaved minima are
-    admissible): at 2M sf0.1-derived docs the candidate/hot gram
-    tables reach ~2.27M rows (≈18 MB) — past the broadcast
-    threshold, so AQE plans the cand/hot joins as shuffle joins and
-    the gram stream crosses the exchange for the joins too, not
-    just the pre-screen groupBy. Pre-partitioning ``grams`` once on
-    the gram key so all three consumers share one exchange
-    (repartition 27.7 s / repartition+persist 24.6 s) does NOT beat
-    the shipped form (23.96 s): the explicit exchange carries the
-    full (id, pos, gram) payload while the groupBy exchange ships
-    partially-aggregated key/count pairs, and SMJ sorts eat the
-    rest. Floor-to-floor the shipped form is ~0.92× linear
-    (500k 6.5 s → 2M 24.0 s); the 55-62 s 2M points in the r6
-    scale-curve artifact are noise-window captures (same code,
+    2M-doc floor check + second negative result (3 interleaved
+    cache-cleared rounds per variant, MIN per variant — minute-scale
+    throughput swings on the measuring VM reach 3×, so only interleaved
+    minima are admissible): at 2M sf0.1-derived docs the candidate/hot
+    gram tables reach ~2.27M rows (≈18 MB) — past the broadcast
+    threshold, so AQE plans the cand/hot joins as shuffle joins and the
+    gram stream crosses the exchange for the joins too, not just the
+    pre-screen groupBy. Pre-partitioning ``grams`` once on the gram key
+    so all three consumers share one exchange (repartition 27.7 s /
+    repartition+persist 24.6 s) does NOT beat the shipped form (23.96
+    s): the explicit exchange carries the full (id, pos, gram) payload
+    while the groupBy exchange ships partially-aggregated key/count
+    pairs, and SMJ sorts eat the rest. Floor-to-floor the shipped form
+    is ~0.92× linear (500k 6.5 s → 2M 24.0 s); the 55-62 s 2M points in
+    the r6 scale-curve artifact are noise-window captures (same code,
     same corpus, minutes apart), not superlinearity.
     """
     if n < 1:
@@ -468,11 +464,10 @@ def remove_duplicated_spans(
     #    corpus-volume gram projection ran THREE times. g2 is
     #    candidate-bounded (occurrences of >max_docs-count grams —
     #    boilerplate-scale, ~3% of gram volume on the curve corpus),
-    #    nothing like the full-gram/arr persists r5 measured as
-    #    losses (tools/span_persist_ab.py — that negative result
-    #    stands for corpus-volume tables). r13: the cache is released
-    #    in-operator (try/finally below) — no caller clearCache()
-    #    obligation remains.
+    #    nothing like the full-gram/arr persists measured as losses
+    #    above (that negative result stands for corpus-volume
+    #    tables). The cache is released in-operator (try/finally
+    #    below) — no caller clearCache() obligation remains.
     # 2. The `.distinct()` between the coverage explode and
     #    collect_set is REMOVED: collect_set is duplicate-insensitive
     #    (set semantics), so set membership is unchanged. RECORD
@@ -665,7 +660,6 @@ def _gopher_gram_masses(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    _consolidate: bool = True,
 ) -> DataFrame:
     """Integer repetition char-MASSES for docs owning >=1 counted
     gram (>=2 tokens): (id, _tm2, _tm3, _tm4, _dm5.._dm10). Shorter
@@ -675,24 +669,15 @@ def _gopher_gram_masses(
     their rule flags to True (:func:`gopher_quality_filter`). Split
     out so the quality filter shares this subtree without a second
     tokenize scan. Masses, not fractions: the doc char total stays
-    OUT of the gram pipeline — an r7 intermediate cut carried
-    `_chars` through the two 9-way-gram shuffles (8 bytes x ~10^9
-    rows at 2M docs); keeping them narrow saves those shuffle bytes,
-    and the divide happens after the per-doc collapse where a chars
-    column costs one row per DOC instead of one per gram.
+    OUT of the gram pipeline, so the gram aggregates carry no
+    ``_chars`` column (8 bytes x ~10^9 rows at 2M docs); the divide
+    happens after the per-doc collapse, one row per DOC.
 
-    Measured r7 curve (min-of-2 cache-cleared, 500k/1M/2M mangled
-    replicas): 34.1 / 82.7 / 248.2 s. vs r6: 2M unchanged (243 s)
-    but ~2x faster at 500k — the removed second tokenize+prefix-sum
-    scan was a linear cost that dominated at small sizes. The
-    residual 2M superlinearity (~1.2x linear per octave) sits in the
-    ~10^9-group (doc, n, gram-hash) aggregate: measured INSENSITIVE
-    to heap (16g vs 64g: 250-305 s band both ways) and to shuffle
-    partitions (32 vs 256: 256 slower), i.e. the single-JVM
-    sort-agg/merge regime, not a plan defect — on a multi-executor
-    cluster this aggregate splits across machines and each partition
-    stays in the hash regime. Single-run variance on this VM is
-    +/-20%; judge deltas against the min-of-2 numbers.
+    At 2M mangled docs the (doc, n, gram-hash) aggregate (~10^9
+    groups) dominates and grows ~1.2x faster than linear per octave.
+    It was insensitive to heap (16g vs 64g) and to shuffle partitions
+    (32 vs 256): the single-JVM sort-aggregate regime, which a
+    multi-executor cluster splits across machines.
 
     Metrics derived downstream: fraction of character mass inside the
     single most frequent word n-gram (n=2..4,
@@ -710,21 +695,16 @@ def _gopher_gram_masses(
     n-gram"): argmax by count, with the longer gram breaking count
     ties deterministically — NOT ``max(count·len)`` over all grams,
     which is a strict upper bound that a rarer-but-longer gram can
-    inflate (r6 shipped that variant; fixed per ADVICE r6). Every
-    ratio is one integer-sum divided once — IEEE bit-stable across
-    engines.
+    inflate. Every ratio is one integer-sum divided once — IEEE
+    bit-stable across engines.
 
-    Plan shape (r12 consolidation — ADVICE r12 docstring sync): ONE
-    posexplode of the token array, cross-expanded to the 9 gram
-    lengths in the same projection (9 rows per position, no second
-    explode stage), then ONE ``repartition(id)`` exchange of the raw
-    gram stream — hash partitioning on the doc id satisfies the
-    ClusteredDistribution of ALL downstream aggregates ((id, n, gh)
-    counts, (id, n) masses, the final (id) pivot: subset rule), so
-    the whole collapse chain runs exchange-free after it (the inline
-    r12 comment below carries the measured A/B and the map-side-
-    combine trade; tools/r13_ab/gopher_dup_heavy_ab.py the dup-heavy
-    adversarial measurement).
+    Plan shape: ONE posexplode of the token array, cross-expanded to
+    the 9 gram lengths in the same projection (9 rows per position,
+    no second explode stage), then ONE ``repartition(id)`` exchange
+    of the raw gram stream — hash partitioning on the doc id
+    satisfies the ClusteredDistribution of ALL downstream aggregates
+    ((id, n, gh) counts, (id, n) masses, the final (id) pivot: subset
+    rule), so the whole collapse chain runs exchange-free after it.
     Gram identity is ``xxhash64(token-slice)`` (the measured shingle
     lesson from dedup: never carry gram strings across a shuffle);
     same ~2⁻⁶⁴ collision acceptance as minhash's base hash.
@@ -773,43 +753,11 @@ def _gopher_gram_masses(
             ).alias("_gl"),
         )
     )
-    # r12 optimization round: ONE doc-keyed exchange replaces the
-    # previous three aggregate exchanges. The straight
-    # groupBy(id, n, gh) chain shuffled (1) partial-agg'd gram rows
-    # on (id, n, gh), then (2) its output again on (id, n) for the
-    # per-n collapse, then (3) once more on (id) for the final
-    # pivot — and on real crawl text gram keys are mostly unique
-    # within a doc, so the map-side combine the first exchange paid
-    # a partial hash-agg pass for reduced almost nothing. Hash-
-    # repartitioning the raw gram stream on the DOC id instead
-    # satisfies the ClusteredDistribution of ALL THREE aggregates
-    # (partitioning by a subset of each grouping key), so the whole
-    # collapse chain runs exchange-free on one distribution, as
-    # complete (single-pass) aggregates. Measured (sf0.1, 5000 docs,
-    # 2.21M gram rows, interleaved min-of-2, local[32]): masses
-    # subtree 3.16 -> 1.78 s (1.8x); results bit-identical (collect
-    # compare + the gopher family oracles tri-SF). Per-partition
-    # aggregate state is unchanged (a partition holds its docs'
-    # grams either way). Plan diff: 3 Exchange -> 1 Exchange
-    # (plans/r12/gopher_repetition_signals_{before,after}.txt).
-    # r13 (VERDICT r12 item 3 — the r12 "regains by skipping two
-    # downstream exchanges" argument MEASURED on the adversarial
-    # shape, and it does NOT fully regain): dup-x40 corpus (50k docs
-    # x 320 tokens over 8 distinct, tools/r13_ab/gopher_dup_heavy_ab
-    # .py, interleaved min-of-2): consolidated 9.09 s vs legacy
-    # **7.42 s** — on repetition-heavy text map-side combine
-    # compresses the first exchange ~40x and its two downstream
-    # exchanges are tiny (few distinct grams per doc), so the legacy
-    # chain wins 1.22x. On crawl-shaped text the consolidation keeps
-    # its measured 1.8x. `_consolidate` (public: the callers'
-    # `consolidate_exchanges`) selects per corpus; values identical
-    # either way (test_gopher_masses_legacy_exchange_shape_identical).
-    # ``_consolidate=False`` is the PRE-r12 three-exchange form, kept
-    # reachable ONLY for the measured dup-heavy A/B (VERDICT r12 item
-    # 3, tools/r13_ab/gopher_dup_heavy_ab.py) — every caller uses the
-    # consolidated default.
-    gsrc = grams.repartition(id_col) if _consolidate else grams
-    gc = gsrc.groupBy(id_col, "_n", "_gh").agg(
+    # One raw-stream exchange instead of a partial-agg chain of three:
+    # crawl-text gram keys are mostly unique within a doc, so map-side
+    # combine saves little (1.8x faster on sf0.1 text); on
+    # repetition-heavy text the three-exchange chain was 1.22x faster.
+    gc = grams.repartition(id_col).groupBy(id_col, "_n", "_gh").agg(
         F.count(F.lit(1)).alias("_c"), F.max("_gl").alias("_gl")
     )
     # top_{n}gram mass = chars of the single MOST FREQUENT gram (Rae
@@ -820,12 +768,9 @@ def _gopher_gram_masses(
     # portable integer arithmetic, no argmax/struct-ordering builtin
     # the DuckDB oracle might disagree on. Safe while count and
     # gram_len each < 2^31 (a doc would need 2^31 tokens to overflow;
-    # Spark's array type caps elements below that anyway). r6 shipped
+    # Spark's array type caps elements below that anyway). Not
     # max(count·len) over ALL grams — an upper bound that inflates the
-    # metric when a rarer-but-longer gram beats the most frequent one
-    # (ADVICE r6); fixed to the paper-literal definition here, with
-    # the oracle and the pure-Python test reference updated in
-    # lockstep.
+    # metric when a rarer-but-longer gram beats the most frequent one.
     _key = F.col("_c") * F.lit(4294967296) + F.col("_gl")
     per_n = gc.groupBy(id_col, "_n").agg(
         F.max(_key).alias("_top_key"),
@@ -896,40 +841,24 @@ def gopher_repetition_signals(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_tokens_per_doc: int | None = None,
-    consolidate_exchanges: bool = True,
 ) -> DataFrame:
     """Per-document Gopher repetition metrics for EVERY input doc:
     see :func:`_gopher_gram_masses` for the metric definitions and
     plan shape. The char denominator comes from a second,
     projection-only scan (:func:`_gopher_chars` — one regexp, no
-    tokenize/HOF; the ADVICE r6 double-tokenize fix without the
-    wide-shuffle regression), left-joined against the per-doc mass
+    tokenize/HOF), left-joined against the per-doc mass
     table so docs with < 2 tokens land at exactly 0.0.
 
-    ``max_tokens_per_doc`` (VERDICT r7 item 7): score each doc on its
+    ``max_tokens_per_doc``: score each doc on its
     FIRST ``cap`` tokens only. The paper itself drops >100k-token
     docs before these signals run (word_count_ok's upper bound), so a
     truncating cap is semantically aligned — and operationally it
     bounds the per-doc contribution to the (doc, n, hash) aggregate,
-    the measured single-JVM sort-agg tail at 2M fixture docs (r7
-    ledger). Implemented as one pre-projection rebuilding the text
+    the single-JVM sort-aggregate tail at 2M docs. Implemented as one
+    pre-projection rebuilding the text
     from the first ``cap`` tokens (``array_join(slice(tokens))``), so
     numerator AND denominator see the same truncated doc and every
-    downstream identity (chars == Σ token lens + n−1) still holds.
-
-    ``consolidate_exchanges`` (r13, VERDICT r12 item 3 — the measured
-    corpus-shape trade): ``True`` (default) runs the r12 single
-    doc-keyed raw-stream exchange — the right shape for crawl-like
-    corpora whose gram keys are ~unique within a doc (measured 1.8×
-    there). ``False`` restores the pre-r12 partial-agg exchange
-    chain, which WINS on repetition-heavy corpora where map-side
-    combine compresses the first exchange: measured on the
-    adversarial dup-×40 corpus (50k docs × 320 tokens of 8 distinct,
-    tools/r13_ab/gopher_dup_heavy_ab.py, interleaved min-of-2) —
-    masses consolidated 9.09 s vs legacy **7.42 s** (legacy 1.22×
-    faster). No static heuristic can see the corpus shape from the
-    plan, so the switch is a parameter; identical results either way
-    (test-pinned)."""
+    downstream identity (chars == Σ token lens + n−1) still holds."""
     if max_tokens_per_doc is not None:
         if max_tokens_per_doc < 1:
             raise ValueError("max_tokens_per_doc must be >= 1")
@@ -939,9 +868,7 @@ def gopher_repetition_signals(
                 F.slice(tokens(text_col), 1, max_tokens_per_doc), " "
             ).alias(text_col),
         )
-    masses = _gopher_gram_masses(
-        df, id_col, text_col, _consolidate=consolidate_exchanges
-    )
+    masses = _gopher_gram_masses(df, id_col, text_col)
     chars = df.select(id_col, _gopher_chars(text_col).alias("_chars"))
     joined = chars.join(masses, id_col, "left")
     return joined.select(
@@ -971,7 +898,6 @@ def gopher_quality_filter(
     max_mean_word_len: float = 10.0,
     min_alpha_word_frac: float = 0.80,
     min_stopword_hits: int = 2,
-    consolidate_exchanges: bool = True,
 ) -> DataFrame:
     """The Gopher quality-rule deck as per-document boolean flags plus
     the conjunction (``passes_all``): word-count bounds, mean word
@@ -982,28 +908,25 @@ def gopher_quality_filter(
 
     Flags, not a silent drop: curation pipelines tune thresholds per
     corpus, and the flag table is what you aggregate to see WHICH rule
-    is doing the killing before committing to a filter.
-    ``consolidate_exchanges``: see :func:`gopher_repetition_signals`
-    (the r13 measured corpus-shape trade; default = crawl-shaped). The paper's
+    is doing the killing before committing to a filter. The paper's
     line-shape rules (bullet/ellipsis line fractions, symbol-to-word
     ratio) are omitted — they need raw line structure, which the
     single-line test fixture cannot exercise; add them over
     ``split(text, '\\n')`` when pointed at real multi-line corpora.
 
-    Plan shape (r7, ADVICE r6): TWO text scans total — one pure
+    Plan shape: TWO text scans total — one pure
     map-side projection for the scalar features (which also yields
     the char denominator: chars = _tc + (_nt - 1), no third scan),
     one feeding the shared repetition-gram subtree
-    (:func:`_gopher_gram_masses`, r12: one doc-keyed repartition with
-    the whole aggregate chain exchange-free behind it, kept NARROW —
-    no per-gram char column). Short docs (< 2 tokens) are
+    (:func:`_gopher_gram_masses`: one doc-keyed repartition with the
+    whole aggregate chain exchange-free behind it, kept NARROW — no
+    per-gram char column). Short docs (< 2 tokens) are
     absent from the gram stream; their repetition masses are exactly
     0, below every positive threshold, so their rule flags come out
     True from the mass/chars comparison after the doc_id-keyed left
     join (AQE-broadcastable when the mass table is small). Folding
     the scalar features into the gram shuffle keys instead would
-    widen the heaviest corpus shuffle — the exact regression the r7
-    first cut measured (see _gopher_gram_masses).
+    widen the heaviest corpus shuffle (see _gopher_gram_masses).
     """
     # Alias the token array ONCE before fanning out into the four
     # scalar features: instantiating tokens() per feature re-runs
@@ -1055,9 +978,7 @@ def gopher_quality_filter(
             F.col("_tc") + F.greatest(F.col("_nt") - 1, F.lit(0))
         ).cast("long").alias("_chars"),
     )
-    rep = _gopher_gram_masses(
-        df, id_col, text_col, _consolidate=consolidate_exchanges
-    )
+    rep = _gopher_gram_masses(df, id_col, text_col)
     joined = scalars.join(rep, id_col, "left")
     # mass coalesces to 0 for docs absent from the gram stream, so
     # every repetition flag evaluates True through the same
@@ -1349,14 +1270,11 @@ def train_linear_classifier(
     lr_den: int = 400,
     ngram_ns: tuple[int, ...] = (1, 2),
     hash_fn: str = "xxhash64",
-    consolidate_exchanges: bool = True,
 ) -> DataFrame:
-    """Train the linear quality classifier IN-ENGINE (VERDICT r8
-    item 3 — the BPE train→apply precedent applied to the last
-    curation loop that fed on a stub): ``epochs`` rounds of
-    deterministic fixed-point BATCH gradient descent on squared loss
-    over :func:`hashed_ngram_buckets` features, exported as the same
-    ``(_b, weight_micro)`` table :func:`linear_text_classifier`
+    """Train the linear quality classifier IN-ENGINE: ``epochs``
+    rounds of deterministic fixed-point BATCH gradient descent on
+    squared loss over :func:`hashed_ngram_buckets` features, exported
+    as the same ``(_b, weight_micro)`` table :func:`linear_text_classifier`
     consumes — so a corpus can train its own fastText-style scorer
     (DCLM/FineWeb-Edu recipe shape) end-to-end inside the engine.
 
@@ -1377,10 +1295,9 @@ def train_linear_classifier(
     rounding per bucket per epoch. Convergence needs
     ``lr_num/lr_den < 2/λ_max(XᵀX/N)`` ≈ 2/mean‖x‖² — with ~100
     ngram counts per doc that is lr ≲ 0.02, hence the 1/400 default
-    (r10: the old 1/20 DIVERGED once labels correlated with doc
-    length — random pseudo-labels had hidden it by cancelling
-    gradients; the calibration table is the regression canary). NULL ids are excluded from
-    training (featurization pools by id; a NULL id has no stable
+    (1/20 diverges once labels correlate with doc length; the
+    calibration table is the regression canary). NULL ids are
+    excluded from training (featurization pools by id; a NULL id has no stable
     gradient identity) — documented divergence from the apply path,
     which scores NULL-id rows as one pooled group.
 
@@ -1401,46 +1318,17 @@ def train_linear_classifier(
     b = hashed_ngram_buckets(
         feat_docs, id_col, text_col, num_buckets, ngram_ns, hash_fn
     )
-    # Persist PRE-PARTITIONED on the id (r11, the
-    # embedding_power_iteration_pc1 device): counts leaves its
-    # groupBy hash-partitioned on (id, _b), so every epoch's logits
-    # groupBy(id) and gradient join(id) re-shuffled the corpus-scale
-    # table. One upfront repartition(id) satisfies both per-epoch
-    # distributions from cache — measured 2.8x on the 500k-doc curve
-    # corpus (44.8 -> 15.9 s min-of-2, interleaved same-box, weight
-    # table hash-identical). The label table is NOT pinned: its rows
-    # are narrow and map-side recompute beat a second persist in the
-    # same A/B (9.7 vs 14.8 s).
-    # r12 optimization round: repartition on the id BEFORE the count
-    # groupBy, not after — HashPartitioning(id) satisfies the
-    # aggregate's ClusteredDistribution((id, _b)) (subset rule), so
-    # the groupBy runs exchange-free on the repartitioned stream and
-    # the persisted table still carries the id distribution every
-    # epoch reuses. The previous groupBy-then-repartition form paid
-    # TWO corpus-volume exchanges (partial-agg'd (id,_b) pairs, then
-    # the aggregated table again); gram->bucket counts are near 1
-    # within a doc, so the forfeited map-side combine is cheap.
-    # Measured (sf0.1, interleaved min-of-2): counts build
-    # 0.69 -> 0.55 s; identical rows. Plan diff: 2 Exchange -> 1 on
-    # the counts subtree (plans/r12/quality_classifier_train_*.txt).
-    # r13 (VERDICT r12 item 3): the trade MEASURED on the adversarial
-    # dup-heavy corpus (within-doc dup x40 — every bucket repeated
-    # ~40x/doc, tools/r13_ab/gopher_dup_heavy_ab.py): consolidated
-    # 2.50 s vs legacy groupBy-then-repartition **1.34 s** — map-side
-    # combine wins 1.9x there. Corpus shape is invisible to the plan,
-    # so `consolidate_exchanges` parameterizes it; default True stays
-    # the crawl-shaped production answer.
-    if consolidate_exchanges:
-        counts = b.repartition(id_col).groupBy(id_col, "_b").agg(
-            F.count(F.lit(1)).alias("_c")
-        ).persist()
-    else:
-        counts = (
-            b.groupBy(id_col, "_b")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .repartition(id_col)
-            .persist()
-        )
+    # Repartition the bucket stream on the id BEFORE the count groupBy
+    # and persist the result: HashPartitioning(id) satisfies the
+    # count's ClusteredDistribution((id, _b)) (subset rule) and every
+    # epoch's logits groupBy(id) and gradient join(id), so the
+    # corpus-scale table crosses one exchange in all. Gram->bucket
+    # counts are near 1 within a crawl doc, so the forfeited map-side
+    # combine is cheap; on text repeating each bucket ~40x per doc,
+    # counting before the repartition was 1.9x faster.
+    counts = b.repartition(id_col).groupBy(id_col, "_b").agg(
+        F.count(F.lit(1)).alias("_c")
+    ).persist()
     lab = labels.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col), F.col("y_micro").cast("long").alias("_y")
     )
@@ -1508,7 +1396,6 @@ def dsir_importance_weights(
     ngram_ns: tuple[int, ...] = (1, 2),
     hash_fn: str = "xxhash64",
     persist: bool = True,
-    consolidate_exchanges: bool = True,
 ) -> DataFrame:
     """(id, score_micro): per-raw-doc DSIR importance score — the
     log-likelihood ratio log p_target(doc)/p_raw(doc) under hashed
@@ -1527,10 +1414,11 @@ def dsir_importance_weights(
     unordered aggregation and replayable in any engine whose ln agrees
     within the 1e-6 grid (the power-iteration fixed-point lesson).
 
-    Scale shape: the only full-volume work is one explode →
-    (doc, bucket) partial-agg shuffle over the raw corpus; the bucket
-    log-ratio table is ≤ num_buckets rows and BROADCAST into the
-    scoring join, so raw-corpus rows shuffle exactly once on doc-id
+    Scale shape: the only full-volume work is one explode → doc-id
+    repartition of the raw bucket stream, after which the (doc,
+    bucket) count and the scoring groupBy(id) run exchange-free; the
+    bucket log-ratio table is ≤ num_buckets rows and BROADCAST into
+    the scoring join, so raw-corpus rows shuffle exactly once on doc-id
     prefixed keys and nothing else moves. Target-corpus counts are a
     bucket-sized aggregate. ``hash_fn='md5'`` is the DuckDB-replayable
     flavor (hex-parsed, same value both engines); xxhash64 is the fast
@@ -1539,11 +1427,7 @@ def dsir_importance_weights(
     Measured (local[32], mangled-replica corpora, min-of-2
     cache-cleared, isolated runs): 12.5 s at 1M docs → 25.7 s at 2M
     (2.05× for 2× data — linear), persist=True beating persist=False
-    at both sizes (21.9/40.5 s). The r6 scale-curve artifact shows a
-    1.94×-linear step for this kernel because its timed run lands
-    right after gopher_repetition_signals' 243 s pass in the
-    interleaved protocol (heap/GC residue) — the isolated A/B above
-    is the operator's own curve.
+    at both sizes (21.9/40.5 s).
     """
     def buckets(df: DataFrame) -> DataFrame:
         return hashed_ngram_buckets(
@@ -1551,30 +1435,11 @@ def dsir_importance_weights(
         )
 
     raw_b = buckets(raw)
-    # r12 optimization round: same doc-keyed exchange consolidation
-    # as train_linear_classifier/_gopher_gram_masses — repartition the
-    # raw bucket stream on the id once, so the (id, _b) count groupBy
-    # (subset rule) AND the final scoring groupBy(id) both run
-    # exchange-free on the cached distribution; previously the scored
-    # corpus-volume table re-shuffled on the id after the broadcast
-    # ratio join. q_counts' bucket rollup pays its num_buckets-sized
-    # exchange either way. Measured (sf0.1, xxhash64 flavor,
-    # interleaved min-of-3 across two process pairs): whole operator
-    # 2.20 -> 1.63 s; rows identical; md5-flavor oracles tri-SF
-    # green. r13: `consolidate_exchanges` gates the same dup-heavy
-    # trade measured at train_linear_classifier's counts build
-    # (legacy 1.9x faster at within-doc dup x40 — see the note
-    # there); default True = the crawl-shaped answer.
-    if consolidate_exchanges:
-        doc_counts = raw_b.repartition(id_col).groupBy(
-            id_col, "_b"
-        ).agg(F.count(F.lit(1)).alias("_c"))
-    else:
-        doc_counts = (
-            raw_b.groupBy(id_col, "_b")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .repartition(id_col)
-        )
+    # The same doc-keyed exchange as train_linear_classifier's counts
+    # (see the note there for the dup-heavy trade).
+    doc_counts = raw_b.repartition(id_col).groupBy(id_col, "_b").agg(
+        F.count(F.lit(1)).alias("_c")
+    )
     if persist:
         # double-referenced: q_counts aggregates it AND the scoring
         # join re-reads it — without the cache the raw-corpus explode

@@ -890,11 +890,10 @@ def maximal_duplicated_extents(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_count: int = 2,
-    sort_partitions: int | None = None,
     count_partitions: int | None = None,
 ) -> DataFrame:
-    """TRUE-maximal duplicated substrings (VERDICT r8 item 4 — the
-    suffix-extension refinement of :func:`duplicated_span_extents`):
+    """TRUE-maximal duplicated substrings (the suffix-extension
+    refinement of :func:`duplicated_span_extents`):
     one row per maximal substring of ≥ ``k`` tokens that occurs ≥ 2
     times corpus-wide (within-doc repeats count, the ExactSubstr
     rule), where *maximal* means Lee et al. 2022's actual suffix-
@@ -938,19 +937,18 @@ def maximal_duplicated_extents(
        doc-partitioned lag.
 
     ``min_count`` = c generalizes "appears elsewhere" (the paper's
-    c = 2) to "occurs ≥ c times" (r10, VERDICT r9 item 4): a prefix
-    of the suffix at rank i occurs ≥ c times iff some window of c
-    CONSECUTIVE suffixes in suffix order containing rank i shares
-    it, and the shared-prefix length of a window equals the direct
-    LCP of its two EXTREMES (= the min of the adjacent LCPs between
-    them), so
+    c = 2) to "occurs ≥ c times": a prefix of the suffix at rank i
+    occurs ≥ c times iff some window of c CONSECUTIVE suffixes in
+    suffix order containing rank i shares it, and the shared-prefix
+    length of a window equals the direct LCP of its two EXTREMES (=
+    the min of the adjacent LCPs between them), so
 
         L_c(i) = max_{j = i−c+1 .. i}  lcp(s_j, s_{j+c−1})
 
     — one ``lead(s, c−1)`` LCP per rank (``e_j``), then a windowed
     max over the trailing c−1 ranks. c = 2 reduces to exactly the
     lag/lead form above (e_{i−1} = lcp with lag, e_i = lcp with
-    lead) and keeps the r9-measured plan; the generic path adds one
+    lead) and keeps that two-neighbor plan; the generic path adds one
     window expression on the SAME per-gram sort — no new exchange.
     The hot filter and the suppression-lag argument both carry over
     with ``count ≥ c`` (a position whose leading gram occurs < c
@@ -968,84 +966,18 @@ def maximal_duplicated_extents(
     (remove_duplicated_lines) — then one doc-keyed window for the
     suppression lag (over hot rows only; the lag(_p) == p−1 check
     keeps that exact). No single-partition window, no collect, no
-    UDF. Measured scale curve (tools/scale_curve.py, mangled sf0.1
-    replicas, min-of-2, local[32]): unfiltered 21.2 / 61.8 / 138.8 s
-    at 500k/1M/2M (1.64×-superlinear); with the hot filter 11.3 /
-    25.9 / 106.2 s — 1.9–2.4× faster and ~1.15×-linear through 1M.
-    The residual 1M→2M step is the single-JVM MEMORY regime, not the
-    plan: GC-locker stalls appear in the log, the step is
-    insensitive to slice volume (w_cap 6 vs 18 at 2M: 58.9 vs
-    72.0 s same-session), and per-gram partitions stay bounded — on
-    a multi-executor cluster the slice exchange spreads across
-    heaps (the gopher-signals 2M diagnosis, same class). The
-    single-JVM knob is MEASURED, not argued (r11, healthy-disk box,
-    interleaved min-of-2 at 2M): ``spark.sql.shuffle.partitions``
-    32 → 128 cuts the same run 111.5 → 61.4 s (1.8×) — smaller
-    sort partitions fit the task heap, which is exactly the
-    spill-aware sizing rule a 100 TB deployment applies
-    (SURVEY §2's "size shuffle partitions to executor memory");
-    code untouched, conf only.
+    UDF. On a single JVM the large-corpus cost is the hot-count
+    aggregate's reduce width: near-distinct grams make its reduce side
+    about corpus-sized, and it spills at a small
+    ``spark.sql.shuffle.partitions``.
 
-    ``sort_partitions`` ships PART of that knob per-kernel (r11
-    late-session): when set, the gram-window slice exchange and the
-    doc-window suppression exchange become explicit
-    ``repartition(sort_partitions, key)`` — hash partitioning on the
-    window key SATISFIES each window's required distribution, so
-    EnsureRequirements inserts no second exchange (same exchange
-    count, wider; result identical by construction — per-key groups
-    never split; both pinned in the knob test). What the parameter
-    canNOT reach is the hot-count groupBy's REDUCE width — an
-    aggregation exchange always follows the session conf, and a
-    repartition before it would forfeit map-side combine (the wrong
-    trade on dup-heavy real corpora). Measured decomposition
-    (time-varying box, every comparison interleaved min-of-2 at 2M
-    docs): conf 32→128 reproduced **135.1 → 72.9 s (1.85×)**;
-    conf32+knob128 vs conf128 read 130.2 vs 87.4 s — i.e. on the
-    curve corpus (per-copy-mangled ⇒ grams near-distinct ⇒ the
-    count agg's reduce side is ~corpus-volume and spills at width
-    32) the session conf remains the full lever, exactly the
-    spill-aware deployment rule the module prescribes; the knob
-    covers the window share for mixed workloads whose session conf
-    must stay small. Default ``None`` keeps the gated plan
-    byte-identical to r10's.
-
-    The FULL lever is now in the API (r12, VERDICT r11 item 4):
-    ``session.scoped_shuffle_partitions(spark, 128)`` — a set/
-    restore context manager scoping the session conf around the
-    job's ACTION, which is the only thing that reaches the
-    hot-count aggregate's reduce width. Deployment recipe::
-
-        from convert_parquet_to_csv_spark.session import (
-            scoped_shuffle_partitions,
-        )
-        with scoped_shuffle_partitions(spark, 128):
-            maximal_duplicated_extents(docs).write.parquet(dst)
-
-    Results are bit-identical at any width (test-pinned). The r12
-    optimization round measured the recipe END-TO-END at 2M curve
-    docs (interleaved min-of-2, local[32], 16g driver, degraded-disk
-    box — both variants share it): default conf 32 = 156.4 s vs
-    ``scoped_shuffle_partitions(spark, 128)`` = 92.6 s — **1.69×**,
-    reproducing the r11 conf-only decomposition (111.5 → 61.4 s
-    healthy box; 135.1 → 72.9 s time-varying box) through the
-    shipped API. Numbers also in OPTIMIZATION_r12.md.
-
-    ``count_partitions`` (r13, VERDICT r12 item 1) supersedes the
-    recipe with an IN-PLAN form: it hash-repartitions the projected
-    8-byte gram-key stream before the hot-count groupBy, so the
-    count's reduce width no longer follows the session conf at all.
-    Measured at 2M curve docs (interleaved min-of-2, conf 32,
-    ``tools/r13_ab/extents_inplan_ab.py``): scoped recipe 93.6 s vs
-    ``count_partitions=128`` alone **83.6 s** — the conf recipe's
-    entire win, plus the forfeited-combine bytes it feared turning
-    out cheaper than the conf dependence, with the session conf
-    untouched (mixed workloads keep their width). The trade is the
-    map-side combine below that one exchange (see the inline note);
-    on near-distinct gram populations — crawl text, and exactly the
-    corpora where the count's reduce state is the problem — the
-    combine reduces ~nothing, and on dup-heavy corpora the default
-    ``None`` path's conf-width aggregate is already small. Default
-    ``None`` keeps the gated plan byte-identical.
+    ``count_partitions`` hash-repartitions the projected 8-byte gram
+    keys before the hot count, so the count's reduce width no longer
+    follows the session conf; results are identical at any width.
+    The trade is the map-side combine below that exchange, which
+    saves almost nothing on near-distinct crawl-text grams. At 2M
+    mangled docs with conf 32, ``count_partitions=128`` took 83.6 s
+    against 93.6 s for a session conf of 128.
     """
     slice_len = k + w_cap
     base = df.select(id_col, tokens(text_col).alias("_tk")).filter(
@@ -1073,27 +1005,9 @@ def maximal_duplicated_extents(
     # the filter cuts the sorted volume to the duplicated fraction.
     if min_count < 2:
         raise ValueError("min_count must be >= 2")
-    # ``count_partitions`` (r13, VERDICT r12 item 1): the IN-PLAN form
-    # of the hot-count reduce-width lever. An aggregation exchange
-    # always runs at the session conf width; hash-repartitioning the
-    # PROJECTED 8-byte key stream on ``_gh`` first satisfies the
-    # aggregate's ClusteredDistribution, so the count runs at the
-    # requested width with no second exchange. The trade is explicit:
-    # the repartition exchange ships one raw row per position (no
-    # map-side combine below it) — on near-distinct gram populations
-    # (crawl text, the mangled curve corpus) partial aggregation
-    # reduces ~nothing so the raw 8-byte stream costs the same bytes,
-    # while on dup-heavy corpora the combine would have compressed the
-    # exchange and the conf-width default is already fine (few
-    # distinct keys ⇒ small reduce state). Counts are width-invariant
-    # ⇒ results identical (test-pinned). Measured at 2M curve docs
-    # (interleaved min-of-2, conf 32, tools/r13_ab/extents_inplan_ab):
-    # scoped_shuffle_partitions(128) recipe 93.6 s vs count_partitions
-    # =128 alone **83.6 s** vs count+sort knobs both 85.6 s — the
-    # in-plan knob BEATS the session-conf recipe, and the hot-count
-    # width is the entire lever (the r12 decomposition's conf32+window
-    # -knob128 reading, 130.2 s, showed the windows alone carry ~none
-    # of it).
+    # ``count_partitions``: hash-repartitioning the projected key
+    # stream on ``_gh`` satisfies the aggregate's ClusteredDistribution,
+    # so the count runs at the requested width with no second exchange.
     hot_src = occ.select("_gh")
     if count_partitions is not None:
         if count_partitions < 1:
@@ -1106,14 +1020,10 @@ def maximal_duplicated_extents(
         .select("_gh")
     )
     occ = occ.join(hot, "_gh")
-    if sort_partitions is not None:
-        if sort_partitions < 1:
-            raise ValueError("sort_partitions must be >= 1")
-        occ = occ.repartition(sort_partitions, "_gh")
     # Order by the token ARRAY itself — element-wise lexicographic in
     # both engines. (A space-joined string is NOT order-equivalent
     # when tokens contain non-whitespace chars below 0x20 — legal in
-    # raw crawl text since \s+ splitting keeps \x01 etc.; review r9.)
+    # raw crawl text since \s+ splitting keeps \x01 etc.)
     wg = Window.partitionBy("_gh").orderBy("_s")
     lag_s = F.lag("_s").over(wg)
     lead_s = F.lead("_s").over(wg)
@@ -1135,8 +1045,8 @@ def maximal_duplicated_extents(
         )
 
     if min_count == 2:
-        # the r9-measured plan: e_{i-1} = lcp with lag, e_i = lcp
-        # with lead — the windowed-max below, unrolled
+        # e_{i-1} = lcp with lag, e_i = lcp with lead — the
+        # windowed-max below, unrolled
         scored = occ.select(
             id_col,
             "_p",
@@ -1177,11 +1087,6 @@ def maximal_duplicated_extents(
     # and could never suppress; requiring lag(_p) == p−1 alongside
     # the L comparison is therefore exact.
     wd = Window.partitionBy(id_col).orderBy("_p")
-    if sort_partitions is not None:
-        # widen the suppression window's exchange too — the conf A/B
-        # widened every exchange, and capturing only the gram window
-        # left half the win on the table (measured below)
-        scored = scored.repartition(sort_partitions, id_col)
     return (
         scored.withColumn("_pprev", F.lag("_p").over(wd))
         .withColumn("_lprevraw", F.lag("_l").over(wd))

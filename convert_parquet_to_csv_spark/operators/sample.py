@@ -22,10 +22,10 @@ never funnels them through the driver merge by accident):
 ``threshold``
     Two-phase for huge n where a driver-side merge of n rows is too
     big: assign r=rand(seed), keep r below an over-sampled cutoff
-    (n/N · safety), then take the exact n smallest r via window
-    ``row_number`` over a *range-partitioned* sort of the tiny
-    filtered set. Scales to any n; costs one count + one narrow
-    filter + one sort of ~n·safety rows.
+    (n/N · safety), then take the exact n smallest r by ranking a
+    *range-partitioned*, partition-sorted copy of the tiny filtered
+    set. Scales to any n; costs one count + one narrow filter + one
+    sort of ~n·safety rows.
 
 ``hash``
     Deterministic pseudo-random order by ``md5(key)`` — no RNG at
@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from convert_parquet_to_csv_spark.sources.io_ops import _with_row_index
 
 DEFAULT_SEED = 721  # the reference's seed (utils.py:73)
 
@@ -169,28 +171,18 @@ def _take_n_smallest(df: DataFrame, order_col: str, n: int) -> DataFrame:
 
     A bare ``Window.orderBy`` moves every row to a single partition; at
     large n that is the bottleneck. Instead: range-partition on the
-    order column, sort within partitions, then turn per-partition row
-    numbers into *global* ranks by adding broadcast per-partition
-    offsets — only the tiny counts table ever reaches the driver.
+    order column and sort within partitions, so partition-then-row
+    order IS global order, and rank rows with the shared contiguous
+    row index (:func:`_with_row_index` — per-partition offsets, only
+    the tiny counts table reaches the driver).
     """
-    ranged = df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, order_col)
-    part = ranged.withColumn("_pid", F.spark_partition_id())
-    counts = part.groupBy("_pid").count().collect()
-    # Partition ids from repartitionByRange are ordered by range bounds,
-    # so cumulative counts in pid order are global-rank offsets.
-    offsets, acc = [], 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets.append((row["_pid"], acc))
-        acc += row["count"]
-    offsets_df = df.sparkSession.createDataFrame(
-        offsets, "_pid INT, _offset LONG"
-    )
-    w = Window.partitionBy("_pid").orderBy(order_col)
+    ordered = df.repartitionByRange(
+        df.sparkSession.sparkContext.defaultParallelism, order_col
+    ).sortWithinPartitions(order_col)
     return (
-        part.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(offsets_df), "_pid")
-        .filter(F.col("_rn") + F.col("_offset") <= n)
-        .drop("_pid", "_rn", "_offset")
+        _with_row_index(ordered, "_rank")
+        .filter(F.col("_rank") < n)
+        .drop("_rank")
     )
 
 

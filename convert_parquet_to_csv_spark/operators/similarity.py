@@ -15,7 +15,7 @@ Three strategies, increasing scale-fitness:
   query touches |vectors|·nprobe/C instead of |vectors|.
 
 All pure DataFrame expressions (functions/vectors.py dot products are
-codegen'd ``aggregate``/``zip_with``); no UDFs, no collect of vector
+``aggregate``/``zip_with`` folds); no UDFs, no collect of vector
 data — only centroid sets (≤ a few thousand rows) are broadcast.
 """
 
@@ -46,25 +46,14 @@ def topk_bruteforce(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     exclude_self: bool = True,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, similarity).
 
     ``queries`` must be broadcast-small (it is hint-broadcast); the
     big side streams — no shuffle of the vector table, one window per
-    query partition for the top-k.
-
-    ``dim`` (r13, VERDICT r12 item 6): statically-known vector length
-    routes the cosine through the unrolled form — bit-identical on
-    length-``dim`` vectors (functions/vectors.cosine_similarity).
-    MEASURED NEGATIVE at this repo's 64-dim embeddings
-    (tools/r13_ab/ivf_dim_ab.py, interleaved min-of-4): the 3×64-term
-    unroll builds a ~1200-node expression per cosine (plan text 5 K →
-    23 K chars) and ran 0.56 → 2.15 s on this gate — the opposite of
-    the PQ dsub=2 unroll's 2.4× win; expression size, not just
-    HOF-vs-codegen, decides. No caller passes it at 64 dims; the
-    parameter stays for SMALL static dims (the PQ precedent) with
-    default ``None`` = the shipped HOF plan.
+    query partition for the top-k. The cosine is the
+    ``zip_with``/``aggregate`` form of
+    :func:`~convert_parquet_to_csv_spark.functions.vectors.cosine_similarity`.
     """
     q = queries.select(
         F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qv")
@@ -72,7 +61,7 @@ def topk_bruteforce(
     scored = (
         vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v"))
         .crossJoin(F.broadcast(q))
-        .withColumn("similarity", cosine_similarity("_qv", "_v", dim))
+        .withColumn("similarity", cosine_similarity("_qv", "_v"))
     )
     if exclude_self:
         scored = scored.filter(F.col("neighbor_id") != F.col(query_id_col))
@@ -275,9 +264,6 @@ def topk_lsh(
     scored = (
         candidates.join(v, "neighbor_id")
         .join(F.broadcast(q), query_id_col)
-        # NOT dim-unrolled despite dim being in scope: the r13 A/B
-        # measured the 64-term cosine unroll as a NEGATIVE (see
-        # topk_bruteforce's dim docstring) — the HOF rescore stays.
         .withColumn("similarity", cosine_similarity("_qv", "_v"))
     )
     if exclude_self:
@@ -302,7 +288,6 @@ def _assign_to_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_probe: int = 1,
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-``n_probe``-cosine centroid assignment (broadcast,
     deterministic).
@@ -320,7 +305,7 @@ def _assign_to_centroids(
     by tests/test_similarity.py::test_semdedup_multiprobe.
     """
     scored = vectors.crossJoin(F.broadcast(centroids)).withColumn(
-        "_csim", cosine_similarity(vec_col, "_cv", dim)
+        "_csim", cosine_similarity(vec_col, "_cv")
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), F.asc("_list_id"))
     return (
@@ -335,7 +320,6 @@ def ivf_index(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(centroids, assigned): deterministic coarse quantizer.
 
@@ -352,9 +336,7 @@ def ivf_index(
             F.col(id_col).alias("_list_id"), F.col(vec_col).alias("_cv")
         )
     )
-    assigned = _assign_to_centroids(
-        vectors, centroids, id_col, vec_col, dim=dim
-    )
+    assigned = _assign_to_centroids(vectors, centroids, id_col, vec_col)
     return centroids, assigned
 
 
@@ -369,36 +351,26 @@ def topk_ivf(
     query_id_col: str = "query_id",
     exclude_self: bool = True,
     kmeans_iters: int = 0,
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k probing the nprobe nearest inverted lists.
 
     ``kmeans_iters > 0`` refines the sampled centroids with that many
     deterministic spherical-Lloyd rounds before assignment — tighter
     lists, better recall-per-probe at the cost of the training scans.
-
-    ``dim`` (r13, VERDICT r12 item 6): unrolls every cosine
-    (centroid assignment, query-probe ranking, candidate scoring) —
-    bit-identical on length-``dim`` vectors, but a MEASURED NEGATIVE
-    at 64 dims (1.67 → 6.48 s on this gate; see topk_bruteforce's
-    dim note). Default ``None`` = the shipped HOF plan; no caller
-    passes it at 64 dims.
+    Centroid assignment, query-probe ranking and candidate scoring all
+    use the same ``zip_with``/``aggregate`` cosine.
     """
-    centroids, assigned = ivf_index(
-        vectors, n_centroids, id_col, vec_col, dim=dim
-    )
+    centroids, assigned = ivf_index(vectors, n_centroids, id_col, vec_col)
     if kmeans_iters > 0:
         centroids = kmeans_refine_centroids(
-            vectors, centroids, kmeans_iters, id_col, vec_col, dim=dim
+            vectors, centroids, kmeans_iters, id_col, vec_col
         )
-        assigned = _assign_to_centroids(
-            vectors, centroids, id_col, vec_col, dim=dim
-        )
+        assigned = _assign_to_centroids(vectors, centroids, id_col, vec_col)
     q = queries.select(
         F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qv")
     )
     qc = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "_csim", cosine_similarity("_qv", "_cv", dim)
+        "_csim", cosine_similarity("_qv", "_cv")
     )
     wq = Window.partitionBy(query_id_col).orderBy(
         F.desc("_csim"), F.asc("_list_id")
@@ -415,7 +387,7 @@ def topk_ivf(
             "_list_id",
         )
         .join(F.broadcast(probes), "_list_id")
-        .withColumn("similarity", cosine_similarity("_qv", "_v", dim))
+        .withColumn("similarity", cosine_similarity("_qv", "_v"))
     )
     if exclude_self:
         scored = scored.filter(F.col("neighbor_id") != F.col(query_id_col))
@@ -470,7 +442,6 @@ def kmeans_refine_centroids(
     n_iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Refine IVF centroids with deterministic spherical k-means.
 
@@ -492,7 +463,7 @@ def kmeans_refine_centroids(
 
     for _ in range(n_iters):
         assigned = _assign_to_centroids(
-            vectors, centroids, id_col, vec_col, dim=dim
+            vectors, centroids, id_col, vec_col
         ).select("_list_id", vec_col)
         flat = assigned.select(
             "_list_id", F.posexplode(vec_col).alias("_pos", "_val")

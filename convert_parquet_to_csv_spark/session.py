@@ -137,42 +137,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Set/restore ``spark.sql.shuffle.partitions`` around a JOB —
-    the generic deployment recipe for reduce-width-bound stages
-    (r12, VERDICT r11 item 4). For the extents kernel specifically,
-    r13 shipped the better, in-plan form —
-    ``maximal_duplicated_extents(count_partitions=...)`` — which the
-    2M A/B measured FASTER than this scoped conf (83.6 vs 93.6 s,
-    tools/r13_ab/extents_inplan_ab.py); this context manager remains
-    for kernels whose aggregate width has no in-plan knob.
-
-    Spark reads this conf at ACTION time: lazy plans execute under
-    whatever value is live when the action runs, so the ``collect``
-    / ``write`` / ``count`` must happen INSIDE the scope —
-
-        with scoped_shuffle_partitions(spark, 128):
-            maximal_duplicated_extents(docs).write.parquet(dst)
-
-    — and data persisted outside keeps the layout it materialized
-    with. Restores the prior value even on exception. Measured at
-    2M curve docs (interleaved min-of-2, healthy box, r11/r12):
-    32 → 128 cuts maximal_duplicated_extents 1.8-1.9×; the same
-    window has NO effect on gopher_repetition (different tail
-    cause, curation.py:623) — scope it per kernel, not globally.
-    """
-    if n < 1:
-        raise ValueError("shuffle partition count must be >= 1")
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield spark
-    finally:
-        spark.conf.set(key, old)

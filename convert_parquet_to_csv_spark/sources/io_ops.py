@@ -25,7 +25,6 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 # SURVEY.md §2.2 — the dialect the reference's engines agree on.
 #
@@ -239,11 +238,9 @@ def write_csv(
     header: bool = True,
     max_records_per_file: int | None = None,
     single_file: bool = False,
-    timestamp_format: str = CSV_TIMESTAMP_FORMAT,
     null_value: str = "",
     mode: str = "overwrite",
     with_index: bool = False,
-    fast_path: bool = True,
 ) -> None:
     """CSV sink with the reference's dialect surface (SURVEY.md §2.2).
 
@@ -258,20 +255,22 @@ def write_csv(
     - ``with_index`` — the pandas kernel's leftover integer index
       column (utils.py:160, default ``index=True``); off by default as
       SURVEY.md §2.2 prescribes. Uses a zero-based contiguous id
-      computed scalably (per-partition offsets, no global sort).
-    - ``fast_path`` — pre-render every field to text in whole-stage
-      codegen (see :func:`_stringify_for_csv`; ~4-5× faster sink,
-      byte-identical output). Disable only when a custom
-      ``timestamp_format`` must be honored by the writer itself.
+      in source row order (:func:`_with_row_index`: per-partition
+      offsets, no shuffle, no global sort).
+
+    Every field is rendered to text in whole-stage codegen before the
+    writer sees it (:func:`_stringify_for_csv`), so timestamps follow
+    :data:`CSV_TIMESTAMP_FORMAT` and the writer only quotes and joins;
+    the writer options still carry the full :data:`CSV_DEFAULTS`
+    dialect.
     """
     if with_index:
         df = _with_row_index(df)
-    if fast_path and timestamp_format == CSV_TIMESTAMP_FORMAT:
-        df = _stringify_for_csv(df)
+    df = _stringify_for_csv(df)
     writer = (
         df.coalesce(1) if single_file else df
     ).write.mode(mode).option("header", str(header).lower())
-    writer = writer.option("timestampFormat", timestamp_format)
+    writer = writer.option("timestampFormat", CSV_TIMESTAMP_FORMAT)
     writer = writer.option("nullValue", null_value)
     writer = writer.option("escape", '"')
     # The writer trims cell whitespace by default — no reference engine
@@ -289,48 +288,40 @@ def write_csv(
 
 
 def _with_row_index(df: DataFrame, name: str = "index") -> DataFrame:
-    """Contiguous 0-based row index without a global sort.
+    """Prepend a contiguous 0-based row index in partition-then-row
+    order, without a shuffle or a global sort.
 
-    ``monotonically_increasing_id`` is non-contiguous across partitions;
-    a windowed ``row_number()`` over it would funnel everything through
-    one partition. Instead: per-partition counter + broadcast of
-    per-partition offsets — O(1) driver data, no shuffle of the rows.
+    ``monotonically_increasing_id`` is ``(partition << 33) + row``, so
+    its low 33 bits are the row's position inside its partition. One
+    small job collects the per-partition row counts (rows == number of
+    partitions); their running sums become a literal offset array, and
+    the index is ``offsets[spark_partition_id()] + (id & (2^33 − 1))``
+    — one projection, no window, no join. Assumes < 2^33 rows per
+    partition.
 
-    CONSTRAINT (review finding): the offsets job and the final job
-    each evaluate ``df``'s plan, so per-partition contents must be
-    identical across the two evaluations. That holds for deterministic
-    scans (the CSV-export caller), but NOT after a shuffle whose
-    runtime partitioning can differ between jobs (AQE coalesce, rand).
-    Guard: any plan containing an Exchange is pinned with an eager
-    ``localCheckpoint`` first, so both jobs read the same materialized
-    blocks instead of re-running the non-deterministic stage.
+    CONSTRAINT: the counts job and the final job each evaluate ``df``'s
+    plan, so per-partition contents must be identical across the two
+    evaluations. That holds for deterministic scans (the CSV-export
+    caller), but NOT after a shuffle whose runtime partitioning can
+    differ between jobs (AQE coalesce, rand). Guard: any plan
+    containing an Exchange is pinned with an eager ``localCheckpoint``
+    first, so both jobs read the same materialized blocks in the same
+    order.
     """
-    spark = df.sparkSession
     plan = df._jdf.queryExecution().executedPlan().toString()
     if "Exchange" in plan:
         df = df.localCheckpoint(eager=True)
-    part = df.withColumn("_pid", F.spark_partition_id()).withColumn(
-        "_mid", F.monotonically_increasing_id()
+    counts = dict(
+        df.groupBy(F.spark_partition_id().alias("_pid")).count().collect()
     )
-    # Tiny per-partition row counts; collected to build offsets.
-    counts = (
-        part.groupBy("_pid").count().orderBy("_pid").collect()
-    )
-    offsets, acc = {}, 0
-    for row in counts:
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    offsets_df = spark.createDataFrame(
-        [(int(k), int(v)) for k, v in offsets.items()], "_pid INT, _offset LONG"
-    )
-    w_rank = F.row_number().over(Window.partitionBy("_pid").orderBy("_mid"))
-    out = (
-        part.withColumn("_rn", w_rank - F.lit(1))
-        .join(F.broadcast(offsets_df), "_pid")
-        .withColumn(name, F.col("_offset") + F.col("_rn"))
-        .drop("_pid", "_mid", "_rn", "_offset")
-    )
-    return out.select(name, *df.columns)
+    offsets, acc = [], 0
+    for pid in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
+    offset_of = F.expr("array(" + ", ".join(f"{o}L" for o in offsets) + ")")
+    row_in_part = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+    index = offset_of[F.spark_partition_id()] + row_in_part
+    return df.select(index.alias(name), *df.columns)
 
 
 def write_parquet(

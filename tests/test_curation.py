@@ -1931,3 +1931,144 @@ def test_noise_gate_prevalidation_duckdb_replay(spark):
         ).fetchall()
     )
     assert want != clean_w
+
+
+# hashed_ngram_buckets(hash_fn='md5'): the exploded-position codegen
+# form vs a reference per-doc ngrams() + flatten + explode form
+# (byte-identical gram strings => identical md5 buckets), on edge
+# cases the fixtures may not exercise.
+EDGE_DOCS = [
+    (1, "the cat sat on the mat"),
+    (2, ""),  # no tokens
+    (3, None),  # NULL text
+    (4, "   "),  # whitespace-only -> no tokens
+    (5, "single"),  # 1 token: unigram only, no bigram
+    (6, "a  b\t\tc\nd"),  # multi-whitespace separators collapse
+    (7, "Mixed CASE Tokens mixed case tokens"),  # lowercasing
+    (8, "naïve café 東京 emoji🎉 tail"),  # non-ASCII bytes through md5
+    (9, "x " * 200),  # long repetitive doc (within-doc duplicates)
+    (None, "null id row keeps flowing"),  # NULL id not dropped here
+]
+
+
+def _ref_md5_buckets(df, num_buckets, ngram_ns):
+    """Per-doc ngrams() string arrays, flattened and exploded, then
+    md5 -> 15-hex-digit parse -> pmod."""
+    grams = F.flatten(
+        F.array(*[ngrams("text", n=n) for n in ngram_ns])
+    )
+    return df.select(
+        F.col("doc_id"), F.explode(grams).alias("_g")
+    ).select(
+        "doc_id",
+        F.pmod(
+            F.conv(
+                F.substring(F.md5(F.col("_g")), 1, 15), 16, 10
+            ).cast("long"),
+            F.lit(num_buckets),
+        ).alias("_b"),
+    )
+
+
+def test_md5_bucket_rewrite_matches_ngrams_reference(spark):
+    df = spark.createDataFrame(EDGE_DOCS, "doc_id LONG, text STRING")
+    for ngram_ns in [(1, 2), (2,), (1, 2, 3)]:
+        got = (
+            C.hashed_ngram_buckets(
+                df, "doc_id", "text", 512, ngram_ns, "md5"
+            )
+            .groupBy("doc_id", "_b")
+            .count()
+            .orderBy("doc_id", "_b")
+            .collect()
+        )
+        want = (
+            _ref_md5_buckets(df, 512, ngram_ns)
+            .groupBy("doc_id", "_b")
+            .count()
+            .orderBy("doc_id", "_b")
+            .collect()
+        )
+        assert got == want, f"ngram_ns={ngram_ns}"
+
+
+def test_gopher_gram_masses_hand_computed(spark):
+    # "w w w w" (4x 1-char token): top 2-gram "w w" count 3, len 3 ->
+    # tm2 = 9; n=5+ grams need >= 5 tokens, so no dup mass.
+    df = spark.createDataFrame(
+        [(1, "w w w w"), (2, "a b"), (3, "")], "doc_id LONG, text STRING"
+    )
+    rows = {
+        r.doc_id: r
+        for r in C._gopher_gram_masses(df, "doc_id", "text").collect()
+    }
+    assert rows[1]._tm2 == 9  # "w w" occurs 3x, 3 chars
+    assert rows[1]._dm5 == 0
+    assert rows[2]._tm2 == 3  # "a b" once, 3 chars, count 1
+    assert rows[2]._dm5 == 0 and rows[2]._dm6 == 0
+    assert 3 not in rows  # token-less docs absent (caller coalesces)
+
+
+SPAN_DOCS = [
+    (1, "the same old footer text here and unique alpha words"),
+    (2, "other page body the same old footer text here trailing"),
+    (3, "third page the same old footer text here more stuff"),
+    (4, "totally unrelated content nothing shared at all"),
+    (5, ""),
+    (6, None),
+]
+
+
+def _span_candidate_grams(df, n, max_docs):
+    """A fresh DataFrame with the same plan as the candidate-gram join
+    ``remove_duplicated_spans`` persists internally: if that cache
+    outlived the call, this plan would be answered from it."""
+    arr = df.select("doc_id", F.split(F.col("text"), " ").alias("_a"))
+    starts = F.when(
+        F.size("_a") >= n, F.sequence(F.lit(0), F.size("_a") - n)
+    ).otherwise(F.array().cast("array<int>"))
+    grams = arr.select(
+        "doc_id", F.explode(starts).alias("pos"), F.col("_a")
+    ).select(
+        "doc_id",
+        "pos",
+        F.xxhash64(F.expr(f"slice(_a, pos + 1, {n})")).alias("gram"),
+    )
+    cand = (
+        grams.groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("_ct"))
+        .filter(F.col("_ct") > max_docs)
+        .select("gram")
+    )
+    return grams.join(cand, "gram")
+
+
+def test_span_dedup_releases_cache_in_operator(spark, capsys):
+    df = spark.createDataFrame(SPAN_DOCS, "doc_id LONG, text STRING")
+    spark.catalog.clearCache()
+    out = C.remove_duplicated_spans(df, n=3, max_docs=2)
+    rows = {r.doc_id: r for r in out.collect()}
+    # the shared footer span is removed from all three carriers
+    for i in (1, 2, 3):
+        assert "same old footer text here" not in (rows[i].clean_text or "")
+        assert rows[i].n_removed > 0
+    assert rows[4].clean_text == SPAN_DOCS[3][1]
+    assert rows[5].clean_text == "" and rows[5].n_removed == 0
+    assert rows[6].clean_text is None and rows[6].n_kept == 0
+    # no InMemoryRelation outlives the call: a fresh DataFrame over
+    # the operator's candidate-gram plan is not served from a cache
+    probe = _span_candidate_grams(df, n=3, max_docs=2)
+    capsys.readouterr()
+    probe.explain()
+    assert "InMemoryRelation" not in capsys.readouterr().out
+    # ...and the probe does see such a cache when one exists
+    pinned = _span_candidate_grams(df, n=3, max_docs=2).persist()
+    try:
+        _span_candidate_grams(df, n=3, max_docs=2).explain()
+        assert "InMemoryRelation" in capsys.readouterr().out
+    finally:
+        pinned.unpersist()
+    # the returned plan stays re-runnable after the internal unpersist
+    assert {r.doc_id: r.n_removed for r in out.collect()} == {
+        i: rows[i].n_removed for i in rows
+    }

@@ -114,6 +114,23 @@ def test_with_row_index_pins_shuffled_input(spark):
     assert "Exchange" not in plan
 
 
+def test_with_row_index_follows_source_row_order(spark):
+    """The index is the row's position in partition-then-row order:
+    over a multi-partition range it equals ``id``, both on a plain
+    scan and behind a range Exchange (the checkpointed branch)."""
+    from convert_parquet_to_csv_spark.sources.io_ops import _with_row_index
+
+    scan = spark.range(0, 3000, 1, 7)
+    ranged = (
+        spark.range(3000).repartitionByRange(5, "id").sortWithinPartitions("id")
+    )
+    for df in (scan, ranged):
+        out = _with_row_index(df)
+        assert out.columns == ["index", "id"]
+        assert out.filter(F.col("index") != F.col("id")).count() == 0
+        assert out.count() == 3000
+
+
 def test_csv_dialect_nulls_and_quotes(spark, tmp_path):
     """SURVEY.md §2.2: empty-string nulls, minimal quoting, embedded
     separators/quotes/newlines survive a round-trip."""

@@ -496,57 +496,11 @@ def test_incremental_contamination_merge_semantics(spark):
     assert got[3][1] == 101
 
 
-def test_sort_partitions_knob_identity_and_plan(spark, sf_small):
-    """The shipped multi-executor knob (r11: conf A/B measured 1.8x
-    at 2M docs): ``sort_partitions`` must (a) leave the result
-    BIT-identical on both the c=2 and generic-c paths — hash
-    partitioning never splits a gram group — and (b) REPLACE the
-    gram window's ensure-requirements exchange rather than adding a
-    second one (same shuffle count, wider width)."""
+def test_extents_identical_at_128_shuffle_partitions(spark, sf_small):
+    """Raising ``spark.sql.shuffle.partitions`` to 128 around the
+    action (the width every exchange of the default plan follows)
+    must leave the extents BIT-identical."""
     import os
-
-    docs = spark.read.parquet(
-        os.path.join(sf_small, "documents.parquet")
-    )
-
-    def _exchanges(df) -> list[str]:
-        # BEFORE execution — once an AdaptiveSparkPlan runs, its
-        # toString prints Final AND Initial plans (doubled lines).
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return [
-            ln.strip()[:90]
-            for ln in plan.splitlines()
-            if "Exchange hashpartitioning" in ln
-        ]
-
-    for c in (2, 3):
-        base = D.maximal_duplicated_extents(docs, min_count=c)
-        knob = D.maximal_duplicated_extents(
-            docs, min_count=c, sort_partitions=64
-        )
-        eb, ek = _exchanges(base), _exchanges(knob)
-        assert sorted(map(tuple, base.collect())) == sorted(
-            map(tuple, knob.collect())
-        )
-        assert len(eb) == len(ek)  # replaced, not added
-        # both the gram-window and the doc-window exchanges widen
-        assert (
-            sum("64), REPARTITION_BY_NUM" in x for x in ek) == 2
-        )
-
-
-def test_scoped_shuffle_partitions_recipe(spark, sf_small):
-    """The r12 completion of the reduce-width lever (VERDICT r11
-    item 4): session.scoped_shuffle_partitions scopes the session
-    conf around a job's ACTION — the only thing that reaches the
-    hot-count aggregate's reduce width — and must (a) set and
-    restore the conf (also on exception), (b) leave the extents
-    result BIT-identical at any width."""
-    import os
-
-    from convert_parquet_to_csv_spark.session import (
-        scoped_shuffle_partitions,
-    )
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
@@ -556,25 +510,49 @@ def test_scoped_shuffle_partitions_recipe(spark, sf_small):
     base = sorted(
         map(tuple, D.maximal_duplicated_extents(docs).collect())
     )
-    with scoped_shuffle_partitions(spark, 128):
-        assert spark.conf.get(key) == "128"
+    spark.conf.set(key, "128")
+    try:
         wide = sorted(
             map(tuple, D.maximal_duplicated_extents(docs).collect())
         )
-    assert spark.conf.get(key) == before
+    finally:
+        spark.conf.set(key, before)
     assert wide == base
-    # restore-on-exception
-    try:
-        with scoped_shuffle_partitions(spark, 8):
-            assert spark.conf.get(key) == "8"
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get(key) == before
-    # validation
-    try:
-        with scoped_shuffle_partitions(spark, 0):
-            raise AssertionError("must not enter")
-    except ValueError:
-        pass
-    assert spark.conf.get(key) == before
+
+
+EXTENT_DOCS = [
+    (1, "a b c d e f g a b c d e f g"),  # within-doc repeat
+    (2, "x a b c d e f g y"),  # cross-doc repeat of the same run
+    (3, "a b c d e f g"),  # exactly the shared run
+    (4, ""),  # empty
+    (5, None),  # NULL text
+    (6, "one two three"),  # shorter than k
+    (7, "p q r s t u v w"),  # no duplicated grams
+]
+
+
+def test_extents_count_partitions_result_invariant(spark):
+    df = spark.createDataFrame(EXTENT_DOCS, "doc_id long, text string")
+
+    def rows(out):
+        return sorted(tuple(r) for r in out.collect())
+
+    base = rows(D.maximal_duplicated_extents(df, k=3, w_cap=6))
+    assert base, "fixture must produce extents"
+    for n in (1, 5):
+        got = rows(
+            D.maximal_duplicated_extents(
+                df, k=3, w_cap=6, count_partitions=n
+            )
+        )
+        assert got == base, n
+    # generic min_count path too (two-window variant)
+    base3 = rows(
+        D.maximal_duplicated_extents(df, k=3, w_cap=6, min_count=3)
+    )
+    got3 = rows(
+        D.maximal_duplicated_extents(
+            df, k=3, w_cap=6, min_count=3, count_partitions=3
+        )
+    )
+    assert got3 == base3

@@ -61,6 +61,21 @@ def test_threshold_small_n_still_exact(spark, orders):
         assert sample_exact_n(orders, n, strategy="threshold").count() == n
 
 
+def test_threshold_returns_the_n_smallest_draws(spark):
+    """The threshold path must return exactly the rows a full
+    ``orderBy(rand(seed)).limit(n)`` returns. Its per-partition counts
+    and its ranking run as separate jobs, and a range exchange samples
+    its bounds afresh in each job, so both must read one pinned
+    partitioning (an unpinned pair returned fewer than n rows)."""
+    df = spark.range(20_000)
+    for n, seed in ((3000, 6), (6000, 7)):
+        got = sample_exact_n(df, n, seed=seed, strategy="threshold")
+        want = df.withColumn("_r", F.rand(seed)).orderBy("_r").limit(n)
+        assert sorted(r.id for r in got.collect()) == sorted(
+            r.id for r in want.collect()
+        ), (n, seed)
+
+
 def test_threshold_releases_cache(spark, orders):
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     sample_exact_n(orders, 137, strategy="threshold").count()

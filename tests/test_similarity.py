@@ -10,7 +10,9 @@ from pyspark.sql import functions as F
 from convert_parquet_to_csv_spark.functions.vectors import (
     cosine_similarity,
     dot_product,
+    dot_product_fixed,
     l2_norm,
+    sq_l2_fixed,
 )
 from convert_parquet_to_csv_spark.operators import similarity as S
 
@@ -752,3 +754,94 @@ def test_bitext_sparse_candidates_unbiased_denominator(spark):
     # and the value differs from the old fixed-2k form — the bias
     # this fix removes (2k = 8 vs true counts 4)
     assert got[(1, 10)] != 0.9 / ((sx[1][0] + sy[10][0]) / 8.0)
+
+
+# dot_product_fixed / sq_l2_fixed: unrolled F.get arithmetic vs the
+# zip_with/aggregate forms — bit-identical doubles, including
+# NULL-element and one-side-short propagation.
+VEC_ROWS = [
+    (1, [1.0, 2.0, 3.0, 4.0], [0.5, -1.5, 2.5, -3.5]),
+    (2, [0.0, 0.0, 0.0, 0.0], [1.0, 1.0, 1.0, 1.0]),
+    (3, [1e30, -1e30, 1e-30, 7.0], [2.0, 2.0, 2.0, 2.0]),  # magnitude mix
+    (4, [1.0, None, 3.0, 4.0], [1.0, 1.0, 1.0, 1.0]),  # NULL element
+    (5, [1.0, 2.0], [1.0, 1.0, 1.0, 1.0]),  # short left side
+    (6, None, [1.0, 1.0, 1.0, 1.0]),  # NULL array
+    (7, [-0.0, 0.0, -0.0, 0.0], [1.0, 1.0, 1.0, 1.0]),  # signed zeros
+    # BOTH sides short: the one case where the forms intentionally
+    # diverge — zip_with pads nothing and returns the finite 2-term
+    # sum, the unrolled form returns NULL (the safer output for an
+    # undersized vector). Asserted as a divergence below so the
+    # contract cannot drift silently.
+    (8, [1.0, 2.0], [3.0, 4.0]),
+]
+
+_VEC_SCHEMA = "id LONG, a ARRAY<FLOAT>, b ARRAY<FLOAT>"
+
+
+def test_dot_product_fixed_bitwise_matches_hof(spark):
+    df = spark.createDataFrame(VEC_ROWS, _VEC_SCHEMA)
+    rows = df.select(
+        "id",
+        dot_product("a", "b").alias("hof"),
+        dot_product_fixed("a", "b", 4).alias("unrolled"),
+    ).collect()
+    by_id = {r.id: r for r in rows}
+    for r in rows:
+        if r.id == 8:
+            continue  # the documented both-short divergence, below
+        # bitwise: both NULL or exactly equal doubles
+        assert (r.hof is None) == (r.unrolled is None), r
+        if r.hof is not None:
+            assert r.hof == r.unrolled, r
+    # NULL/one-side-short inputs must propagate to NULL in BOTH forms
+    assert by_id[4].hof is None and by_id[4].unrolled is None
+    assert by_id[5].hof is None and by_id[5].unrolled is None
+    assert by_id[6].hof is None and by_id[6].unrolled is None
+    # both-sides-short (id 8): intentional divergence — HOF sums the
+    # 2 available terms (1*3 + 2*4 = 11), unrolled declares NULL.
+    assert by_id[8].hof == 11.0 and by_id[8].unrolled is None
+
+
+def test_sq_l2_fixed_bitwise_matches_hof(spark):
+    df = spark.createDataFrame(VEC_ROWS, _VEC_SCHEMA)
+    hof = F.aggregate(
+        F.zip_with(
+            "a",
+            "b",
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    rows = df.select(
+        "id",
+        hof.alias("hof"),
+        sq_l2_fixed("a", "b", 4).alias("unrolled"),
+    ).collect()
+    for r in rows:
+        if r.id == 8:
+            # both-sides-short divergence (see dot test): HOF sums 2
+            # terms ((1-3)^2 + (2-4)^2 = 8), unrolled declares NULL.
+            assert r.hof == 8.0 and r.unrolled is None
+            continue
+        assert (r.hof is None) == (r.unrolled is None), r
+        if r.hof is not None:
+            assert r.hof == r.unrolled, r
+
+
+def test_cosine_similarity_null_and_short_inputs(spark):
+    """A NULL vector, a NULL element or an all-zero vector scores the
+    defined 0.0; a vector shorter than its partner scores NULL, never a
+    silent 0.0; two equally short vectors score their own cosine."""
+    df = spark.createDataFrame(VEC_ROWS, _VEC_SCHEMA)
+    got = {
+        r.id: r.c
+        for r in df.select(
+            "id", cosine_similarity("a", "b").alias("c")
+        ).collect()
+    }
+    assert got[2] == 0.0 and got[4] == 0.0 and got[6] == 0.0
+    assert got[5] is None
+    assert got[8] == pytest.approx(11 / (math.sqrt(5) * 5))
+    assert got[1] == pytest.approx(-9 / (math.sqrt(30) * math.sqrt(21)))
