@@ -25,17 +25,20 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # SURVEY.md §2.2 — the dialect the reference's engines agree on.
 #
-# ``[.SSSSSS]`` keeps sub-second digits only when present, matching
-# DuckDB/pandas rendering (reference utils.py:130-133); nulls render as
-# empty string in all five reference kernels.
+# TIMESTAMP text has sub-seconds only when present, always 6 digits
+# (``14:33:03.927490``; DuckDB's COPY trims to ``.92749``), rendered by
+# ``_stringify_for_csv``; ``[.SSSSSS]`` parses both forms on read.
+# Nulls render as empty string in all five reference kernels.
 CSV_TIMESTAMP_FORMAT = "yyyy-MM-dd HH:mm:ss[.SSSSSS]"
 CSV_DEFAULTS: dict[str, str] = {
     "header": "true",
     "nullValue": "",
     "timestampFormat": CSV_TIMESTAMP_FORMAT,
+    "dateFormat": "yyyy-MM-dd",  # the writer renders DATE columns itself
     "escape": '"',  # RFC-4180 double-quote escaping, like all 5 engines
     # Spark's CSV *writer* trims cell whitespace by default — no
     # reference engine does (found by the hypothesis roundtrip suite:
@@ -201,32 +204,37 @@ def _single_file_collapse(directory: str, target: str, spark: SparkSession, ext:
     fs.delete(dir_path, True)
 
 
+# The CSV writer renders these types byte-identically to cast(string).
+_WRITER_RENDERED = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.StringType, T.DateType,
+)
+
+
 def _stringify_for_csv(df: DataFrame) -> DataFrame:
-    """Project every column to its CSV text inside whole-stage codegen.
+    """Render to text the columns the CSV writer would not write in the
+    dialect; the writer renders the rest (``_WRITER_RENDERED``) itself.
 
-    The CSV writer's own per-field type conversion (timestamp/double
-    formatting in particular) runs outside codegen and dominates write
-    cost — measured 5-7 s for a 10M-row lineitem on local[32]. Moving
-    the conversion into a codegen'd projection and handing the writer
-    pre-made strings cuts the same write to ~1.35 s, beating the
-    reference's DuckDB kernel (1.7 s, BASELINE.md) at the same row
-    count. Rendering is unchanged: ``cast(string)`` uses the identical
-    Java ``toString`` for numerics, and timestamps get the
-    seconds-or-microseconds conditional rendering the reference
-    engines produce (SURVEY.md §2.2).
+    - TIMESTAMP: seconds, plus 6 sub-second digits only when there are
+      any (the writer would print ``.000000`` on whole seconds).
+    - TIMESTAMP_NTZ: ``cast(string)``, trailing zeros trimmed (the
+      writer: ISO ``T``, milliseconds).
+    - DECIMAL: ``cast(string)``, ``0.0000000000`` (the writer: ``0E-10``).
+    - BINARY: ``cast(string)``, UTF-8 text (the writer: ``[61 62]``).
+    - any other type: ``cast(string)`` (the writer rejects arrays, maps
+      and structs). With nothing to render ``df`` is returned as is.
     """
-    from pyspark.sql.types import TimestampType
-
+    if all(isinstance(f.dataType, _WRITER_RENDERED) for f in df.schema):
+        return df
     ts_fmt = "yyyy-MM-dd HH:mm:ss"
     cols = []
-    for field in df.schema.fields:
+    for field in df.schema:
         c = F.col(field.name)
-        if isinstance(field.dataType, TimestampType):
-            # Micros only when present, like DuckDB/pandas (utils.py:130-133).
+        if isinstance(field.dataType, T.TimestampType):
             c = F.when(
                 c == F.date_trunc("second", c), F.date_format(c, ts_fmt)
             ).otherwise(F.date_format(c, ts_fmt + ".SSSSSS"))
-        else:
+        elif not isinstance(field.dataType, _WRITER_RENDERED):
             c = c.cast("string")
         cols.append(c.alias(field.name))
     return df.select(*cols)
@@ -258,25 +266,16 @@ def write_csv(
       in source row order (:func:`_with_row_index`: per-partition
       offsets, no shuffle, no global sort).
 
-    Every field is rendered to text in whole-stage codegen before the
-    writer sees it (:func:`_stringify_for_csv`), so timestamps follow
-    :data:`CSV_TIMESTAMP_FORMAT` and the writer only quotes and joins;
-    the writer options still carry the full :data:`CSV_DEFAULTS`
-    dialect.
+    The writer renders numbers, booleans, strings and dates; the rest
+    are rendered first by :func:`_stringify_for_csv`. The options are
+    :data:`CSV_DEFAULTS` with ``header`` and ``null_value`` applied.
     """
     if with_index:
         df = _with_row_index(df)
     df = _stringify_for_csv(df)
-    writer = (
-        df.coalesce(1) if single_file else df
-    ).write.mode(mode).option("header", str(header).lower())
-    writer = writer.option("timestampFormat", CSV_TIMESTAMP_FORMAT)
-    writer = writer.option("nullValue", null_value)
-    writer = writer.option("escape", '"')
-    # The writer trims cell whitespace by default — no reference engine
-    # does (caught by tests/test_roundtrip_property.py: " " became "").
-    writer = writer.option("ignoreLeadingWhiteSpace", "false")
-    writer = writer.option("ignoreTrailingWhiteSpace", "false")
+    writer = (df.coalesce(1) if single_file else df).write.mode(mode).options(
+        **{**CSV_DEFAULTS, "header": str(header).lower(), "nullValue": null_value}
+    )
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     if single_file:
@@ -399,9 +398,9 @@ def convert_parquet_to_csv(
 
     ``repartition_to`` inserts one round-robin exchange before the sink
     to even out writer parallelism. Worth it when the source's split
-    sizes are skewed or fewer than the cluster's cores (measured 2.6×
-    on the 10M-row bench: oversubscribing writers ~2× per core hides
-    per-file close/fsync stalls); leave None when the scan already
+    sizes are skewed or fewer than the cluster's cores (2.6× on the
+    10M-row bench at 32 cores: oversubscribing writers ~2× per core
+    hides per-file close/fsync stalls); leave None when the scan already
     yields balanced splits — the exchange is pure cost then. At real
     scale prefer sizing ``spark.sql.files.maxPartitionBytes`` so the
     scan itself produces the right parallelism.

@@ -6,10 +6,13 @@ layers 1-2): CSV dialect options and parquet→csv→readback round-trips.
 
 from __future__ import annotations
 
+import datetime as dt
 import glob
 import os
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from convert_parquet_to_csv_spark.sources import (
@@ -175,6 +178,183 @@ def test_timestamp_rendering_roundtrip(spark, tmp_path):
     got = {r["id"]: r["ts"] for r in back.collect()}
     assert got[1] == dt.datetime(2024, 3, 1, 12, 30, 45)
     assert got[2] == dt.datetime(2024, 3, 1, 12, 30, 45, 123456)
+
+
+_GOLDEN_SCHEMA = (
+    "b TINYINT, s SMALLINT, i INT, l BIGINT, f FLOAT, d DOUBLE, "
+    "bo BOOLEAN, str STRING, dt DATE, dec DECIMAL(28,10), ts TIMESTAMP, "
+    "ntz TIMESTAMP_NTZ"
+)
+
+
+def _golden_rows():
+    from decimal import Decimal as D
+
+    def ts(*a):
+        return dt.datetime(*a, tzinfo=dt.timezone.utc)
+
+    ntz = dt.datetime
+    return [
+        (-128, -32768, -2**31, -2**63, 1.4e-45, -0.0, True, "a,b",
+         dt.date(1, 1, 1), D("0E-10"),
+         ts(2024, 3, 1, 12, 30, 45), ntz(2024, 3, 1, 12, 30, 45)),
+        (127, 32767, 2**31 - 1, 2**63 - 1, 3.4e38, float("nan"), False,
+         'say "hi"', dt.date(1582, 10, 10), D("1E-8"),
+         ts(2024, 3, 1, 12, 30, 45, 123456),
+         ntz(2024, 3, 1, 12, 30, 45, 123456)),
+        (0, 0, 0, 0, 0.0, float("inf"), None, "line\nbreak",
+         dt.date(9999, 12, 31), D("-12345678901234567.8901234567"),
+         ts(1998, 12, 1, 14, 33, 3, 927490),
+         ntz(1998, 12, 1, 14, 33, 3, 927490)),
+        (None, None, None, None, None, float("-inf"), True, "  padded  ",
+         None, None, None, None),
+        (1, 1, 1, 1, 1.5, 1.0e20, False, "", dt.date(1970, 1, 1),
+         D("1.5"), ts(1, 1, 1, 0, 0, 0), ntz(9999, 12, 31, 23, 59, 59, 999999)),
+        (2, 2, 2, 2, -2.5, 4.9e-324, True, None, dt.date(2000, 2, 29),
+         D("0"), ts(2000, 1, 1, 0, 0, 0, 100000),
+         ntz(2000, 1, 1, 0, 0, 0, 100000)),
+        (3, 3, 3, 3, 0.1, 1.23456789123e8, False, "naïve ☃ 日本",
+         dt.date(2024, 1, 1), D("100"), ts(2024, 1, 1), ntz(2024, 1, 1)),
+    ]
+
+
+# TIMESTAMP pads present sub-seconds to 6 digits (.927490);
+# TIMESTAMP_NTZ trims trailing zeros (.92749). Decimals keep their
+# scale in plain notation (0.0000000000, not 0E-10).
+_GOLDEN_CSV = (
+    "b,s,i,l,f,d,bo,str,dt,dec,ts,ntz\n"
+    "-128,-32768,-2147483648,-9223372036854775808,1.4E-45,-0.0,true,"
+    '"a,b",0001-01-01,0.0000000000,2024-03-01 12:30:45,2024-03-01 12:30:45\n'
+    "127,32767,2147483647,9223372036854775807,3.4E38,NaN,false,"
+    '"say ""hi""",1582-10-10,0.0000000100,2024-03-01 12:30:45.123456,'
+    "2024-03-01 12:30:45.123456\n"
+    '0,0,0,0,0.0,Infinity,,"line\nbreak",9999-12-31,'
+    "-12345678901234567.8901234567,1998-12-01 14:33:03.927490,"
+    "1998-12-01 14:33:03.92749\n"
+    ",,,,,-Infinity,true,  padded  ,,,,\n"
+    '1,1,1,1,1.5,1.0E20,false,"",1970-01-01,1.5000000000,'
+    "0001-01-01 00:00:00,9999-12-31 23:59:59.999999\n"
+    "2,2,2,2,-2.5,4.9E-324,true,,2000-02-29,0.0000000000,"
+    "2000-01-01 00:00:00.100000,2000-01-01 00:00:00.1\n"
+    "3,3,3,3,0.1,1.23456789123E8,false,naïve ☃ 日本,2024-01-01,"
+    "100.0000000000,2024-01-01 00:00:00,2024-01-01 00:00:00\n"
+).encode()
+
+
+def test_csv_dialect_golden_bytes(spark, tmp_path):
+    """The dialect's exact bytes over every rendered type: integral
+    extremes, float/double specials, quoting, dates at the calendar
+    edges, decimal scale and both timestamp flavours."""
+    df = spark.createDataFrame(_golden_rows(), _GOLDEN_SCHEMA)
+    dst = str(tmp_path / "golden.csv")
+    write_csv(df, dst, single_file=True)
+    with open(dst, "rb") as f:
+        assert f.read() == _GOLDEN_CSV
+
+
+def _prerendered(df):
+    """Every column rendered to text before the writer: timestamps by
+    the seconds-or-micros ``date_format``, everything else by
+    ``cast(string)``."""
+    from pyspark.sql.types import TimestampType
+
+    fmt = "yyyy-MM-dd HH:mm:ss"
+    cols = []
+    for field in df.schema.fields:
+        c = F.col(field.name)
+        if isinstance(field.dataType, TimestampType):
+            c = F.when(
+                c == F.date_trunc("second", c), F.date_format(c, fmt)
+            ).otherwise(F.date_format(c, fmt + ".SSSSSS"))
+        else:
+            c = c.cast("string")
+        cols.append(c.alias(field.name))
+    return df.select(*cols)
+
+
+def _maybe(strategy):
+    return st.one_of(st.none(), strategy)
+
+
+def _ints(bits):
+    return _maybe(st.integers(-(2 ** (bits - 1)), 2 ** (bits - 1) - 1))
+
+
+_golden_type_rows = st.lists(
+    st.tuples(
+        _ints(8), _ints(16), _ints(32), _ints(64),
+        _maybe(st.floats(width=32)),
+        _maybe(st.floats()),
+        _maybe(st.booleans()),
+        _maybe(st.text(
+            alphabet=st.characters(codec="utf-8", exclude_categories=("Cs",)),
+            max_size=20,
+        )),
+        _maybe(st.dates()),
+        _maybe(st.decimals(
+            min_value=-(10**18) + 1, max_value=10**18 - 1, places=10,
+            allow_nan=False, allow_infinity=False,
+        )),
+        _maybe(st.datetimes(timezones=st.just(dt.timezone.utc))),
+        _maybe(st.datetimes()),
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(rows=_golden_type_rows)
+def test_csv_bytes_match_prerendered_shape(spark, tmp_path_factory, rows):
+    """On random rows of every golden type, ``write_csv`` writes the
+    same bytes as pre-rendering every column to text (the oracle
+    shape: :func:`_prerendered` + the plain :data:`CSV_DEFAULTS`
+    writer)."""
+    from convert_parquet_to_csv_spark.sources.io_ops import CSV_DEFAULTS
+
+    base = tmp_path_factory.mktemp("bytes")
+    df = spark.createDataFrame(rows, _GOLDEN_SCHEMA)
+    got = str(base / "got.csv")
+    write_csv(df, got, single_file=True)
+    want = str(base / "want")
+    _prerendered(df).coalesce(1).write.options(**CSV_DEFAULTS).csv(want)
+    (part,) = glob.glob(os.path.join(want, "part-*.csv"))
+    with open(got, "rb") as g, open(part, "rb") as w:
+        assert g.read() == w.read()
+
+
+def test_stringify_renders_only_what_the_writer_cannot(spark):
+    """Over the lineitem schema as Spark reads the benchmark's Parquet
+    files, only ``l_shipdate`` (TIMESTAMP_NTZ) is cast; every other
+    column reaches the writer as the scanned attribute. A schema with
+    nothing to render gets no projection at all."""
+    import re
+
+    from convert_parquet_to_csv_spark.sources.io_ops import _stringify_for_csv
+
+    lineitem = spark.createDataFrame(
+        [],
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ, l_commitdate DATE, "
+        "l_receiptdate DATE, l_shipinstruct STRING, l_shipmode STRING, "
+        "l_comment STRING",
+    )
+    out = _stringify_for_csv(lineitem)
+    assert out.columns == lineitem.columns
+    plan = out._jdf.queryExecution().analyzed().toString()
+    top = plan.splitlines()[0]
+    assert top.startswith("Project")
+    assert re.findall(r"cast\((\w+)#", top) == ["l_shipdate"]
+    assert "date_format" not in top
+
+    plain = lineitem.drop("l_shipdate")
+    assert _stringify_for_csv(plain) is plain
 
 
 def test_merged_scan_schema_drift(spark, tmp_path):

@@ -591,11 +591,18 @@ def main() -> None:
                 if site not in collect_allow
             }
         )
+        seen_sites = {s for _, s, _ in collect_log}
+        stale_collect = sorted(set(collect_allow) - seen_sites)
         print(
             f"collect audit: {len(collect_log)} driver-side collects "
-            f"from {len({s for _, s, _ in collect_log})} sites, "
+            f"from {len(seen_sites)} sites, "
             f"{len(collect_allow)} sites allowlisted"
         )
+        if stale_collect:
+            print(
+                "STALE collect-site allowlist entries (no audited "
+                f"query collects there — prune them): {stale_collect}"
+            )
         if bad_collects:
             print(
                 "FAIL: unallowlisted driver-side collect(): "
