@@ -28,6 +28,11 @@ families, bitwise ops for SimHash — zero Python in the row path.
 Skew note (at scale): a degenerate shingle/band shared by millions of
 docs creates a hot bucket. ``max_bucket`` drops buckets over the cap
 before any per-bucket state is built (:func:`_drop_hot_buckets`).
+
+The LSH builders (MinHash, SimHash and their bucket helpers) write
+their wide expression lists as SQL text: each ``pyspark.sql.functions``
+call is a py4j round trip to the driver JVM, and text is parsed there
+in one call. Column names reach that text through :func:`_q`.
 """
 
 from __future__ import annotations
@@ -41,6 +46,13 @@ from convert_parquet_to_csv_spark.functions.text import (
     shingles,
     tokens,
 )
+
+
+def _q(name: str) -> str:
+    """``name`` as a backquoted SQL identifier (inner backquotes doubled),
+    so any column name can be spliced into SQL expression text."""
+    return "`" + name.replace("`", "``") + "`"
+
 
 # --------------------------------------------------------------------------
 # exact dedup
@@ -90,53 +102,29 @@ def _shingle_table(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFra
 def _hashed_shingle_table(
     df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """(id, xxhash64(shingle)) exploded — the integer-keyed form the
-    minhash consumers want: each shingle is hashed exactly once
-    here, and all downstream work (permutation mins, set membership)
-    operates on the 8-byte key. Set semantics are recovered by the
-    consumers (``min`` aggregation and ``collect_set`` are
-    duplicate-insensitive), up to xxhash64 collisions
-    (~|doc|²/2⁶⁵), which the Jaccard-set representation already
-    accepts.
+    """(id, _sh): one row per k-token start position of each doc, where
+    _sh is xxhash64 over the raw token slice. The slice is an
+    array<string>, so no gram string is built and two slices collide
+    only if equal (up to the hash). Consumers recover set semantics
+    (``min`` and ``collect_set`` ignore duplicates), up to xxhash64
+    collisions (~|doc|²/2⁶⁵), which the Jaccard-set representation
+    already accepts. Docs with 0 < n < k tokens hash their whole token
+    array (``slice`` clamps); empty docs yield no rows.
 
-    Measured design note (500k-doc A/B, local[32], warm): a
-    shuffle-free per-doc alternative — keep the hashed shingles as
-    an array column and take signatures via
-    ``array_min(transform(...))`` — LOSES to this explode + groupBy
-    form, 30.5 s vs 17.9 s for the identical signature+set output,
-    despite paying a regroup shuffle. Higher-order-function lambdas
-    are evaluated outside whole-stage codegen and allocate an
-    intermediate array per permutation, while explode + groupBy
-    stays entirely inside codegen'd hash aggregation (partial
-    aggregation reduces the shuffle to one row per doc). Don't
-    "optimize" this back into HOFs without re-measuring.
-
-    Second measured rewrite (same lesson as the C4 span dedup): the
-    gram is hashed as the raw TOKEN SLICE ARRAY from an exploded
-    start-position table — no gram string is ever built, and the
-    string-building path this replaced (``shingles()``'s
-    ``transform(..., array_join(slice(...)))``) was itself a
-    per-doc HOF lambda. Duplicates within a doc are NOT removed
-    (``min`` aggregates and ``collect_set`` are insensitive to
-    them), which also drops shingles()'s per-doc ``array_distinct``
-    from the hot path. Short docs (0 < n < k) hash their whole
-    token array — ``slice`` clamps, matching shingles()'s
-    whole-text-as-single-shingle rule. Hash family is
-    xxhash64-over-array<string>: equal token slices collide iff
-    equal (no separator ambiguity), different family than the old
-    string form — recall re-measured green at all three sf after
-    the switch."""
-    base = df.select(id_col, tokens(text_col).alias("_tk"))
-    n = F.size("_tk")
-    starts = F.when(
-        n > 0, F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    ).otherwise(F.array().cast("array<int>"))
-    return base.select(
-        id_col, F.explode(starts).alias("_p"), "_tk"
-    ).select(
-        id_col,
-        F.xxhash64(F.expr(f"slice(_tk, _p + 1, {k})")).alias("_sh"),
-    )
+    Consumers aggregate this exploded table rather than per-doc arrays
+    through higher-order functions, because explode + groupBy stays in
+    whole-stage codegen and higher-order-function lambdas do not
+    (the array form took 30.5 s against 17.9 s for the same signatures
+    at 500k docs on local[32])."""
+    q = _q(id_col)
+    base = df.select(q, tokens(F.col(_q(text_col))).alias("_tk"))
+    return base.selectExpr(
+        q,
+        "explode(CASE WHEN size(_tk) > 0"
+        f" THEN sequence(0, greatest(size(_tk) - {k}, 0))"
+        " ELSE CAST(array() AS ARRAY<INT>) END) AS _p",
+        "_tk",
+    ).selectExpr(q, f"xxhash64(slice(_tk, _p + 1, {k})) AS _sh")
 
 
 # --------------------------------------------------------------------------
@@ -156,10 +144,12 @@ def _drop_hot_buckets(
     state and no per-bucket list is ever built for them."""
     if max_bucket is None:
         return rows
-    size = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    over = ", ".join(map(_q, keys))
     return (
-        rows.withColumn("_bucket_n", size)
-        .filter(F.col("_bucket_n") <= max_bucket)
+        rows.withColumn(
+            "_bucket_n", F.expr(f"count(1) OVER (PARTITION BY {over})")
+        )
+        .where(f"_bucket_n <= {int(max_bucket)}")
         .drop("_bucket_n")
     )
 
@@ -184,16 +174,16 @@ def _bucket_pairs(
     is persisted."""
     rows = _drop_hot_buckets(rows, keys, max_bucket)
     aggs = [F.collect_list(member).alias("_m")]
-    keep = F.size("_m") >= 2
+    keep = "size(_m) >= 2"
     if having is not None:
         aggs.append(having.alias("_having"))
-        keep = keep & F.col("_having")
+        keep += " AND _having"
     return (
-        rows.groupBy(*keys)
+        rows.groupBy(*map(_q, keys))
         .agg(*aggs)
-        .filter(keep)
-        .select(F.explode("_m").alias("_a"), "_m")
-        .select("_a", F.explode("_m").alias("_b"))
+        .where(keep)
+        .selectExpr("explode(_m) AS _a", "_m")
+        .selectExpr("_a", "explode(_m) AS _b")
     )
 
 
@@ -460,7 +450,7 @@ def drop_near_duplicates(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
     """Keep-policy shared by all near-dup flavors: drop every doc that
     appears as the *greater* id of a duplicate pair (min-id survivor,
     single-link). Left-anti join — no collect."""
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    losers = pairs.selectExpr(f"id_b AS {_q(id_col)}").distinct()
     return df.join(losers, id_col, "left_anti")
 
 
@@ -490,10 +480,9 @@ def minhash_signatures(
     signatures more than once persists them itself."""
     sh = _hashed_shingle_table(df, id_col, text_col, k)
     aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("_sh"))).alias(f"h{i}")
-        for i in range(num_perm)
+        F.expr(f"min(xxhash64({i}, _sh)) AS h{i}") for i in range(num_perm)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy(_q(id_col)).agg(*aggs)
 
 
 def _band_rows(
@@ -509,18 +498,16 @@ def _band_rows(
     if num_perm % bands:
         raise ValueError("num_perm must be divisible by bands")
     r = num_perm // bands
-    band_cols = F.array(*[
-        F.struct(
-            F.lit(j).alias("band"),
-            F.xxhash64(*[F.col(f"h{j * r + i}") for i in range(r)]).alias("bh"),
-        )
+    band_structs = ", ".join(
+        f"struct({j} AS band, xxhash64("
+        + ", ".join(f"h{j * r + i}" for i in range(r))
+        + ") AS bh)"
         for j in range(bands)
-    ])
-    return signatures.select(
-        id_col, *carry, F.explode(band_cols).alias("_b")
-    ).select(
-        id_col, *carry, F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh")
     )
+    cols = [_q(c) for c in (id_col, *carry)]
+    return signatures.selectExpr(
+        *cols, f"explode(array({band_structs})) AS _b"
+    ).selectExpr(*cols, "_b.band AS _band", "_b.bh AS _bh")
 
 
 def lsh_candidate_pairs(
@@ -538,15 +525,15 @@ def lsh_candidate_pairs(
     are dropped before any bucket's member list is built (a window
     count on the bucket key, whose sort spills), so no list exceeds
     ``max_bucket`` ids. The surviving buckets collect their ids and
-    pairs are exploded from each list. ``None`` means uncapped: the output is then quadratic
-    in the largest bucket. Nothing is persisted, so the returned plan
-    needs no ``clearCache()``.
+    pairs are exploded from each list. ``None`` means uncapped: the
+    output is then quadratic in the largest bucket. Nothing is
+    persisted, so the returned plan needs no ``clearCache()``.
     """
     banded = _band_rows(signatures, id_col, num_perm, bands)
     return (
-        _bucket_pairs(banded, ["_band", "_bh"], F.col(id_col), max_bucket)
-        .filter(F.col("_a") < F.col("_b"))
-        .select(F.col("_a").alias("id_a"), F.col("_b").alias("id_b"))
+        _bucket_pairs(banded, ["_band", "_bh"], F.col(_q(id_col)), max_bucket)
+        .where("_a < _b")
+        .selectExpr("_a AS id_a", "_b AS id_b")
         .distinct()
     )
 
@@ -571,29 +558,29 @@ def _verified_jaccard_pairs(
     Nothing is persisted: AQE reuses the exchanges of those repeated
     subtrees (``ReusedExchange``), so each is computed once per
     action."""
-    ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias(id_col)
-    ).distinct()
+    q = _q(id_col)
+    ids = cand.selectExpr(f"explode(array(id_a, id_b)) AS {q}").distinct()
     cand_docs = df.join(F.broadcast(ids), id_col, "left_semi")
     need = (
         _hashed_shingle_table(cand_docs, id_col, text_col, k)
-        .groupBy(id_col)
-        .agg(F.collect_set(F.col("_sh")).alias("_set"))
+        .groupBy(q)
+        .agg(F.expr("collect_set(_sh) AS _set"))
     )
-    sa = need.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_sa"))
-    sb = need.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb"))
+    sa = need.selectExpr(f"{q} AS id_a", "_set AS _sa")
+    sb = need.selectExpr(f"{q} AS id_b", "_set AS _sb")
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn("_i", inter)
+        .withColumn("_i", F.expr("size(array_intersect(_sa, _sb))"))
         .withColumn(
             "jaccard",
-            F.col("_i").cast("double")
-            / (F.size("_sa") + F.size("_sb") - F.col("_i")).cast("double"),
+            F.expr(
+                "CAST(_i AS DOUBLE)"
+                " / CAST(size(_sa) + size(_sb) - _i AS DOUBLE)"
+            ),
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .where(F.col("jaccard") >= threshold)
+        .selectExpr("id_a", "id_b", "jaccard")
     )
 
 
@@ -647,30 +634,31 @@ def simhash_signatures(
 
     Pure DataFrame math: explode tokens → xxhash64 → for each bit a
     conditional ±1 sum (partial agg) → pack signs back into one LONG
-    with shiftleft/bor. 64 aggregate columns compile fine and stay in
-    codegen — no Python, no UDF.
+    with shiftleft and ``|``. 64 aggregate columns compile fine and
+    stay in codegen — no Python, no UDF.
     """
+    q = _q(id_col)
+    one = "CAST(1 AS BIGINT)"
     tok = df.select(
-        id_col, F.explode(tokens(text_col)).alias("_t")
-    ).withColumn("_h", F.xxhash64("_t"))
+        q, F.explode(tokens(F.col(_q(text_col)))).alias("_t")
+    ).withColumn("_h", F.expr("xxhash64(_t)"))
     bit_aggs = [
-        F.sum(
-            F.when(
-                F.col("_h").bitwiseAND(F.shiftleft(F.lit(1).cast("long"), i)) != 0,
-                1,
-            ).otherwise(-1)
-        ).alias(f"b{i}")
+        F.expr(
+            f"sum(CASE WHEN (_h & shiftleft({one}, {i})) != 0"
+            f" THEN 1 ELSE -1 END) AS b{i}"
+        )
         for i in range(bits)
     ]
-    per_doc = tok.groupBy(id_col).agg(*bit_aggs)
-    sig = F.lit(0).cast("long")
-    for i in range(bits):
-        sig = sig.bitwiseOR(
-            F.when(
-                F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return per_doc.select(id_col, sig.alias("simhash"))
+    per_doc = tok.groupBy(q).agg(*bit_aggs)
+    sig = " | ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [
+            f"CASE WHEN b{i} > 0 THEN shiftleft({one}, {i})"
+            " ELSE CAST(0 AS BIGINT) END"
+            for i in range(bits)
+        ]
+    )
+    return per_doc.selectExpr(q, f"{sig} AS simhash")
 
 
 def simhash_pairs(
@@ -687,41 +675,34 @@ def simhash_pairs(
     16-bit chunk identical — candidates share a (chunk index, chunk
     value) bucket and are verified exactly with ``bit_count(xor)``.
     Buckets holding more than ``max_bucket`` docs are dropped before
-    any bucket's (id, simhash) member list is built; the surviving buckets collect their members and pairs are
-    exploded from each list. ``None`` means uncapped: the output is
-    then quadratic in the largest bucket. Nothing is persisted, so the
-    returned plan needs no ``clearCache()``.
+    any bucket's (id, simhash) member list is built; the surviving
+    buckets collect their members and pairs are exploded from each
+    list. ``None`` means uncapped: the output is then quadratic in the
+    largest bucket. Nothing is persisted, so the returned plan needs
+    no ``clearCache()``.
     """
     width = 64 // chunks
     mask = (1 << width) - 1
-    chunk_cols = F.array(*[
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.shiftrightunsigned(F.col("simhash"), c * width)
-            .bitwiseAND(F.lit(mask).cast("long"))
-            .alias("cv"),
-        )
+    chunk_structs = ", ".join(
+        f"struct({c} AS chunk, shiftrightunsigned(simhash, {c * width})"
+        f" & CAST({mask} AS BIGINT) AS cv)"
         for c in range(chunks)
-    ])
-    chunked = signatures.select(
-        id_col, "simhash", F.explode(chunk_cols).alias("_c")
-    ).select(
-        id_col, "simhash",
-        F.col("_c.chunk").alias("_chunk"), F.col("_c.cv").alias("_cv"),
     )
-    member = F.struct(F.col(id_col).alias("_i"), F.col("simhash").alias("_s"))
+    q = _q(id_col)
+    chunked = signatures.selectExpr(
+        q, "simhash", f"explode(array({chunk_structs})) AS _c"
+    ).selectExpr(q, "simhash", "_c.chunk AS _chunk", "_c.cv AS _cv")
+    member = F.struct(F.col(q).alias("_i"), F.col("simhash").alias("_s"))
     return (
         _bucket_pairs(chunked, ["_chunk", "_cv"], member, max_bucket)
-        .filter(F.col("_a._i") < F.col("_b._i"))
-        .select(
-            F.col("_a._i").alias("id_a"),
-            F.col("_b._i").alias("id_b"),
-            F.bit_count(
-                F.col("_a._s").bitwiseXOR(F.col("_b._s"))
-            ).alias("hamming"),
+        .where("_a._i < _b._i")
+        .selectExpr(
+            "_a._i AS id_a",
+            "_b._i AS id_b",
+            "bit_count(_a._s ^ _b._s) AS hamming",
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= max_hamming)
     )
 
 
@@ -1476,15 +1457,16 @@ def minhash_dedup_incremental(
     the BATCH's bucket occupancy, so a small daily batch probes a
     100 TB history for the cost of its own buckets. Buckets holding
     more than ``max_bucket`` docs (history and batch together) are
-    dropped before any bucket's (id, new) member list is built; buckets without a new member are skipped before
-    any pair work, and the rest explode pairs (a, b) with b new and
-    (a old or a < b). ``None`` means uncapped: candidates are then
-    quadratic in the largest bucket. Verification is the same
-    candidate-pruned exact-Jaccard second pass as minhash_dedup (sets
-    built only for docs appearing in a candidate pair; never a
-    full-corpus set shuffle). The result is one lazy plan and nothing
-    is persisted, so no ``clearCache()`` is needed; a caller that runs
-    more than one action on the result persists the result itself.
+    dropped before any bucket's (id, new) member list is built;
+    buckets without a new member are skipped before any pair work,
+    and the rest explode pairs (a, b) with b new and (a old or
+    a < b). ``None`` means uncapped: candidates are then quadratic in
+    the largest bucket. Verification is the same candidate-pruned
+    exact-Jaccard second pass as minhash_dedup (sets built only for
+    docs appearing in a candidate pair; never a full-corpus set
+    shuffle). The result is one lazy plan and nothing is persisted, so
+    no ``clearCache()`` is needed; a caller that runs more than one
+    action on the result persists the result itself.
 
     Replayability contract (the dedup_minhash precedent): survivors
     are defined by EXACT verified Jaccard, so the oracle replays the
@@ -1492,39 +1474,34 @@ def minhash_dedup_incremental(
     holds at the gating fixture — which dedup_minhash_recall gates
     pairwise on the same (k, num_perm, bands) configuration.
     """
+    q = _q(id_col)
     flagged = df.withColumn("_new", is_new)
     sigs = minhash_signatures(
         flagged, id_col, text_col, k, num_perm
     ).join(
-        flagged.select(id_col, "_new"), id_col
+        flagged.selectExpr(q, "_new"), id_col
     )
     banded = _band_rows(sigs, id_col, num_perm, bands, "_new")
-    member = F.struct(F.col(id_col).alias("_i"), F.col("_new").alias("_n"))
+    member = F.struct(F.col(q).alias("_i"), F.col("_new").alias("_n"))
     cand = (
         _bucket_pairs(
             banded, ["_band", "_bh"], member, max_bucket,
             having=F.bool_or("_new"),
         )
-        .filter(F.col("_b._n"))
-        .filter((~F.col("_a._n")) | (F.col("_a._i") < F.col("_b._i")))
-        .filter(F.col("_a._i") != F.col("_b._i"))
-        .select(F.col("_a._i").alias("id_a"), F.col("_b._i").alias("id_b"))
+        .where("_b._n")
+        .where("NOT _a._n OR _a._i < _b._i")
+        .where("_a._i != _b._i")
+        .selectExpr("_a._i AS id_a", "_b._i AS id_b")
         .distinct()
     )
     verified = _verified_jaccard_pairs(df, cand, id_col, text_col, k, threshold)
     matches = verified.groupBy("id_b").agg(
-        F.min("id_a").cast("bigint").alias("matched_id")
+        F.expr("CAST(min(id_a) AS BIGINT) AS matched_id")
     )
-    new_rows = flagged.filter(F.col("_new")).select(id_col)
+    new_rows = flagged.where("_new").selectExpr(q)
     return new_rows.join(
-        matches,
-        F.col(id_col).eqNullSafe(F.col("id_b")),
-        "left",
-    ).select(
-        F.col(id_col),
-        F.col("matched_id").isNull().alias("kept"),
-        "matched_id",
-    )
+        matches, F.expr(f"{q} <=> id_b"), "left"
+    ).selectExpr(q, "matched_id IS NULL AS kept", "matched_id")
 
 
 def shared_extent_contamination(

@@ -12,6 +12,10 @@ works on ``local[*]``:
 - UTC session timezone: timestamps render/compare identically across
   engines (the DuckDB oracle reads naive timestamps).
 - Arrow execution on: any unavoidable pandas interchange is columnar.
+- A 256 KB AQE coalescing floor instead of Spark's 1 MB: on
+  ``local[N]`` the 1 MB floor merges any shuffle under about N MB into
+  fewer than N tasks, so small stages run on one core while the rest
+  idle; at cluster sizes partitions sit far above either floor.
 """
 
 from __future__ import annotations
@@ -27,6 +31,9 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Coalescing floor (Spark's default is 1 MB): keeps a shuffle of a
+    # few MB spread over all local cores instead of merged into one task.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k",
     # Deterministic cross-engine timestamp semantics (oracle = DuckDB,
     # which uses naive timestamps).
     "spark.sql.session.timeZone": "UTC",

@@ -1001,3 +1001,65 @@ def test_simhash_bucket_explode_matches_reference(spark):
         }
         assert got == want, f"max_bucket={mb}"
     assert want, "fixture must produce simhash pairs uncapped"
+
+
+def test_lsh_builders_stay_within_round_trip_budget(spark, corpus, monkeypatch):
+    """Building (not running) each LSH dedup plan makes at most 1,000
+    py4j round trips from the calling thread: its wide expression lists
+    are SQL text, not one ``pyspark.sql.functions`` call per term.
+    Calls from py4j's finalizer thread (object release) are not
+    counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    builders = {
+        "minhash_dedup": lambda: D.minhash_dedup(corpus),
+        "minhash_dedup_incremental": lambda: D.minhash_dedup_incremental(
+            corpus, F.col("doc_id") > 2
+        ),
+        "simhash_dedup": lambda: D.simhash_dedup(corpus),
+    }
+    caller = threading.current_thread()
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.current_thread() is caller:
+            calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    counts = {}
+    for name, build in builders.items():
+        build()
+        calls[0] = 0
+        build()
+        counts[name] = calls[0]
+    assert all(0 < n <= 1000 for n in counts.values()), counts
+
+
+def test_lsh_dedups_quote_column_names(spark):
+    """The SQL-text builders quote the id and text columns, so names
+    with a space or a backquote give the same survivors as plain ones."""
+    df, _ = _seeded_neardup_corpus(spark)
+    odd = df.withColumnRenamed("doc_id", "doc id").withColumnRenamed(
+        "text", "te`xt"
+    )
+    def build(d, id_col, text_col):
+        kw = {"id_col": id_col, "text_col": text_col}
+        is_new = (F.col(f"`{id_col}`") % 3) == 0
+        return [
+            D.minhash_dedup(d, max_bucket=50, **kw),
+            D.minhash_dedup_incremental(d, is_new, max_bucket=50, **kw),
+            D.simhash_dedup(d, **kw),
+        ]
+
+    n = df.count()
+    for plain, quoted in zip(
+        build(df, "doc_id", "text"), build(odd, "doc id", "te`xt")
+    ):
+        want = sorted(tuple(r) for r in plain.collect())
+        assert quoted.columns[0] == "doc id"
+        assert sorted(tuple(r) for r in quoted.collect()) == want
+        assert 0 < len(want) < n

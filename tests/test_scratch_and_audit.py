@@ -15,7 +15,11 @@ sys.path.insert(
     ),
 )
 
-from plan_audit import loop_join_nodes, single_partition_window  # noqa: E402
+from plan_audit import (  # noqa: E402
+    loop_join_nodes,
+    single_partition_window,
+    stale_sections,
+)
 
 from convert_parquet_to_csv_spark.plans.scratch import (  # noqa: E402
     scratch_dir,
@@ -212,55 +216,53 @@ def test_oracle_edited_queries_hash_match_duckdb(spark):
         ), name
 
 
-def test_plans_md_sections_match_fresh_regen(tmp_path):
-    """PLANS.md freshness canary (r11, VERDICT r10 item 5a: the
-    decontaminate_exact_substr section went stale at HEAD when the
-    6-34x kernel rewrite landed without a regen). Regenerates a
-    3-section sample through the real plan_audit path (subprocess —
-    the audit pins its own session confs, which the plan text
-    depends on) and asserts byte-equality with the committed file.
-    The sample: the flagship section plus the two kernels this
-    round's refactors touched. Full-file freshness remains the
-    tool's job — run `python tools/plan_audit.py` and check
-    `git diff PLANS.md` is empty in any commit that rewrites a
-    gated kernel."""
+def test_stale_sections_flags_changed_missing_and_orphaned():
+    committed = "# H\n\n## a\n\nx\n\n## b\n\ny\n\n## gone\n\nz\n"
+    fresh = "# H\n\n## a\n\nx\n\n## b\n\nY\n\n## new\n\nw\n"
+    names = ["a", "b", "new"]
+    assert stale_sections(committed, committed, ["a", "b"], True) == []
+    assert stale_sections(committed, fresh, names, False) == ["b", "new"]
+    assert stale_sections(committed, fresh, names, True) == [
+        "b", "new", "gone",
+    ]
+
+
+def test_plans_md_sections_match_fresh_regen():
+    """PLANS.md freshness canary: regenerates a sample of sections
+    through ``tools/plan_audit.py --check --only`` (a subprocess — the
+    audit pins its own session confs, which the plan text depends on)
+    and requires each to equal the committed section byte for byte.
+    The sample: the flagship conversion, the two exact-substring
+    decontamination kernels, and the two MinHash pipelines, whose
+    builders write their plans as SQL text. Full-file freshness is
+    ``python tools/plan_audit.py --check``."""
     import subprocess
 
     names = [
         "convert_roundtrip",
         "decontaminate_exact_substr",
         "decontaminate_exact_substr_incremental",
+        "dedup_minhash",
+        "dedup_minhash_incremental",
     ]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = tmp_path / "PLANS_fresh.md"
-    subprocess.run(
+    run = subprocess.run(
         [
             sys.executable,
             os.path.join(repo, "tools", "plan_audit.py"),
+            "--check",
             "--only",
             ",".join(names),
-            "--out",
-            str(out),
         ],
-        check=True,
         cwd=repo,
         timeout=540,
+        capture_output=True,
+        text=True,
     )
-
-    def sections(text: str) -> dict[str, str]:
-        parts = ("\n" + text).split("\n## ")
-        return {
-            p.split("\n", 1)[0].strip(): p.rstrip()
-            for p in parts[1:]
-        }
-
-    with open(os.path.join(repo, "PLANS.md")) as f:
-        committed = sections(f.read())
-    fresh = sections(out.read_text())
-    for n in names:
-        assert n in committed, f"PLANS.md lacks a section for {n}"
-        assert committed[n] == fresh[n], (
-            f"PLANS.md section for {n} is STALE — regenerate "
-            "PLANS.md in the same commit as the kernel change "
-            "(python tools/plan_audit.py)"
-        )
+    assert run.returncode == 0, (
+        "PLANS.md sections are STALE — regenerate PLANS.md in the same "
+        "commit as the kernel change (python tools/plan_audit.py):\n"
+        + run.stdout[-2000:]
+        + run.stderr[-2000:]
+    )
+    assert f"PLANS.md: {len(names)} sections fresh" in run.stdout

@@ -6,6 +6,7 @@ exchange/broadcast decisions — then extracts the lines that prove the
 scale property each query's docstring claims.
 
 Usage: python tools/plan_audit.py [--sf /root/testdata/sf0.01]
+       python tools/plan_audit.py --check   # exit 1 if PLANS.md is stale
 """
 
 from __future__ import annotations
@@ -379,6 +380,29 @@ Expression ids (`#_`), `plan_id=_`, and tmp fixture paths are
 normalized so a no-op re-run produces a zero diff.
 """
 
+PLANS_MD = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
+)
+
+
+def plan_sections(text: str) -> dict[str, str]:
+    """PLANS.md text → {section name: section text}, trailing space
+    stripped so a section compares equal wherever it sits in the file."""
+    parts = ("\n" + text).split("\n## ")
+    return {p.split("\n", 1)[0].strip(): p.rstrip() for p in parts[1:]}
+
+
+def stale_sections(
+    committed: str, fresh: str, names: list[str], full: bool
+) -> list[str]:
+    """Names whose committed section is missing or differs from the
+    fresh one; with ``full``, also committed sections no case generates."""
+    old, new = plan_sections(committed), plan_sections(fresh)
+    stale = [n for n in names if old.get(n) != new.get(n)]
+    if full:
+        stale += sorted(set(old) - set(new))
+    return stale
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -401,10 +425,20 @@ def main() -> None:
         help="write sections to this path instead of PLANS.md "
         "(freshness comparison without touching the committed file)",
     )
+    ap.add_argument(
+        "--check",
+        action="store_true",
+        help="regenerate the sections (all CASES, or --only) without "
+        "writing PLANS.md, print the names of stale PLANS.md sections "
+        "and exit 1 if there are any (implies sections-only; --out "
+        "keeps the fresh copy)",
+    )
     args = ap.parse_args()
+    if args.check:
+        args.skip_window_audit = True
     if args.only:
         args.skip_window_audit = True
-        if not args.out:
+        if not args.out and not args.check:
             raise SystemExit(
                 "--only without --out would overwrite PLANS.md with "
                 "a PARTIAL file; pass --out"
@@ -537,11 +571,25 @@ def main() -> None:
     sections = [HEADER] + [
         section_by_name[n] for n in CASES if n in section_by_name
     ]
-    out = args.out or os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "PLANS.md")
-    with open(out, "w") as f:
-        f.write("\n".join(sections))
-    print(f"wrote {out} ({len(sections) - 1} sections)")
+    fresh = "\n".join(sections)
+    out = args.out or (None if args.check else PLANS_MD)
+    if out:
+        with open(out, "w") as f:
+            f.write(fresh)
+        print(f"wrote {out} ({len(sections) - 1} sections)")
+
+    if args.check:
+        with open(PLANS_MD) as f:
+            committed = f.read()
+        stale = stale_sections(committed, fresh, audit_names, not args.only)
+        for n in stale:
+            print(f"STALE: {n}")
+        if stale:
+            raise SystemExit(
+                f"PLANS.md: {len(stale)} stale section(s) — regenerate "
+                "with python tools/plan_audit.py"
+            )
+        print(f"PLANS.md: {len(audit_names)} sections fresh")
 
     if not args.skip_window_audit:
         DataFrame.collect = orig_collect
