@@ -33,6 +33,18 @@ LANG_MARKERS: dict[str, list[str]] = {
 BPE_REGEX = "[A-Za-z0-9_]+|[^A-Za-z0-9_ \\t\\n]"
 
 
+def _q(name: str) -> str:
+    """``name`` as a backquoted SQL identifier (inner backquotes doubled),
+    so any column name can be spliced into SQL expression text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _col(col: Column | str) -> Column:
+    """``col`` as a Column; a ``str`` is one column name, taken verbatim
+    (``F.col`` would read dots as struct fields and parse backquotes)."""
+    return F.col(_q(col)) if isinstance(col, str) else col
+
+
 def tokens(col: Column | str) -> Column:
     """Whitespace tokenization → array<string>, empty-safe.
 
@@ -40,7 +52,7 @@ def tokens(col: Column | str) -> Column:
     drops empty tokens so blank docs get ``[]`` (the sf fixtures
     contain whitespace-only documents).
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 
 
@@ -135,14 +147,14 @@ def token_count(col: Column | str) -> Column:
 def token_count_bpe(col: Column | str) -> Column:
     """BPE-ish token count: word runs + individual punctuation marks,
     the standard cheap proxy for LLM token budgeting."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     return F.size(F.regexp_extract_all(c, F.lit(BPE_REGEX), 0))
 
 
 def normalize_text(col: Column | str) -> Column:
     """Canonical form for fingerprinting/dedup: lowercase, collapse
     whitespace runs, trim."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
@@ -166,7 +178,7 @@ def _count_occurrences(c: Column, needle: str) -> Column:
 
 def lang_marker_score(col: Column | str, lang: str) -> Column:
     """Total marker-stopword hits for one language."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     # Pad so edge words match; lowercase first.
     padded = F.concat(F.lit(" "), F.lower(c), F.lit(" "))
     score = F.lit(0.0)
@@ -197,7 +209,7 @@ def quality_features(col: Column | str) -> dict[str, Column]:
     all single-division doubles over exact integer counts — bitwise
     reproducible cross-engine.
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     n_chars = F.length(c)
     toks = tokens(c)
     n_tokens = F.size(toks)
@@ -247,16 +259,16 @@ def shingles(col: Column | str, k: int = 3) -> Column:
     )
 
 
-def ngrams(col: Column | str, n: int = 13, lowercase: bool = True) -> Column:
-    """Ordered positional word n-grams → array<string> (duplicates
-    kept, one entry per start position). Unlike :func:`shingles` this
-    is the decontamination unit: test-set overlap checks compare every
-    occurrence, and the window is conventionally long (13 words) so a
-    match is near-certain verbatim copying. Docs with < n tokens yield
-    an empty array — a short doc can't contain a long benchmark gram.
+def ngrams(col: Column | str, n: int = 13) -> Column:
+    """Ordered positional word n-grams of the lowercased text →
+    array<string> (duplicates kept, one entry per start position).
+    Unlike :func:`shingles` this is the decontamination unit: test-set
+    overlap checks compare every occurrence, and the window is
+    conventionally long (13 words) so a match is near-certain verbatim
+    copying. Docs with < n tokens yield an empty array — a short doc
+    can't contain a long benchmark gram.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    toks = tokens(F.lower(c) if lowercase else c)
+    toks = tokens(F.lower(_col(col)))
     cnt = F.size(toks)
     grams = F.transform(
         F.sequence(F.lit(1), cnt - (n - 1)),
@@ -291,7 +303,7 @@ def redact_pii(col: Column | str) -> Column:
     so this stays in whole-stage codegen end to end. SSN before phone:
     the phone pattern would otherwise swallow the first 7 digits of a
     123-45-6789 run."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     for kind in ("email", "ipv4", "ssn", "phone"):
         pattern, repl = next(
             (p, r) for k, p, r in PII_PATTERNS if k == kind
@@ -309,7 +321,7 @@ def pii_counts(col: Column | str) -> dict[str, Column]:
     192.168.1.100), so independent counting would report phone
     redactions that never happen. Still pure chained JVM regex —
     one codegen projection."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     out: dict[str, Column] = {}
     for kind in ("email", "ipv4", "ssn", "phone"):
         pattern, repl = next(
@@ -333,7 +345,7 @@ def md5_long(col: Column | str, salt: str = "") -> Column:
     chars < 2^60, so the value is always positive and ``%`` agrees
     between engines (no negative-mod divergence).
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     return F.conv(
         F.substring(F.md5(F.concat(F.lit(salt), c.cast("string"))), 1, 15),
         16,

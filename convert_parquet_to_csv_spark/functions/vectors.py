@@ -12,9 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from convert_parquet_to_csv_spark.functions.text import _col
 
 
 def dot_product(a: Column | str, b: Column | str) -> Column:
@@ -33,7 +31,7 @@ def dot_product(a: Column | str, b: Column | str) -> Column:
     small ``n``: it won 2.4× on the PQ assign stage (dsub=2), while a
     64-term cosine unroll measured 3–4× slower than this form."""
     prods = F.zip_with(
-        _c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")
+        _col(a), _col(b), lambda x, y: x.cast("double") * y.cast("double")
     )
     return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
 
@@ -44,7 +42,7 @@ def dot_product_fixed(a: Column | str, b: Column | str, n: int) -> Column:
     :func:`dot_product` on length-``n`` inputs: float64 products
     accumulated left-to-right from the same ``0.0`` seed; a missing /
     NULL element yields NULL exactly like the zip_with form."""
-    av, bv = _c(a), _c(b)
+    av, bv = _col(a), _col(b)
     acc = F.lit(0.0)
     for i in range(n):
         acc = acc + F.get(av, i).cast("double") * F.get(bv, i).cast(
@@ -57,7 +55,7 @@ def sq_l2_fixed(a: Column | str, b: Column | str, n: int) -> Column:
     """Σ_{i<n} (aᵢ−bᵢ)² unrolled to ``F.get`` arithmetic — the
     codegen form of the PQ assign distance (see
     :func:`dot_product_fixed` for the equivalence argument)."""
-    av, bv = _c(a), _c(b)
+    av, bv = _col(a), _col(b)
     acc = F.lit(0.0)
     for i in range(n):
         d = F.get(av, i).cast("double") - F.get(bv, i).cast("double")
@@ -83,7 +81,7 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
 def l2_normalize(a: Column | str) -> Column:
     """x / ‖x‖ elementwise (double); all-zero vectors pass through
     unscaled (division guard) rather than producing NaNs."""
-    v = _c(a)
+    v = _col(a)
     n = l2_norm(v)
     return F.when(
         n > 0, F.transform(v, lambda x: x.cast("double") / n)
@@ -99,7 +97,7 @@ def quantize_int8(a: Column | str, scale: Column | None = None) -> Column:
     Returns array<int> in [-127, 127]; the companion scale factor is
     :func:`quantize_scale` (store both — dequantize is x·max|x|/127).
     """
-    v = _c(a)
+    v = _col(a)
     s = scale if scale is not None else quantize_scale(v)
     return F.transform(
         v,
@@ -109,7 +107,7 @@ def quantize_int8(a: Column | str, scale: Column | None = None) -> Column:
 
 def quantize_scale(a: Column | str) -> Column:
     """127 / max|x| (0-safe): the per-vector quantization factor."""
-    v = _c(a)
+    v = _col(a)
     mx = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
     return F.when(mx > 0, F.lit(127.0) / mx).otherwise(F.lit(0.0))
 

@@ -47,13 +47,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from convert_parquet_to_csv_spark.functions.text import _col
+
 # one alternation, anchored at param start — mirrored verbatim in the
 # oracle SQL of the gated queries
 TRACKING_PARAM_REGEX = r"^(utm_[a-z]+|fbclid|gclid|mc_cid|mc_eid|ref)="
-
-
-def _col(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 def url_strip_scheme(col: Column | str) -> Column:

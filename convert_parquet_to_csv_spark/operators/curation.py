@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from convert_parquet_to_csv_spark.functions.text import (
+    _col,
+    _q,
     doc_fingerprint,
     ngrams,
     normalize_text,
@@ -46,7 +48,11 @@ from convert_parquet_to_csv_spark.functions.text import (
     token_count_bpe,
     tokens,
 )
-from convert_parquet_to_csv_spark.operators.dedup import _drop_hot_buckets
+from convert_parquet_to_csv_spark.operators.dedup import (
+    _covered,
+    _drop_hot_buckets,
+    _token_windows,
+)
 
 
 def benchmark_ngrams(
@@ -71,30 +77,21 @@ def _hashed_ngram_table(
     n: int,
     keep_slices: bool = False,
 ) -> DataFrame:
-    """(id_cols..., gram: long) — positional word n-grams hashed as
-    raw TOKEN SLICE ARRAYS (xxhash64 over array<string>), never built
-    as strings. The string path (``ngrams()``) constructs every gram
-    via a per-doc HOF lambda (transform + array_join) — the measured
-    slow class (see dedup._hashed_shingle_table and the C4 span
-    rewrite); here the explode emits start positions and the hash
-    runs on ``slice(tokens, p, n)`` inside a codegen projection.
-    Matches ngrams() semantics: lowercased, duplicates kept (one row
-    per position), docs shorter than ``n`` yield nothing.
+    """(id_cols..., gram: long) — one row per ``n``-token window of the
+    lowercased tokens (:func:`~.dedup._token_windows`), the window
+    hashed as a raw token-slice array (xxhash64 over array<string>),
+    never built as a string: ``ngrams()`` builds every gram in a
+    per-doc higher-order-function lambda, which runs outside
+    whole-stage codegen.
 
     ``keep_slices=True`` additionally carries the token slice itself
     as ``_gtoks`` (array<string>) so a caller can verify hash matches
     exactly. Only safe when the consumer stays in the same stage (a
     broadcast join): the slices then never cross an exchange."""
-    toks = tokens(F.lower(F.col(text_col)))
-    base = df.select(*id_cols, toks.alias("_tk"))
-    cnt = F.size("_tk")
-    starts = F.when(
-        cnt >= n, F.sequence(F.lit(1), cnt - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    exploded = base.select(
-        *id_cols, F.explode(starts).alias("_p"), "_tk"
+    exploded = _token_windows(
+        df, id_cols, tokens(F.lower(_col(text_col))), n
     )
-    slice_expr = F.expr(f"slice(_tk, _p, {n})")
+    slice_expr = F.expr(f"slice(_tk, _p + 1, {n})")
     if keep_slices:
         return exploded.select(
             *id_cols,
@@ -316,125 +313,65 @@ def remove_duplicated_spans(
 
     Plan (all built-ins, no UDFs):
     1. one tokenize per doc (split on the single-space corpus
-       delimiter), shared by the shingle and word branches;
-    2. shingle branch: explode start positions, gram key =
-       ``xxhash64(slice(tokens))`` — the n-token slice is hashed
-       DIRECTLY as an array (no concat_ws string is ever built, no
-       separator ambiguity) so the corpus-wide heavy-hitter groupBy
-       shuffles 8-byte keys instead of ~40-byte gram strings (r4:
-       measured 41.8 s → see bench span_dedup_c4_500k_docs; same
-       2⁻⁶⁴-collision acceptance as the minhash pipeline); hot
-       grams = HAVING count_distinct(doc) > max_docs, computed as a
-       total-count pre-filter + exact distinct-count on survivors
-       (see next paragraph);
-    3. coverage: occurrences of hot grams re-explode to the n covered
-       positions, deduped per (doc, pos), then aggregated to ONE
-       covered-position array per doc — the only rows that ever
-       shuffle here are covered positions (boilerplate-sized), never
-       the word stream. The hot-gram join is left to AQE: the hot set
-       is usually tiny (broadcast) but is data-dependent, and a wrong
-       forced broadcast at 100 TB would OOM the executors;
+       delimiter), shared by the gram and reassembly branches;
+    2. grams: the n-token windows (:func:`~.dedup._token_windows`;
+       shorter and NULL docs have none), keyed by
+       ``xxhash64(slice(tokens))`` — the slice is hashed as an array,
+       so no gram string is built and the heavy-hitter groupBy
+       shuffles 8-byte keys (same 2⁻⁶⁴-collision acceptance as the
+       minhash pipeline); hot grams = HAVING count_distinct(doc) >
+       max_docs, computed as a total-count pre-filter plus an exact
+       distinct-count on the survivors;
+    3. coverage: occurrences of hot grams explode to the n covered
+       positions and collect to ONE covered-position set per doc, so
+       only covered positions (boilerplate-sized) shuffle, never the
+       word stream. The hot-gram join is left to AQE: the hot set is
+       usually tiny (broadcast) but data-dependent, and a wrong forced
+       broadcast at 100 TB would OOM the executors;
     4. array-native reassembly: the per-doc coverage table joins back
-       to the tokenized docs at DOC granularity (AQE broadcasts it
-       when small; worst case it is a doc-key exchange of covered
-       positions only) and an index lambda filters the token array in
-       place — the word corpus is never exploded and never crosses an
-       exchange.
+       to the tokenized docs at doc granularity and an index lambda
+       filters the token array in place.
 
-    Cache contract: NONE — the candidate-gram intermediate the
-    default path shares between its distinct-count and coverage
-    passes is persisted, drained by the checkpoint and released
-    inside the call, so the returned plan is the cheap reassembly
-    tail. Callers need no ``spark.catalog.clearCache()``.
+    Cache contract: none. The candidate-gram stream the default path
+    shares between its distinct-count and coverage passes is
+    persisted, drained by the checkpoint and released inside the
+    call; callers need no ``spark.catalog.clearCache()``.
 
-    Measured design change (interleaved cache-cleared min-of-2, full
-    clean_text output): this array-native reassembly beats the previous
-    word-stream form (posexplode every word -> left-join coverage on
-    (doc, pos) -> ``array_sort(collect_list(struct(pos, word)))`` on a
-    doc-key exchange) **5.9 s vs 13.1 s** on the sf0.01-derived 500k
-    corpus and **6.1 s vs 15.7 s** on the sf0.1-derived one (longer
-    docs) — the lost whole-stage codegen of the HOF lambda is far
-    cheaper than shuffling every word as a struct. Trade-off to
-    re-measure if corpora change: ``array_contains`` membership is O(len
-    x cov) comparisons per doc; it wins while coverage is
-    boilerplate-sized, and would degrade only on pathological corpora
-    (multi-thousand-word docs that are ~fully covered), where the
-    word-stream form's shuffle-heavy plan is the fallback.
+    Measured reasons for this shape (interleaved, cache-cleared
+    minima):
 
-    Heavy-hitter pass shape (r5, measured by ``tools/scale_curve.py``
-    + a variant A/B at 1M/2M docs): a straight
-    ``groupBy(gram).agg(count_distinct(doc))`` plans TWO full-volume
-    exchanges — one keyed (gram, doc) for the distinct rewrite, one
-    keyed gram — and gram keys are mostly unique, so map-side partial
-    aggregation reduces nothing and the per-partition aggregate state
-    grows linearly with the corpus (the 2M-doc scale-curve point went
-    1.9× over linear once that state outgrew executor memory). The
-    shipped form cuts the full-volume exchanges to ONE: grams with
-    ``count(*) <= max_docs`` can never reach ``count_distinct(doc) >
-    max_docs`` (within-doc repeats only inflate the total), so a plain
-    occurrence-count groupBy screens first and the exact
-    distinct-count runs only on the surviving candidate grams
-    (boilerplate-scale; the candidate join is left to AQE exactly
-    like the hot-gram join below). Measured, interleaved
-    cache-cleared min-of-3: 2M docs 19.0 → 15.7 s; at 1M docs the
-    extra scan pass costs more than the saved exchange while nothing
-    spills (5.7 → 6.7 s) — the single-full-exchange form is kept
-    anyway because shuffle bytes on the dominant stage, not the
-    in-memory small case, are the 100 TB bottleneck.
+    - array-native reassembly beats exploding every word and
+      re-collecting ``struct(pos, word)`` per doc: 5.9 vs 13.1 s on
+      the sf0.01-derived 500k corpus, 6.1 vs 15.7 s on the sf0.1-derived
+      one. Its ``array_contains`` is O(len × cov) per doc, so a corpus
+      of long, mostly covered docs would favor the word stream;
+    - the total-count pre-filter leaves ONE full-volume exchange
+      instead of the two a plain ``count_distinct`` plans: 19.0 →
+      15.7 s at 2M docs (at 1M, where nothing spills, the extra pass
+      costs 5.7 → 6.7 s; kept for the shuffle bytes);
+    - persisting ``arr`` or the full gram stream is slower or no
+      faster at 500k docs (9.1 and 6.6 s against 6.7 s);
+    - persisting the candidate-pruned stream, which two passes read,
+      took the 500k minimum from 6.63 to 5.59 s;
+    - repartitioning the gram stream once on the gram key for all
+      three consumers is slower at 2M docs (27.7 s, 24.6 s with a
+      persist, against 24.0 s);
+    - releasing the candidate stream through the ``localCheckpoint``
+      costs about one small job (+0.5 s median at 500k) against
+      leaving it cached for the caller.
 
-    Docs shorter than ``n`` words contribute no shingles (guarded —
-    Spark's ``sequence(0, negative)`` counts DOWNWARD) and pass
-    through unchanged. Returns (id_col, clean_text, n_kept,
-    n_removed); a fully-boilerplate doc comes back with clean_text=''.
-    NULL-text docs pass through as clean_text=NULL with
-    n_kept=0/n_removed=0 (``split(NULL)`` is NULL, so such docs have
-    no tokens to keep or remove; the guards below pin the contract —
-    ADVICE r5 flagged that the bare array form emitted '' with NULL
-    counts).
-
-    Measured non-optimization (500k docs, interleaved min-of-2):
-    although ``arr`` is referenced 3× and ``grams`` 2×, persisting them
-    does NOT beat the recompute: persist(arr) LOSES (9.1 s vs 6.7 s
-    baseline — the cache write + tokenized-array storage costs more than
-    two extra codegen'd split passes) and persist(grams) is within noise
-    (6.6 s). Unlike the triangle-orientation case (where the re-run
-    subtree contained a full shuffle), these branches recompute only
-    scan+project work that whole-stage codegen makes cheap. Don't add
-    persists here without re-measuring.
-
-    2M-doc floor check + second negative result (3 interleaved
-    cache-cleared rounds per variant, MIN per variant — minute-scale
-    throughput swings on the measuring VM reach 3×, so only interleaved
-    minima are admissible): at 2M sf0.1-derived docs the candidate/hot
-    gram tables reach ~2.27M rows (≈18 MB) — past the broadcast
-    threshold, so AQE plans the cand/hot joins as shuffle joins and the
-    gram stream crosses the exchange for the joins too, not just the
-    pre-screen groupBy. Pre-partitioning ``grams`` once on the gram key
-    so all three consumers share one exchange (repartition 27.7 s /
-    repartition+persist 24.6 s) does NOT beat the shipped form (23.96
-    s): the explicit exchange carries the full (id, pos, gram) payload
-    while the groupBy exchange ships partially-aggregated key/count
-    pairs, and SMJ sorts eat the rest. Floor-to-floor the shipped form
-    is ~0.92× linear (500k 6.5 s → 2M 24.0 s); the 55-62 s 2M points in
-    the r6 scale-curve artifact are noise-window captures (same code,
-    same corpus, minutes apart), not superlinearity.
+    Returns (id_col, clean_text, n_kept, n_removed); docs shorter
+    than ``n`` words pass through unchanged and a fully-boilerplate
+    doc comes back with clean_text=''. NULL-text docs come back as
+    clean_text=NULL with n_kept=0/n_removed=0.
     """
     if n < 1:
         raise ValueError(f"span width must be >= 1, got {n}")
-    arr = docs.select(
-        id_col, F.split(F.col(text_col), " ").alias("_a")
-    )
-    starts = F.when(
-        F.size("_a") >= n, F.sequence(F.lit(0), F.size("_a") - n)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = arr.select(
+    arr = docs.select(id_col, F.split(_col(text_col), " ").alias("_a"))
+    grams = _token_windows(arr, [id_col], F.col("_a"), n).select(
         id_col,
-        F.explode(starts).alias("pos"),
-        F.col("_a"),
-    ).select(
-        id_col,
-        "pos",
-        F.xxhash64(F.expr(f"slice(_a, pos + 1, {n})")).alias("gram"),
+        F.col("_p").alias("pos"),
+        F.xxhash64(F.expr(f"slice(_tk, _p + 1, {n})")).alias("gram"),
     )
     # Total-count pre-filter: the only full-volume exchange. Its
     # survivors (total occurrences > max_docs) are a superset of the
@@ -453,41 +390,14 @@ def remove_duplicated_spans(
         )
         .select("gram")
     )
-    # r12 optimization round, two changes measured together (500k
-    # corpus, 5-round interleaved: min 6.63 -> 5.59 s, median 8.87 ->
-    # 8.22 s on a noisy box; outputs collect-identical at sf0.01 and
-    # oracle-replayed tri-SF):
-    # 1. The candidate-pruned gram stream is PERSISTED when two
-    #    consumers exist (the exact distinct-count pass AND the
-    #    coverage pass) — previously each consumer recomputed the
-    #    full tokenize+explode+hash scan and re-joined cand, so the
-    #    corpus-volume gram projection ran THREE times. g2 is
-    #    candidate-bounded (occurrences of >max_docs-count grams —
-    #    boilerplate-scale, ~3% of gram volume on the curve corpus),
-    #    nothing like the full-gram/arr persists measured as losses
-    #    above (that negative result stands for corpus-volume
-    #    tables). The cache is released in-operator (try/finally
-    #    below) — no caller clearCache() obligation remains.
-    # 2. The `.distinct()` between the coverage explode and
-    #    collect_set is REMOVED: collect_set is duplicate-insensitive
-    #    (set semantics), so set membership is unchanged. RECORD
-    #    CORRECTION (r13, VERDICT r12 What's-wrong #1): the r12 claim
-    #    that this removed an Exchange was WRONG — Catalyst
-    #    (RemoveRedundantAggregates under the duplicate-agnostic
-    #    collect_set) had already eliminated the distinct; both r12
-    #    before-dumps show no distinct aggregate and identical
-    #    exchange structure. Code hygiene only, zero plan delta; the
-    #    family's measured r12 win belongs to change 1 alone.
     # `covered` shares lineage with `arr`, so joining on same-named
     # columns would trip Spark's "trivially true equals predicate"
     # auto-disambiguation warning (harmless but log-spam) — the
-    # coverage side's key columns are renamed instead.
+    # coverage side's key columns are renamed instead. collect_set is
+    # duplicate-insensitive, so the coverage explode needs no distinct().
     def _cov_per_doc(hot_occ: DataFrame) -> DataFrame:
         covered = hot_occ.select(
-            F.col(id_col).alias("_cid"),
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + (n - 1))
-            ).alias("cpos"),
+            F.col(id_col).alias("_cid"), _covered("pos", n).alias("cpos")
         )
         return covered.groupBy("_cid").agg(
             F.collect_set("cpos").alias("_cov")
@@ -499,27 +409,11 @@ def remove_duplicated_spans(
         # whole plan stays lazy.
         cov_per_doc = _cov_per_doc(grams.join(cand, "gram"))
     else:
-        # r13 (VERDICT r12 items 5/7): g2's cache no longer outlives
-        # the call. Both g2 consumers — the exact distinct-count pass
-        # and the coverage explode — are drained HERE by eagerly
-        # materializing the per-doc coverage table (boilerplate-scale:
-        # one row per doc owning a hot span, a few ints each) via
-        # ``localCheckpoint``; the try/finally then releases g2
-        # deterministically instead of leaking one cached
-        # candidate-gram table per call into the session (the r12
-        # shape relied on the caller's clearCache()). The returned
-        # plan references only the checkpointed coverage table and the
-        # token arrays, so it stays lazy for the cheap reassembly
-        # tail. Trade (guide §5): a localCheckpoint intermediate is
-        # not replayable if an executor dies mid-JOB downstream — at
-        # this table's size the re-run cost is one operator call, and
-        # the r12 alternative leaked storage instead. Measured at the
-        # 500k bench corpus (3 process-interleaved pairs, r12 tree vs
-        # r13 tree, min-of-2 each): r12 persist mins 6.12/6.71/7.31
-        # vs r13 release 6.71/7.38/8.52 — the release costs ~one
-        # extra small job (+0.5 s median) inside the key's 30-40%
-        # box spread; the same-round bench-protocol trend still read
-        # 10.79 -> 6.86 s (numbers in OPTIMIZATION_r13.md section 7).
+        # Both g2 consumers (the exact distinct-count pass and the
+        # coverage explode) are drained here by eagerly checkpointing
+        # the per-doc coverage table (one row per doc owning a hot
+        # span), so g2 is released before the call returns and the
+        # returned plan stays lazy for the reassembly tail.
         g2 = grams.join(cand, "gram").persist()
         try:
             hot = (
@@ -656,6 +550,25 @@ GOPHER_TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
 GOPHER_DUP_NGRAM_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 
 
+def _gram_windows(
+    df: DataFrame,
+    keys: list[str],
+    toks: "F.Column",
+    ns: list[int] | tuple[int, ...],
+) -> DataFrame:
+    """``(keys..., _tk, _p, _n)``: one row per window of each length in
+    ``ns``: the :func:`~.dedup._token_windows` starts of the shortest
+    length, crossed with every length and kept where the window fits."""
+    if min(ns) < 1:
+        raise ValueError(f"n-gram lengths must be >= 1, got {ns}")
+    lens = ", ".join(str(int(n)) for n in ns)
+    return (
+        _token_windows(df, keys, toks, min(ns))
+        .withColumn("_n", F.expr(f"explode(array({lens}))"))
+        .where("_p + _n <= size(_tk)")
+    )
+
+
 def _gopher_gram_masses(
     df: DataFrame,
     id_col: str,
@@ -698,10 +611,10 @@ def _gopher_gram_masses(
     inflate. Every ratio is one integer-sum divided once — IEEE
     bit-stable across engines.
 
-    Plan shape: ONE posexplode of the token array, cross-expanded to
-    the 9 gram lengths in the same projection (9 rows per position,
-    no second explode stage), then ONE ``repartition(id)`` exchange
-    of the raw gram stream — hash partitioning on the doc id
+    Plan shape: the windows of all 9 gram lengths from one token
+    array (:func:`_gram_windows`, both explodes in one stage), then
+    ONE ``repartition(id)`` exchange of the raw gram stream — hash
+    partitioning on the doc id
     satisfies the ClusteredDistribution of ALL downstream aggregates
     ((id, n, gh) counts, (id, n) masses, the final (id) pivot: subset
     rule), so the whole collapse chain runs exchange-free after it.
@@ -724,30 +637,15 @@ def _gopher_gram_masses(
             "array_append(acc, element_at(acc, -1) + length(t)))"
         ),
     )
-    pos = base.select(
-        id_col,
-        "_tk",
-        "_pf",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.size("_tk") - 1, F.lit(0)))
-        ).alias("_i"),
-    ).filter(F.size("_tk") > 0)
     grams = (
-        pos.select(
-            id_col,
-            "_tk",
-            "_pf",
-            "_i",
-            F.explode(F.array(*[F.lit(n) for n in ns])).alias("_n"),
-        )
-        .filter(F.col("_i") + F.col("_n") <= F.size("_tk"))
+        _gram_windows(base, [id_col, "_pf"], F.col("_tk"), ns)
         .select(
             id_col,
             "_n",
-            F.xxhash64(F.expr("slice(_tk, _i + 1, _n)")).alias("_gh"),
+            F.xxhash64(F.expr("slice(_tk, _p + 1, _n)")).alias("_gh"),
             (
-                F.element_at("_pf", F.col("_i") + F.col("_n") + 1)
-                - F.element_at("_pf", F.col("_i") + 1)
+                F.element_at("_pf", F.col("_p") + F.col("_n") + 1)
+                - F.element_at("_pf", F.col("_p") + 1)
                 + F.col("_n")
                 - 1
             ).alias("_gl"),
@@ -1025,97 +923,30 @@ def hashed_ngram_buckets(
 ) -> DataFrame:
     """One ``(id, _b)`` row per word n-gram occurrence, ``_b`` a hash
     bucket in ``[0, num_buckets)`` — the hashed bag-of-ngrams
-    featurization DSIR and :func:`linear_text_classifier` share
-    (extracted r8 so the two cannot drift).
+    featurization DSIR and :func:`linear_text_classifier` share.
+    The grams are the ``ngram_ns``-token windows of the lowercased
+    tokens (:func:`_gram_windows`), hashed per exploded row inside a
+    codegen projection: building them as strings in ``ngrams()``'s
+    per-doc lambdas measured 7.2 s against 0.6 s at sf0.1.
 
-    ``hash_fn='xxhash64'`` is the production flavor: hash the raw
-    TOKEN SLICE from an exploded start-position table — no gram
-    string is ever built. The string path (ngrams()'s transform +
-    array_join HOF lambdas, evaluated outside whole-stage codegen)
-    measured 7.2 s vs 0.6 s for this featurization at sf0.1 — the
-    same 10×+ HOF-vs-codegen gap _hashed_shingle_table documents.
-    ``hash_fn='md5'`` is the DuckDB-replayable flavor: gram strings,
+    ``hash_fn='xxhash64'`` is the production flavor: the raw token
+    slice is hashed. ``hash_fn='md5'`` is the DuckDB-replayable
+    flavor: the gram string (the slice joined by single spaces),
     hex-parsed md5 — the house cross-engine RNG."""
+    gram = "slice(_tk, _p + 1, _n)"
     if hash_fn == "xxhash64":
-        base = df.select(
-            F.col(id_col),
-            tokens(F.lower(F.col(text_col))).alias("_tk"),
+        h = f"xxhash64({gram})"
+    elif hash_fn == "md5":
+        h = (
+            f"CAST(conv(substring(md5(array_join({gram}, ' ')), 1, 15),"
+            " 16, 10) AS BIGINT)"
         )
-        pos = base.select(
-            id_col,
-            "_tk",
-            F.explode(
-                F.sequence(F.lit(0), F.size("_tk") - 1)
-            ).alias("_i"),
-        ).filter(F.size("_tk") > 0)
-        g = pos.select(
-            id_col,
-            "_tk",
-            "_i",
-            F.explode(
-                F.array(*[F.lit(n) for n in ngram_ns])
-            ).alias("_n"),
-        ).filter(F.col("_i") + F.col("_n") <= F.size("_tk"))
-        return g.select(
-            id_col,
-            F.pmod(
-                F.xxhash64(F.expr("slice(_tk, _i + 1, _n)")),
-                F.lit(num_buckets),
-            ).alias("_b"),
-        )
-    if hash_fn == "md5":
-        # r12 optimization round: same exploded-position structure as
-        # the xxhash64 branch, building each gram STRING per exploded
-        # row with codegen'd array_join(slice(...)) — byte-identical
-        # to ngrams()'s strings (same tokens(lower(text)), same
-        # single-space join), so md5 → bucket values are unchanged
-        # and every md5-flavor oracle replays bit-exact. What it
-        # removes is the per-doc HOF lambda chain (transform +
-        # array_join inside ngrams(), then flatten + array of TWO
-        # full gram-string arrays materialized per doc before the
-        # explode) — the measured slow class this module documents
-        # (string path 7.2 s vs 0.6 s for the xxhash64 featurization
-        # at sf0.1). Bench evidence in OPTIMIZATION_r12.md
-        # (quality_classifier_train is the heaviest consumer).
-        base = df.select(
-            F.col(id_col),
-            tokens(F.lower(F.col(text_col))).alias("_tk"),
-        )
-        pos = base.select(
-            id_col,
-            "_tk",
-            F.explode(
-                F.sequence(F.lit(0), F.size("_tk") - 1)
-            ).alias("_i"),
-        ).filter(F.size("_tk") > 0)
-        g = pos.select(
-            id_col,
-            "_tk",
-            "_i",
-            F.explode(
-                F.array(*[F.lit(n) for n in ngram_ns])
-            ).alias("_n"),
-        ).filter(F.col("_i") + F.col("_n") <= F.size("_tk"))
-        return g.select(
-            id_col,
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.array_join(
-                                F.expr("slice(_tk, _i + 1, _n)"), " "
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-                F.lit(num_buckets),
-            ).alias("_b"),
-        )
-    raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    else:
+        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    toks = tokens(F.lower(_col(text_col)))
+    return _gram_windows(df, [id_col], toks, ngram_ns).selectExpr(
+        _q(id_col), f"pmod({h}, {int(num_buckets)}) AS _b"
+    )
 
 
 def linear_text_classifier(

@@ -42,16 +42,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from convert_parquet_to_csv_spark.functions.text import (
+    _col,
+    _q,
     doc_fingerprint,
     shingles,
     tokens,
 )
-
-
-def _q(name: str) -> str:
-    """``name`` as a backquoted SQL identifier (inner backquotes doubled),
-    so any column name can be spliced into SQL expression text."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 # --------------------------------------------------------------------------
@@ -125,6 +121,49 @@ def _hashed_shingle_table(
         " ELSE CAST(array() AS ARRAY<INT>) END) AS _p",
         "_tk",
     ).selectExpr(q, f"xxhash64(slice(_tk, _p + 1, {k})) AS _sh")
+
+
+def _token_windows(
+    df: DataFrame, keys: list[str], toks: Column, k: int
+) -> DataFrame:
+    """``(keys..., _tk, _p)``: one row per ``k``-token window of the
+    token array ``toks``, ``_p`` its 0-based start, so the window is
+    ``slice(_tk, _p + 1, k)``. ``keys`` are columns of ``df`` carried
+    onto every row. A row whose array is NULL or shorter than ``k``
+    yields no windows: the guard must precede ``sequence``, which
+    counts downward for ``sequence(0, negative)``. It sits inside the
+    explode rather than in a ``where``, because Catalyst pushes such a
+    filter below the projection and tokenizes every doc twice (the
+    window stage of sf0.1 documents took 0.50 s against 0.35 s, median
+    of 8 on local[4], 4 cores)."""
+    cols = [_q(c) for c in keys]
+    return df.select(*cols, toks.alias("_tk")).selectExpr(
+        *cols,
+        "_tk",
+        f"explode(CASE WHEN size(_tk) >= {int(k)}"
+        f" THEN sequence(0, size(_tk) - {int(k)}) END) AS _p",
+    )
+
+
+def _covered(p: str, k: int) -> Column:
+    """The ``k`` token positions a window starting at ``p`` covers,
+    exploded: ``p .. p + k - 1``."""
+    return F.expr(f"explode(sequence({p}, {p} + {int(k) - 1}))")
+
+
+def _lcp(s: str, nb: Column) -> Column:
+    """Longest common prefix length of the token arrays ``s`` and
+    ``nb``; 0 when ``nb`` is NULL. ``array_position`` returns 0, not
+    NULL, when no element differs (identical slices), so the ``nullif``
+    routes that case to the shorter length
+    (``test_lcp_identical_slices_full_cap`` pins it)."""
+    zipped = F.zip_with(s, nb, lambda x, y: x.eqNullSafe(y))
+    return F.when(nb.isNull(), F.lit(0)).otherwise(
+        F.coalesce(
+            F.nullif(F.array_position(zipped, F.lit(False)), F.lit(0)) - 1,
+            F.least(F.size(s), F.size(nb)),
+        )
+    )
 
 
 # --------------------------------------------------------------------------
@@ -374,16 +413,12 @@ def winnow_fingerprints(
     """
     if k < 1 or window < 1:
         raise ValueError(f"k and window must be >= 1, got {k}, {window}")
-    base = df.select(id_col, tokens(text_col).alias("_tk"))
-    n = F.size("_tk")
-    starts = F.when(
-        n >= k, F.sequence(F.lit(0), n - k)
-    ).otherwise(F.array().cast("array<int>"))
-    exploded = base.select(
+    exploded = _token_windows(df, [id_col], tokens(text_col), k).select(
         id_col,
-        F.explode(starts).alias("pos"),
+        F.col("_p").alias("pos"),
         "_tk",
-        (n - (k - 1)).alias("_g"),  # gram count for the start bound
+        # gram count, for the window-start bound below
+        (F.size("_tk") - (k - 1)).alias("_g"),
     )
     slice_expr = F.expr(f"slice(_tk, pos + 1, {k})")
     if hash_fn == "xxhash64":
@@ -818,14 +853,7 @@ def duplicated_span_extents(
     hotness rule keeps the single full-volume exchange map-side-
     combinable (cf. remove_duplicated_spans' measured note on why
     the distinct-doc rule is the expensive one)."""
-    base = df.select(id_col, tokens(text_col).alias("_tk")).filter(
-        F.size("_tk") >= k
-    )
-    grams = base.select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.size("_tk") - k)).alias("_p"),
-        "_tk",
-    ).select(
+    grams = _token_windows(df, [id_col], tokens(text_col), k).select(
         id_col,
         "_p",
         F.xxhash64(F.expr(f"slice(_tk, _p + 1, {k})")).alias("_h"),
@@ -845,12 +873,7 @@ def duplicated_span_extents(
     )
     covered = (
         grams.join(hot, "_h")
-        .select(
-            id_col,
-            F.explode(
-                F.sequence(F.col("_p"), F.col("_p") + k - 1)
-            ).alias("pos"),
-        )
+        .select(id_col, _covered("_p", k).alias("pos"))
         .distinct()
     )
     w = Window.partitionBy(id_col).orderBy("pos")
@@ -961,14 +984,7 @@ def maximal_duplicated_extents(
     against 93.6 s for a session conf of 128.
     """
     slice_len = k + w_cap
-    base = df.select(id_col, tokens(text_col).alias("_tk")).filter(
-        F.size("_tk") >= k
-    )
-    occ = base.select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.size("_tk") - k)).alias("_p"),
-        "_tk",
-    ).select(
+    occ = _token_windows(df, [id_col], tokens(text_col), k).select(
         id_col,
         "_p",
         F.expr(f"slice(_tk, _p + 1, {slice_len})").alias("_s"),
@@ -1009,29 +1025,13 @@ def maximal_duplicated_extents(
     lag_s = F.lag("_s").over(wg)
     lead_s = F.lead("_s").over(wg)
 
-    def lcp_with(nb: Column) -> Column:
-        # array_position returns 0 — not NULL — when `false` is
-        # absent (identical slices), so nullif is load-bearing: the
-        # first cut lost every full-cap match to lcp = -1 (caught by
-        # the sf0.01 gate; test_lcp_identical_slices pins it).
-        zipped = F.zip_with("_s", nb, lambda x, y: x.eqNullSafe(y))
-        return F.when(nb.isNull(), F.lit(0)).otherwise(
-            F.coalesce(
-                F.nullif(
-                    F.array_position(zipped, F.lit(False)), F.lit(0)
-                )
-                - 1,
-                F.least(F.size("_s"), F.size(nb)),
-            )
-        )
-
     if min_count == 2:
         # e_{i-1} = lcp with lag, e_i = lcp with lead — the
         # windowed-max below, unrolled
         scored = occ.select(
             id_col,
             "_p",
-            F.greatest(lcp_with(lag_s), lcp_with(lead_s))
+            F.greatest(_lcp("_s", lag_s), _lcp("_s", lead_s))
             .cast("bigint")
             .alias("_l"),
         )
@@ -1056,7 +1056,7 @@ def maximal_duplicated_extents(
         wgt = Window.partitionBy("_gh").orderBy(*total_order)
         wmax = wgt.rowsBetween(-(min_count - 1), 0)
         scored = occ.withColumn(
-            "_e", lcp_with(F.lead("_s", min_count - 1).over(wgt))
+            "_e", _lcp("_s", F.lead("_s", min_count - 1).over(wgt))
         ).select(
             id_col,
             "_p",
@@ -1230,12 +1230,8 @@ def remove_within_doc_repeats(
     # cross-contaminate each other's "first occurrence" while their
     # removals lose the join back. Same exclusion contract as
     # remove_duplicated_lines / train_linear_classifier.
-    grams = base.filter(
-        (F.size("_tk") >= k) & F.col(id_col).isNotNull()
-    ).select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.size("_tk") - k)).alias("_p"),
-        "_tk",
+    grams = _token_windows(
+        base.where(F.col(id_col).isNotNull()), [id_col], F.col("_tk"), k
     ).select(
         id_col,
         "_p",
@@ -1245,12 +1241,7 @@ def remove_within_doc_repeats(
     repeats = grams.join(first, [id_col, "_h"]).filter(
         F.col("_p") > F.col("_fp")
     )
-    covered = repeats.select(
-        F.col(id_col),
-        F.explode(F.sequence(F.col("_p"), F.col("_p") + k - 1)).alias(
-            "_rp"
-        ),
-    )
+    covered = repeats.select(F.col(id_col), _covered("_p", k).alias("_rp"))
     # 0-based positions match the transform index in the shared
     # reassembly; NULL coverage = doc has no repeated span.
     return _reassemble_minus_positions(
@@ -1573,23 +1564,14 @@ def _xset_position_frame(
     """The cross-set suffix window pass of
     :func:`shared_extent_contamination`, stopping at the per-corpus-
     position neighbor frame ``(_id, _p, _s, _up, _dn)`` — factored
-    out (r11) so the incremental path can persist and merge position
-    tables. Expressions identical to the r10 kernel; the plan is
-    unchanged up to column pruning."""
+    out so the incremental path can persist and merge position
+    tables. Both sides' positions are their :func:`_token_windows`."""
     bench_id = bench_id_col or id_col
     slice_len = k + w_cap
 
     def occ_of(df: DataFrame, idc: str, side: int) -> DataFrame:
-        base = df.select(
-            F.col(idc).alias("_id"), tokens(text_col).alias("_tk")
-        ).filter(F.size("_tk") >= k)
-        return base.select(
-            "_id",
-            F.explode(
-                F.sequence(F.lit(0), F.size("_tk") - k)
-            ).alias("_p"),
-            "_tk",
-        ).select(
+        base = df.select(_col(idc).alias("_id"), tokens(text_col).alias("_tk"))
+        return _token_windows(base, ["_id"], F.col("_tk"), k).select(
             "_id",
             "_p",
             F.expr(f"slice(_tk, _p + 1, {slice_len})").alias("_s"),
@@ -1641,24 +1623,6 @@ def _xset_position_frame(
     )
 
 
-def _xset_lcp_against(nb: Column) -> Column:
-    """LCP of the corpus slice ``_s`` against a neighbor struct's
-    ``_bs`` (0 when the neighbor is NULL) — the r10 expression,
-    shared by the from-scratch and merged-position paths."""
-    zipped = F.zip_with(
-        "_s", nb["_bs"], lambda x, y: x.eqNullSafe(y)
-    )
-    return F.when(nb.isNull(), F.lit(0)).otherwise(
-        F.coalesce(
-            F.nullif(
-                F.array_position(zipped, F.lit(False)), F.lit(0)
-            )
-            - 1,
-            F.least(F.size("_s"), F.size(nb["_bs"])),
-        )
-    )
-
-
 def _xset_scored(frame: DataFrame, k: int) -> DataFrame:
     """Neighbor frame → per-position ``(_l, _partner)`` with the
     ``>= k`` report filter — the r10 scoring expressions (partner
@@ -1672,8 +1636,8 @@ def _xset_scored(frame: DataFrame, k: int) -> DataFrame:
             "_s",
             "_up",
             "_dn",
-            _xset_lcp_against(F.col("_up")).cast("bigint").alias("_lu"),
-            _xset_lcp_against(F.col("_dn")).cast("bigint").alias("_ld"),
+            _lcp("_s", F.col("_up._bs")).cast("bigint").alias("_lu"),
+            _lcp("_s", F.col("_dn._bs")).cast("bigint").alias("_ld"),
             F.col("_up._bid").alias("_bu"),
             F.col("_dn._bid").alias("_bd"),
         )

@@ -24,36 +24,59 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Knobs that matter at scale; overridable via extra_conf.
-_DEFAULT_CONF: dict[str, str] = {
+# The confs every registered query SEMANTICALLY depends on and that
+# are runtime-settable (plain SQL confs, not static/core confs like
+# driver.memory or spark.ui.*). A query gate may own its own
+# SparkSession, so relying on get_spark() to have set these is an
+# environment-coupling bug: a pushdown conf set only at session build
+# left the driver's session unable to plan the Python data source
+# (DATA_SOURCE_PUSHDOWN_DISABLED). __spark_entry__ pins these via
+# spark.conf.set() at the top of EVERY query call.
+RUNTIME_PINNED_CONF: dict[str, str] = {
+    # Oracle contract: UTC rendering of naive timestamps (the DuckDB
+    # oracle uses naive timestamps).
+    "spark.sql.session.timeZone": "UTC",
+    # sources/pysource.py readers implement pushFilters; Spark 4.1
+    # refuses to plan them unless this is on.
+    "spark.sql.python.filterPushdown.enabled": "true",
+    # Arrow-batched pandas interchange everywhere Python appears.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # ANSI SQL semantics (the Spark 4 default), pinned because it is
+    # load-bearing: _reassemble_minus_positions' NULL contract relies
+    # on size(NULL) = NULL; with ANSI off, legacy size(NULL) = -1
+    # silently corrupts n_kept/n_removed to -1/0.
+    "spark.sql.ansi.enabled": "true",
     # Adaptive query execution: coalesce post-shuffle partitions, split
     # skewed partitions, convert sort-merge→broadcast at runtime.
+    # Several plans (skew-join splitting, bucketed-join exchange
+    # elision checks) assume adaptive execution semantics.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Coalescing floor (Spark's default is 1 MB): keeps a shuffle of a
-    # few MB spread over all local cores instead of merged into one task.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k",
-    # Deterministic cross-engine timestamp semantics (oracle = DuckDB,
-    # which uses naive timestamps).
-    "spark.sql.session.timeZone": "UTC",
-    # Arrow for toPandas/pandas_udf exchange.
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Vectorized parquet reader is on by default; pinned here as doc.
-    "spark.sql.parquet.enableVectorizedReader": "true",
-    # Custom Python data sources (sources/pysource.py) implement
-    # pushFilters; Spark refuses to plan them unless pushdown is
-    # explicitly enabled.
-    "spark.sql.python.filterPushdown.enabled": "true",
-    # 128 MiB input splits — the right granularity for large scans; on
-    # tiny local fixtures each file is one split anyway.
-    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    # Local-run shuffle width. On a real cluster this is sized to
-    # cores×executors (or left to AQE's initialPartitionNum); the env
-    # var lets the driver/bench override without code changes.
+    # Shuffle width. Semantically neutral but load-bearing for gate
+    # wall time: Spark's stock 200 costs 2-6x on the small gate
+    # fixtures (the triangle query's orientation+intersect stages ran
+    # 4.5-7.9 s at 200 partitions vs 2.3-2.7 s at 32 on local[32]; AQE
+    # cannot coalesce across cached-plan boundaries). On a real cluster
+    # this is sized to cores×executors (or left to AQE's
+    # initialPartitionNum); the env var is the override.
     "spark.sql.shuffle.partitions": os.environ.get(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
     ),
+}
+
+# Every conf get_spark() builds with: the pinned confs plus static and
+# performance-only knobs. Overridable via extra_conf.
+_DEFAULT_CONF: dict[str, str] = {
+    **RUNTIME_PINNED_CONF,
+    # Coalescing floor (Spark's default is 1 MB): keeps a shuffle of a
+    # few MB spread over all local cores instead of merged into one task.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k",
+    # Vectorized parquet reader is on by default; pinned here as doc.
+    "spark.sql.parquet.enableVectorizedReader": "true",
+    # 128 MiB input splits — the right granularity for large scans; on
+    # tiny local fixtures each file is one split anyway.
+    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     # Quieter, faster local runs; harmless on a cluster.
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
@@ -65,49 +88,6 @@ _DEFAULT_CONF: dict[str, str] = {
     # env var / extra_conf override applies.
     "spark.driver.memory": os.environ.get(
         "SPARK_GRAFT_DRIVER_MEMORY", "16g"
-    ),
-}
-
-# The subset of _DEFAULT_CONF every registered query SEMANTICALLY
-# depends on and that is runtime-settable (plain SQL confs, not
-# static/core confs like driver.memory or spark.ui.*). The driver
-# gate owns its own SparkSession, so relying on get_spark() to have
-# set these is an environment-coupling bug — CORRECTNESS_r03's one
-# red row (`python_datasource_scan`,
-# DATA_SOURCE_PUSHDOWN_DISABLED) was exactly this class: the conf
-# existed only in _DEFAULT_CONF, the driver's session never saw it.
-# __spark_entry__ pins these via spark.conf.set() at the top of
-# EVERY query call (VERDICT r3 item 1).
-RUNTIME_PINNED_CONF: dict[str, str] = {
-    # Oracle contract: UTC rendering of naive timestamps.
-    "spark.sql.session.timeZone": "UTC",
-    # sources/pysource.py readers implement pushFilters; Spark 4.1
-    # refuses to plan them unless this is on.
-    "spark.sql.python.filterPushdown.enabled": "true",
-    # Arrow-batched pandas interchange everywhere Python appears.
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # ANSI SQL semantics (the Spark 4 default, pinned per the
-    # repo's own doctrine that every SEMANTICALLY load-bearing
-    # runtime conf must be set per query, not inherited — the
-    # CORRECTNESS_r03 pushdown lesson). Load-bearing example
-    # (ADVICE r8): _reassemble_minus_positions' NULL contract
-    # relies on size(NULL) = NULL; with ANSI off, legacy
-    # size(NULL) = -1 silently corrupts n_kept/n_removed to -1/0.
-    "spark.sql.ansi.enabled": "true",
-    # AQE: several plans (skew-join splitting, bucketed-join
-    # exchange elision checks) assume adaptive execution semantics.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Shuffle width. Semantically neutral but load-bearing for gate
-    # wall time: Spark's stock 200 costs 2-6x on the small gate
-    # fixtures (measured: the triangle query's orientation+intersect
-    # stages run 4.5-7.9 s at 200 partitions vs 2.3-2.7 s at 32 on
-    # local[32]; AQE cannot coalesce across cached-plan boundaries).
-    # The env var is the cluster override, exactly as in
-    # _DEFAULT_CONF.
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
     ),
 }
 

@@ -8,6 +8,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from convert_parquet_to_csv_spark.functions.text import tokens
 from convert_parquet_to_csv_spark.operators import dedup as D
 
 BASE = (
@@ -1063,3 +1064,77 @@ def test_lsh_dedups_quote_column_names(spark):
         assert quoted.columns[0] == "doc id"
         assert sorted(tuple(r) for r in quoted.collect()) == want
         assert 0 < len(want) < n
+
+
+def test_text_dedups_quote_column_names(spark):
+    """The token-window operators read the text column through
+    ``tokens()``, which takes a ``str`` as one verbatim column name, so
+    columns named ``doc id`` and ``te`xt`` give the same output as
+    ``doc_id`` and ``text``."""
+    df, _ = _seeded_neardup_corpus(spark)
+    odd = df.withColumnRenamed("doc_id", "doc id").withColumnRenamed(
+        "text", "te`xt"
+    )
+
+    def build(d, id_col, text_col):
+        kw = {"id_col": id_col, "text_col": text_col}
+        return [
+            D.exact_dedup(d, **kw),
+            D.ngram_jaccard_pairs(d, persist=False, **kw),
+            D.containment_pairs(d, persist=False, **kw),
+            D.winnow_fingerprints(d, **kw),
+            D.duplicated_span_extents(d, **kw),
+            D.remove_within_doc_repeats(d, k=2, **kw),
+        ]
+
+    for plain, quoted in zip(
+        build(df, "doc_id", "text"), build(odd, "doc id", "te`xt")
+    ):
+        want = sorted(tuple(r) for r in plain.collect())
+        assert want
+        assert sorted(tuple(r) for r in quoted.collect()) == want
+
+
+def test_token_windows_enumerate_every_fitting_start(spark):
+    """``_token_windows`` yields exactly ``range(len(toks) - k + 1)``
+    per row: nothing for rows with fewer than k tokens, whitespace-only
+    text or NULL text, where ``sequence(0, size - k)`` would count
+    downward."""
+    k = 3
+    texts = {
+        0: "",
+        1: "a b",  # k - 1 tokens
+        2: "a b c",  # k
+        3: "a b c d",  # k + 1
+        4: "  \t ",
+        5: None,
+        6: " x  y z w v ",
+    }
+    df = spark.createDataFrame(
+        list(texts.items()), "doc_id LONG, text STRING"
+    )
+    got = sorted(
+        (r["doc_id"], r["_p"], tuple(r["_tk"]))
+        for r in D._token_windows(
+            df, ["doc_id"], tokens("text"), k
+        ).collect()
+    )
+    want = sorted(
+        (i, p, tuple(t.split()))
+        for i, t in texts.items()
+        if t is not None
+        for p in range(len(t.split()) - k + 1)
+    )
+    assert got == want
+    assert {i for i, _, _ in got} == {2, 3, 6}
+
+
+def test_covered_spans_exactly_k_positions(spark):
+    df = spark.createDataFrame([(0,), (5,)], "_p INT")
+    for k in (1, 2, 4):
+        got = sorted(
+            (r["_p"], r["pos"])
+            for r in df.select("_p", D._covered("_p", k).alias("pos"))
+            .collect()
+        )
+        assert got == [(p, p + d) for p in (0, 5) for d in range(k)]

@@ -235,6 +235,22 @@ def test_lcp_identical_slices_full_cap(spark):
     assert got == ref
     # positions 0..4 of both docs are cap-clipped 8-token extents
     assert (1, 0, 8, 8) in got and (2, 0, 8, 8) in got
+    # the LCP expression itself: identical slices (no differing
+    # element, so array_position is 0), a first-token mismatch,
+    # unequal lengths, a later mismatch and a NULL neighbour
+    pairs = spark.createDataFrame(
+        [
+            (1, ["a", "b", "c"], ["a", "b", "c"], 3),
+            (2, ["x", "b", "c"], ["a", "b", "c"], 0),
+            (3, ["a", "b"], ["a", "b", "c", "d"], 2),
+            (4, ["a", "b", "c", "d"], ["a", "b"], 2),
+            (5, ["a", "b", "c"], ["a", "b", "z"], 2),
+            (6, ["a", "b", "c"], None, 0),
+        ],
+        "i INT, _s ARRAY<STRING>, nb ARRAY<STRING>, want INT",
+    )
+    lcps = pairs.select("i", "want", D._lcp("_s", F.col("nb")).alias("l"))
+    assert all(r["l"] == r["want"] for r in lcps.collect())
 
 
 def _ref_cross_set(corpus, bench, k, w_cap):

@@ -233,9 +233,10 @@ def test_plans_md_sections_match_fresh_regen():
     audit pins its own session confs, which the plan text depends on)
     and requires each to equal the committed section byte for byte.
     The sample: the flagship conversion, the two exact-substring
-    decontamination kernels, and the two MinHash pipelines, whose
-    builders write their plans as SQL text. Full-file freshness is
-    ``python tools/plan_audit.py --check``."""
+    decontamination kernels, the two MinHash pipelines, whose
+    builders write their plans as SQL text, and two token-window
+    kernels (within-doc repeats, maximal extents). Full-file freshness
+    is ``python tools/plan_audit.py --check``."""
     import subprocess
 
     names = [
@@ -244,6 +245,8 @@ def test_plans_md_sections_match_fresh_regen():
         "decontaminate_exact_substr_incremental",
         "dedup_minhash",
         "dedup_minhash_incremental",
+        "dedup_within_doc_repeats",
+        "dedup_maximal_extents",
     ]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     run = subprocess.run(

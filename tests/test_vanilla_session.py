@@ -15,7 +15,10 @@ from __future__ import annotations
 
 import pytest
 
-from convert_parquet_to_csv_spark.session import RUNTIME_PINNED_CONF
+from convert_parquet_to_csv_spark.session import (
+    _DEFAULT_CONF,
+    RUNTIME_PINNED_CONF,
+)
 
 # Spark's out-of-the-box values for every conf the engine pins —
 # i.e. what the driver's stock session would report.
@@ -98,3 +101,10 @@ def test_entry_smoke_stock_session(stock_session):
 
     df = e.entry(stock_session)
     assert df.count() > 0
+
+
+def test_session_defaults_include_every_pinned_conf():
+    """get_spark() builds with every pinned conf at its pinned value,
+    so a repo-built session and a pinned stock session agree."""
+    for k, v in RUNTIME_PINNED_CONF.items():
+        assert _DEFAULT_CONF.get(k) == v, k
