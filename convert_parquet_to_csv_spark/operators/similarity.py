@@ -124,32 +124,6 @@ def lsh_signature(vec_col, dim: int, nbits: int = 16, table: int = 0):
     return _sig_from_planes(vec_col, planes)
 
 
-def lsh_table_signatures(vec_col, dim: int, nbits: int, n_tables: int):
-    """``array<struct<_table int, _sig long>>`` — every table's
-    signature in one expression over a single 3-level plane literal
-    (table → bit → component). Explode it to get the (id, table, sig)
-    bucket layout.
-
-    Pure-Column flavor (no Python anywhere). Higher-order-function
-    lambdas evaluate interpreted per element, so the n_tables·nbits·dim
-    multiply-adds per row cost ~9 s for 32×5×64 over 5k rows — prefer
-    :func:`lsh_table_signatures_arrow` on the hot path; this stays as
-    the dependency-free reference implementation."""
-    all_planes = F.lit(
-        [
-            [_hyperplane(dim, t * nbits + b + 1) for b in range(nbits)]
-            for t in range(n_tables)
-        ]
-    )
-    return F.transform(
-        all_planes,
-        lambda tbl, t: F.struct(
-            t.cast("int").alias("_table"),
-            _sig_from_planes(vec_col, tbl).alias("_sig"),
-        ),
-    )
-
-
 def lsh_table_signatures_arrow(dim: int, nbits: int, n_tables: int):
     """Vectorized signature engine: a pandas UDF computing ALL table
     signatures per batch as ONE numpy matmul (N×dim @ dim×(T·B)) —
@@ -157,22 +131,21 @@ def lsh_table_signatures_arrow(dim: int, nbits: int, n_tables: int):
     whole-stage codegen handles worst (dense per-row linear algebra
     through interpreted HOF lambdas; measured ~50× faster at sf0.1).
 
-    Same hyperplanes and bit-packing as the Column flavor (first plane
-    = most significant bit). Returns a UDF: ``udf(vec_col) →
+    Same hyperplanes and bit-packing as :func:`lsh_signature` (first
+    plane = most significant bit). Returns a UDF: ``udf(vec_col) →
     array<long>`` of length ``n_tables``; ``posexplode`` it to the
     (table, sig) bucket layout. Sign-at-zero could differ from the
     sequential fold in the last ulp of a projection, which moves a
     vector to a neighboring bucket — bucketing is probabilistic
-    already, so recall gates are unaffected; within one run both sides
-    use the same engine, so candidates stay consistent.
+    already, so recall gates are unaffected; both sides of a join use
+    this UDF, so candidates stay consistent.
     """
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
     if pd is None:
         raise ImportError(
-            "pandas/numpy unavailable — use lsh_table_signatures "
-            "(engine='sql') instead"
+            "pandas/numpy unavailable — LSH table signatures need them"
         )
 
     planes = np.array(
@@ -209,7 +182,6 @@ def topk_lsh(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     exclude_self: bool = True,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: exact scoring restricted to LSH candidates.
 
@@ -222,34 +194,19 @@ def topk_lsh(
     (probe cost), n_tables buys recall linearly in index size. The
     explode is n_tables× on (id, bucket) keys only; vectors themselves
     are not replicated through the shuffle (joined back by id), and
-    candidate pairs are deduped before exact scoring.
+    candidate pairs are deduped before exact scoring. Signatures come
+    from :func:`lsh_table_signatures_arrow`, one batched matmul per
+    Arrow batch."""
+    sig_udf = lsh_table_signatures_arrow(dim, nbits, n_tables)
 
-    ``engine``: 'arrow' (default) computes signatures via the
-    batched-matmul pandas UDF; 'sql' uses the pure-Column HOF
-    expression (no Python dependency, ~50× slower per row)."""
-    if engine == "arrow":
-        sig_udf = lsh_table_signatures_arrow(dim, nbits, n_tables)
+    def _buckets(df: DataFrame, out_id: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(out_id),
+            F.posexplode(sig_udf(F.col(vec_col))).alias("_table", "_sig"),
+        )
 
-        def _buckets(df: DataFrame, out_id: str) -> DataFrame:
-            return df.select(
-                F.col(id_col).alias(out_id),
-                F.posexplode(sig_udf(F.col(vec_col))).alias(
-                    "_table", "_sig"
-                ),
-            )
-
-        v_buckets = _buckets(vectors, "neighbor_id")
-        q_buckets = _buckets(queries, query_id_col)
-    else:
-        tables = F.explode(
-            lsh_table_signatures(F.col(vec_col), dim, nbits, n_tables)
-        ).alias("_tb")
-        v_buckets = vectors.select(
-            F.col(id_col).alias("neighbor_id"), tables
-        ).select("neighbor_id", "_tb._table", "_tb._sig")
-        q_buckets = queries.select(
-            F.col(id_col).alias(query_id_col), tables
-        ).select(query_id_col, "_tb._table", "_tb._sig")
+    v_buckets = _buckets(vectors, "neighbor_id")
+    q_buckets = _buckets(queries, query_id_col)
     candidates = (
         v_buckets.join(F.broadcast(q_buckets), ["_table", "_sig"])
         .select(query_id_col, "neighbor_id")

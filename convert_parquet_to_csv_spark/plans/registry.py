@@ -58,14 +58,13 @@ ORACLES: dict[str, str] = {}
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` under ``name``; optionally with DuckDB oracle SQL.
 
-    Queries without an oracle would get the driver's weaker rows-only
-    check — as of r6 that class is EMPTY and pinned empty by
-    tests/test_registry.py::test_every_query_has_an_oracle: ops whose
-    row sets aren't SQL-replayable (hash-family-dependent ANN/simhash,
+    Every query has an oracle (pinned by
+    tests/test_registry.py::test_every_query_has_an_oracle); without
+    one the driver would only check row counts. Ops whose row sets
+    aren't SQL-replayable (hash-family-dependent ANN/simhash,
     stub-decoded features, seeded RNG samples) are gated as property
-    oracles instead (data-anchored counts + TRUE-literal invariants
-    verified in-query; see similarity_queries._TOPK_GATE_ORACLE for
-    the canonical device).
+    oracles instead: data-anchored counts and TRUE-literal invariants
+    verified in-query (see similarity_queries._TOPK_GATE_ORACLE).
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -79,80 +78,18 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver gate checks a ~50-query prefix of this ordering each
-# round (CORRECTNESS_r01/r02/r03 are exact prefixes). Iteration
-# order of QUERIES/ORACLES is therefore a CORRECTNESS-COVERAGE
-# decision, not cosmetics.
-#
-# Rotation doctrine (held since r7): new queries gate the round they
-# are born (the never-gated class stays empty); the rest of the
-# 50-slot prefix rotates the OLDEST-signal class each round; queries
-# whose kernels or oracle TEXT changed re-gate the same round, with
-# result-CHANGED edits outranking refresh slots and result-unchanged
-# fixes trailing them. Signal-age histogram after r11 (latest driver
-# row per name, computed from the CORRECTNESS artifacts):
-#   r11:50  r10:50  r9:41  r8:43  r7:39  r6:47  r5:45  — floor r5.
-# ALL 45 r5-latest names sit in this round's gate prefix, so the
-# floor advances to r6 when CORRECTNESS_r12 lands.
-#
-# REGISTRY-BANDWIDTH POLICY (r11, VERDICT r10 item 2 — written down
-# because the arithmetic now binds). The driver gates EXACTLY 50
-# names per round (every r1–r10 artifact carries 50 rows), so each
-# round's budget is
-#   50 = canaries + day-one registrations + result-changed re-gates
-#        + oldest-class refresh,
-# and the floor advances one round per round ONLY if the ENTIRE
-# oldest class clears. Rules, in priority order:
-#   1. Day-one registration of new queries in the gate prefix is
-#      non-negotiable (the never-gated class stays empty).
-#   2. The floor clears WHOLE classes: when |oldest class| + day-one
-#      + canaries would exceed 50, REGISTRY GROWTH THROTTLES (fewer
-#      registrations that round) — never the floor, never rule 1.
-#   3. What earns a new registration: a capability absent from the
-#      surface (a new operator family or a semantically distinct
-#      composition). A strengthening of an existing capability
-#      EXTENDS the existing gate (tighter oracle, added property
-#      tests) instead of adding a name.
-#   4. Canary slots may be LENT to oldest-class members exercising
-#      the same seam (this round: csv_adversarial_roundtrip for the
-#      flagship CSV-dialect roundtrip, try_cast_zoo for the
-#      pinned-conf sentinel, arrow_interop_roundtrip for the
-#      Python/Arrow boundary; the mapInPandas seam rides
-#      multimodal_decode_ppm's day-one slot). The standing canaries
-#      return the next round.
-#   5. Steady state: ~315 names at ~45 per signal class is a 7-round
-#      full refresh cycle — acceptable because every oracle ALSO
-#      replays in-suite on every pytest run (the driver gate is the
-#      independent check, not the only check). Growth past ~330
-#      requires retiring a redundant gate per rule 3.
-# r12 arithmetic (executed exactly as the r11 ledger queued it): 3
-# returning standing canaries (rule 4 — the r11 lend expires) + 2
-# day-one registrations (quality_classifier_noise,
-# multimodal_wav_energy — both oracles prevalidated tri-SF in r11's
-# suite before this round began) + the COMPLETE 45-name r5-latest
-# class = 50.
-# r13 arithmetic (OPTIMIZATION round — no new queries, so rule 1 is
-# vacuous and the canary lend the r12 projection planned is
-# unnecessary): 3 standing canaries + the COMPLETE 47-name r6-latest
-# class = 50, floor -> r7 when CORRECTNESS_r13 lands. Signal-age
-# histogram after r12: r12:50 r11:50 r10:47 r9:41 r8:43 r7:39 r6:47.
-# The r6 window happens to re-gate four of this round's
-# touched/measured kernels with driver signal (dedup_minhash,
-# dedup_simhash — both carry the r13 bucket-explode rewrite —
-# similarity_topk_lsh/ivf); the other result-unchanged kernel edits
-# (span, incremental minhash, extents) trail per the doctrine and are
-# covered by the in-suite oracle replays (rule 5). The r12-projected
-# day-one registrations (multimodal_decode_bmp, fim_transform,
-# bitext_margin_mutual / multimodal_ahash_neardup) are BUILD-round
-# feature work, out of scope for an optimization round — they queue
-# for r14: canary lend (rule 4) + 39 r7-class + those registrations.
+# The driver's correctness gate checks the first 50 names of
+# ordered_names() each round, and FIRST_TIER comes first in that order,
+# so its order decides which queries get that independent check: new
+# queries and queries whose kernel or oracle text changed go ahead of
+# the names whose last gated result is oldest. Every oracle also
+# replays in the test suite on every run.
 FIRST_TIER: list[str] = [
-    # --- the standing canary slots (rule 4; no lend needed in r13) ---
+    # --- standing canaries, gated every round ---
     "convert_roundtrip",
     "python_datasource_scan",
     "multimodal_resize_geometry",
-    # --- refresh: the COMPLETE r6-latest class (47 names, floor ->
-    # r7), registration order ---
+    # --- refresh: the names gated longest ago, registration order ---
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_region_revenue",

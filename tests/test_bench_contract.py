@@ -1,18 +1,18 @@
-"""bench.py contract: the override map and noise-floor set must stay
-consistent with the registry — a stale name would silently drop a
-trend number (bench skips unknown names) or time the wrong plan."""
+"""bench.py contract: the protocol table emits exactly the committed key
+set, and every query it times is registered or one of the raw-operator
+plans the bench times in place of a registered property gate."""
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
 import sys
 
 import pytest
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 
 @pytest.fixture(scope="module")
@@ -20,30 +20,85 @@ def bench():
     return importlib.import_module("bench")
 
 
-def test_override_names_are_benchmarked_registry_queries(bench):
-    """Every BENCH_PLAN_OVERRIDES key must be both a registered query
-    (the override exists to keep the bench number like-for-like with
-    the pre-r6 raw plan while the registry entry became a property
-    gate) and an actual bench query name (otherwise the override is
-    dead weight that would mask a future rename)."""
+def _queries(bench):
+    return [
+        action
+        for entry in bench.TABLE
+        for action in entry.actions.values()
+        if isinstance(action, bench.Query)
+    ]
+
+
+def _raw_plans(bench):
+    return {q.name: q.plan for q in _queries(bench) if q.plan is not None}
+
+
+def test_table_queries_are_registered(bench):
+    """A name missing from the registry would fail its key at run time,
+    and a duplicate key would overwrite another; every raw plan stands
+    in for a registered name."""
     from convert_parquet_to_csv_spark.plans import registry
 
     registry.load_all()
-    for name in bench.BENCH_PLAN_OVERRIDES:
+    unknown = [q.name for q in _queries(bench) if q.name not in registry.QUERIES]
+    assert unknown == []
+    keys = [key for entry in bench.TABLE for key in entry.actions]
+    assert len(keys) == len(set(keys))
+    assert set(_raw_plans(bench).values()) == {
+        bench._topk_lsh_plan,
+        bench._topk_ivf_plan,
+        bench._topk_pq_plan,
+        bench._dsir_plan,
+        bench._winnow_plan,
+    }
+
+
+def _keys(bench):
+    return {key for entry in bench.TABLE for key in entry.actions}
+
+
+def test_override_names_are_benchmarked_registry_queries(bench):
+    """Every raw-plan override must be both a registered query (the
+    override keeps the bench number like-for-like with the raw operator
+    while the registry entry is a property gate) and a key the table
+    times (otherwise the override is dead weight that would mask a
+    future rename)."""
+    from convert_parquet_to_csv_spark.plans import registry
+
+    registry.load_all()
+    keys = _keys(bench)
+    for name in _raw_plans(bench):
         assert name in registry.QUERIES, name
-        assert name in bench.BENCH_QUERY_NAMES, name
+        assert name in keys, name
 
 
 def test_noise_floor_names_are_benchmarked(bench):
-    for name in bench.NOISE_FLOOR_NAMES:
-        assert name in bench.BENCH_QUERY_NAMES, name
+    """The noise floor is the interleaved entry of several registered
+    queries with a spread key; each of its keys is timed under its own
+    registered name."""
+    from convert_parquet_to_csv_spark.plans import registry
+
+    registry.load_all()
+    floors = [
+        entry for entry in bench.TABLE
+        if entry.spread and len(entry.actions) > 1
+        and all(isinstance(a, bench.Query) for a in entry.actions.values())
+    ]
+    assert len(floors) == 1
+    assert len(floors[0].actions) > 5
+    for key, action in floors[0].actions.items():
+        assert key == action.name, key
+        assert key in registry.QUERIES, key
 
 
 def test_dual_methodology_names_are_benchmarked(bench):
-    """A DUAL_METHODOLOGY name not in the bench list would silently
-    drop its `_warm` companion key from the artifact."""
-    for name in bench.DUAL_METHODOLOGY_NAMES:
-        assert name in bench.BENCH_QUERY_NAMES, name
+    """A `<name>_warm` key whose `<name>` is not also timed would be a
+    warm number with no cold one to read it against."""
+    keys = _keys(bench)
+    warm = [key for key in keys if key.endswith("_warm")]
+    assert warm
+    for key in warm:
+        assert key[: -len("_warm")] in keys, key
 
 
 def test_overrides_build_raw_operator_plans(bench, spark, sf_small):
@@ -58,13 +113,75 @@ def test_overrides_build_raw_operator_plans(bench, spark, sf_small):
         "dsir_importance_weights": {"doc_id", "score_micro"},
         "dedup_winnow_fingerprints": {"doc_id", "pos", "fp"},
     }
-    assert set(bench.BENCH_PLAN_OVERRIDES) == set(expected)
-    for name, fn in bench.BENCH_PLAN_OVERRIDES.items():
+    overrides = _raw_plans(bench)
+    assert set(overrides) == set(expected)
+    for name, fn in overrides.items():
         df = fn(spark, sf_small)
         assert set(df.columns) == expected[name], name
         rows = df.count()
         assert rows > 0, name
 
+
+def test_stubbed_run_emits_committed_key_sets(bench):
+    """The whole table, every action stubbed and no Spark session: the
+    full line carries BENCH_LOCAL_r13.json's top-level, `queries` (89)
+    and `headline` (13) keys, and the compact line its fixed keys with
+    the headline block as its `queries`."""
+
+    class _Catalog:
+        @staticmethod
+        def clearCache():
+            pass
+
+    class _Session:
+        catalog = _Catalog()
+
+    def stub(spark):
+        return lambda: sum(range(100))
+
+    table = [
+        entry._replace(actions={key: stub for key in entry.actions})
+        for entry in bench.TABLE
+    ]
+    queries, samples = bench._run_table(_Session(), table)
+    full, compact = bench._records(queries, samples, 10_000_000, 500_000)
+    with open(os.path.join(REPO_ROOT, "BENCH_LOCAL_r13.json")) as f:
+        committed = json.load(f)
+    assert set(full) == set(committed)
+    assert set(full["queries"]) == set(committed["queries"])
+    assert len(full["queries"]) == 89
+    assert set(full["headline"]) == set(committed["headline"])
+    assert len(full["headline"]) == 13
+    assert list(compact) == [
+        "metric", "value", "unit", "sf", "rows_10m", "queries", "headline",
+        "note",
+    ]
+    assert compact["queries"] == compact["headline"] == full["headline"]
+    assert compact["value"] == full["value"] == full["queries"]["convert_10m_rows"]
+
+
+def test_passes_interleave_clear_and_drop_a_failed_key(bench, capsys):
+    """One pass runs every key once, `clear` runs before every run, the
+    untimed passes leave no sample, and a key whose action raises is
+    reported and dropped without stopping the others."""
+    calls = []
+    clears = []
+
+    def flaky():
+        calls.append("b")
+        if calls.count("b") == 2:
+            raise RuntimeError("boom")
+
+    got = bench._passes(
+        {"a": lambda: calls.append("a"), "b": flaky},
+        warmup=1,
+        timed=2,
+        clear=lambda: clears.append(1),
+    )
+    assert calls == ["a", "b", "a", "b", "a"]
+    assert len(clears) == 5
+    assert list(got) == ["a"] and len(got["a"]) == 2
+    assert "b failed: boom" in capsys.readouterr().err
 
 # --------------------------------------------------------------------------
 # bench_compare drift anchor (VERDICT r7 item 1)
@@ -248,19 +365,6 @@ def test_local_sibling_preferred_over_driver_tail(bench_compare, tmp_path):
     # no sibling -> plain driver-record behavior, unchanged
     got2 = bench_compare.load_one(str(tmp_path / "BENCH_r09.json"))
     assert got2["queries"]["q_shared"] == 9.99
-
-
-def test_headline_carries_spread_protocol(bench):
-    """VERDICT r8 item 1a: the headline convert_10m_rows key must
-    ship with a `_spread_pct` dispersion key (source-pinned — the
-    artifact is only produced by a full bench run)."""
-    import inspect
-
-    src = inspect.getsource(bench.main)
-    assert '"convert_10m_rows_spread_pct"' in src
-    assert "rr_samples" in src and "natural_samples" in src
-    # and the full payload goes to the committed local record
-    assert "_write_local_record(full_payload)" in src
 
 
 def test_local_record_driver_runs_cannot_clobber_committed_name(

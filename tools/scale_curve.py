@@ -10,17 +10,17 @@ amortizes away); a hidden superlinearity (quadratic candidate growth,
 a driver-side bottleneck, an unpartitioned window) shows up as a
 rising curve long before it would OOM a real cluster.
 
-Corpus construction matches bench.py `_build_docs_500k`: every token
-gets a per-copy suffix so copies are NOT near-duplicates of each
-other — dup-cluster structure (and therefore candidate volume) stays
-LINEAR in the replication factor. An unmangled replication would turn
-every doc into an N-way dup cluster and bench the quadratic pathology
-instead of the operator.
+The corpora are built by bench.py's `bench.replicate`, which mangles
+every token per copy, so copies are not near-duplicates of each other and
+duplicate-cluster structure (and therefore candidate volume) stays
+linear in the replication factor.
 
-Protocol: cache-cleared before every timed run, min of 2 runs per
-(kernel, size), kernels interleaved within a size so box noise lands
-evenly (the bench.py calibration lesson). Output: one JSON line +
-a Markdown table appended to stdout. Usage:
+Protocol: bench.py's `noop_runs`, with no untimed run and 2 timed runs
+per (kernel, size), kernel after kernel, the cache cleared before every
+run; a kernel reports its min. The session is `get_spark()`'s
+(`local[$SPARK_GRAFT_CPUS]`, else every core) with one shuffle
+partition per core. Output: a Markdown table, then one JSON line, on
+stdout. Usage:
 
     python tools/scale_curve.py [sizes ...]        # default 500000 1000000 2000000
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/scale_curve.py
@@ -30,12 +30,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import SF_DIR, noop_runs, replicate, sf_keyed_path
 from convert_parquet_to_csv_spark.session import get_spark
 from convert_parquet_to_csv_spark.sources.io_ops import read_parquet
 from convert_parquet_to_csv_spark.operators.dedup import (
@@ -82,62 +81,19 @@ from convert_parquet_to_csv_spark.operators.curation import (
 
 from pyspark.sql import functions as F
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-REPEAT = int(os.environ.get("SPARK_GRAFT_CURVE_REPEAT", "2"))
-
-
-def _corpus_path(n: int) -> str:
-    import hashlib
-
-    key = hashlib.md5(f"{SF_DIR}:{n}".encode()).hexdigest()[:8]
-    return f"/tmp/cptc_curve_docs_{key}.parquet"
-
-
-def _build_corpus(spark, n: int) -> str:
-    """Replicate SF_DIR documents to >= n rows with per-copy token
-    mangling (see module docstring); cached across runs by path key."""
-    path = _corpus_path(n)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    shutil.rmtree(path, ignore_errors=True)
-    base = read_parquet(spark, os.path.join(SF_DIR, "documents.parquet"))
-    base_n = base.count()
-    copies = max(1, -(-n // base_n))  # ceil
-    rep = spark.range(copies).select(F.col("id").alias("_copy"))
-    big = base.crossJoin(F.broadcast(rep)).select(
-        (F.col("doc_id") * copies + F.col("_copy")).alias("doc_id"),
-        F.regexp_replace(
-            F.col("text"),
-            F.lit(r"(\S+)"),
-            F.concat(F.lit("$1x"), F.col("_copy").cast("string")),
-        ).alias("text"),
-    )
-    big.repartition(int(CPUS)).write.mode("overwrite").parquet(path)
-    return path
-
-
-def _timed(spark, fn) -> float:
-    best = float("inf")
-    for _ in range(REPEAT):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        fn().write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    spark.catalog.clearCache()
-    return round(best, 3)
+RUNS = 2
 
 
 def main() -> None:
     sizes = [int(a) for a in sys.argv[1:]] or [500_000, 1_000_000, 2_000_000]
-    spark = get_spark(
-        app_name="cptc-scale-curve",
-        master=f"local[{CPUS}]",
-        extra_conf={"spark.sql.shuffle.partitions": CPUS},
+    spark = get_spark(app_name="cptc-scale-curve")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
     )
     results: dict[str, dict[int, float]] = {}
     for n in sizes:
-        path = _build_corpus(spark, n)
+        path = sf_keyed_path(f"curve_docs_{n}")
+        replicate(spark, "documents", n, path)
         docs = read_parquet(spark, path)
         # A fixed small benchmark side: the decontamination screen's
         # cost must scale with the CORPUS, not the benchmark.
@@ -461,9 +417,11 @@ def main() -> None:
                 raise SystemExit(f"unknown kernels: {sorted(unknown)}")
             kernels = {k: v for k, v in kernels.items() if k in wanted}
         for name, fn in kernels.items():
-            sec = _timed(spark, fn)
-            results.setdefault(name, {})[n] = sec
-            print(f"  {name} @ {n:>9,} docs: {sec:8.3f} s", file=sys.stderr)
+            # a failed kernel is reported by noop_runs and has no samples
+            for runs in noop_runs(spark, {name: fn}, 0, RUNS).values():
+                sec = round(min(runs), 3)
+                results.setdefault(name, {})[n] = sec
+                print(f"  {name} @ {n:>9,} docs: {sec:8.3f} s", file=sys.stderr)
 
     base = sizes[0]
     lines = [
@@ -475,6 +433,8 @@ def main() -> None:
         "|---|" + "---|" * (len(sizes) + 2),
     ]
     for name, by_n in results.items():
+        if len(by_n) < len(sizes):
+            continue  # failed at some size
         largest = sizes[-1]
         norm = by_n[largest] * base / largest
         # superlinearity factor: measured_time(largest) relative to
@@ -494,7 +454,7 @@ def main() -> None:
                 "metric": "scale_curve_sec",
                 "sf_dir": SF_DIR,
                 "sizes": sizes,
-                "repeat": REPEAT,
+                "repeat": RUNS,
                 "results": {
                     k: {str(n): v for n, v in by_n.items()}
                     for k, by_n in results.items()
